@@ -30,12 +30,11 @@ import graft.partition.{HashIndexedPartition, IndexedPartition, LazyIndexedParti
  *    other side, never the indexed base.
  *
  * Scale notes (designed for many-executor clusters, tested locally):
- * point-read key sets ship via a broadcast (one copy per executor,
- * destroyed after the job) rather than in every task closure — the
- * reference ships all keys in each closure (reference
- * IndexedRDD.scala:82 TODO); partition count is inherited from the
- * input, so a 100 TB build keeps whatever parallelism the source scan
- * chose.
+ * point-read key sets travel per task, each owning partition's task
+ * carrying only its own slice ([[KeyedProbeRDD]]) — the reference
+ * ships all keys in each closure (reference IndexedRDD.scala:82 TODO);
+ * partition count is inherited from the input, so a 100 TB build keeps
+ * whatever parallelism the source scan chose.
  */
 class IndexedRDD[K: ClassTag, V: ClassTag] private[graft] (
     private[graft] val partitionsRDD: RDD[IndexedPartition[K, V]])
@@ -187,28 +186,16 @@ class IndexedRDD[K: ClassTag, V: ClassTag] private[graft] (
    * Batch point lookup. Groups keys by owning partition on the driver
    * and runs a job over ONLY those partitions (partition pruning for
    * cached data — Catalyst cannot do this on an InMemoryRelation).
-   * Keys travel via broadcast: one copy per executor, not per task.
+   * Each task carries its own partition's key slice; no broadcast.
    */
   def multiget(ks: Array[K]): Map[K, V] = {
     if (ks.isEmpty) return Map.empty
     val part = partitioner.get
-    val ksByPartition = ks.groupBy(k => part.getPartition(k))
-    val pids = ksByPartition.keys.toArray.sorted
-    val bc = context.broadcast(ksByPartition)
-    try {
-      val results = context.runJob(
-        partitionsRDD,
-        (ctx: TaskContext, iter: Iterator[IndexedPartition[K, V]]) =>
-          if (iter.hasNext) {
-            bc.value.get(ctx.partitionId())
-              .map(keys => iter.next().multiget(keys).toArray)
-              .getOrElse(Array.empty[(K, V)])
-          } else Array.empty[(K, V)],
-        pids.toIndexedSeq)
-      results.iterator.flatten.toMap
-    } finally {
-      bc.destroy()
-    }
+    val slices = ks.groupBy(k => part.getPartition(k)).toSeq.sortBy(_._1)
+    val probe = new KeyedProbeRDD[IndexedPartition[K, V], Array[K], (K, V)](
+      partitionsRDD, slices,
+      (keys, p) => p().map(_.multiget(keys)).getOrElse(Iterator.empty))
+    context.runJob(probe, (it: Iterator[(K, V)]) => it.toArray).iterator.flatten.toMap
   }
 
   // ---------------------------------------------------------------------
@@ -394,78 +381,41 @@ class IndexedRDD[K: ClassTag, V: ClassTag] private[graft] (
   }
 
   /**
-   * Broadcast-probe lookup join for DRIVER-RESIDENT batches — the
+   * Keyed-probe lookup join for DRIVER-RESIDENT batches — the
    * small-side twin of [[lookupJoinStream]]. The probes group by
-   * owning partition on the driver, ship ONCE via broadcast (one copy
-   * per executor), and a NARROW single-stage job probes the owning
-   * partitions' tries: no shuffle stage at all, and a task whose
-   * partition owns no probe is a no-op that never deserializes its
-   * partition (cold/disk partitions the batch skips stay cold). The
-   * enrich-a-small-delta shape at cluster scale: with today's keys
-   * clustered in recent partitions, cost is O(partitions) no-op task
-   * launches + O(probes) O(depth) descents — Catalyst's broadcast
-   * hash join scans the ENTIRE corpus per query even with the delta
-   * broadcast. `nullKeyed` rows (SQL null join keys) never probe;
-   * with `missing` set they are emitted as guaranteed misses from
-   * their housing partition.
+   * owning partition on the driver, each partition's task carries only
+   * its own slice ([[KeyedProbeRDD]]), and a NARROW single-stage job
+   * probes the owning partitions' tries: no shuffle stage, no
+   * broadcast, and a task whose partition owns no probe is a no-op
+   * that never deserializes its partition (cold/disk partitions the
+   * batch skips stay cold). The enrich-a-small-delta shape at cluster
+   * scale: with today's keys clustered in recent partitions, cost is
+   * O(partitions) no-op task launches + O(probes) O(depth) descents —
+   * Catalyst's broadcast hash join scans the ENTIRE corpus per query
+   * even with the delta broadcast. `nullKeyed` rows (SQL null join
+   * keys) never probe; with `missing` set they are emitted as
+   * guaranteed misses from partition 0.
+   *
+   * Full fan-out, NOT pruned: partition count and numbering are
+   * preserved, so every output row still sits in its key's owning
+   * partition under THIS index's partitioner and key-clustered
+   * partitioning claims stay valid upstairs.
    */
   def lookupJoinLocal[U: ClassTag, R: ClassTag](
       probes: Seq[(K, U)], nullKeyed: Seq[U] = Nil)(
       f: (K, V, U) => R, missing: Option[U => R] = None): RDD[R] = {
-    val part = partitioner.get
-    val grouped = probes.groupBy { case (k, _) => part.getPartition(k) }
-      .map { case (pid, ps) => (pid, ps.toArray) }
-    val nullRows =
-      if (missing.isDefined) nullKeyed.toArray else Array.empty[U]
-    // null-keyed misses emit from partition 0 — the SAME placement the
-    // shuffled path uses (lookupJoinStreamNullable routes nulls to
-    // partition 0), so both probe paths satisfy the documented
-    // null-group layout identically
-    val nullHome = 0
-    val bc = context.broadcast((grouped, nullRows))
-    // full fan-out, NOT PartitionPruningRDD: partition count and
-    // numbering are preserved, so every output row still sits in its
-    // key's owning partition under THIS index's partitioner and
-    // key-clustered partitioning claims stay valid upstairs. Tasks on
-    // partitions owning no probe return empty WITHOUT touching their
-    // iterator — the one-object-per-partition block never
-    // deserializes, so a cold (disk) partition the batch skips stays
-    // skipped; only the task launch is paid.
-    partitionsRDD.mapPartitionsWithIndex { (pid, pit) =>
-      val (byPid, nulls) = bc.value
-      val mine = byPid.getOrElse(pid, null)
-      val nullMisses: Iterator[R] =
-        if (pid == nullHome && nulls.nonEmpty)
-          nulls.iterator.map(missing.get)
-        else Iterator.empty
-      if (mine == null) nullMisses
-      else {
-        val hits: Iterator[R] =
-          if (!pit.hasNext) missing match {
-            case Some(m) => mine.iterator.map { case (_, u) => m(u) }
-            case None => Iterator.empty
-          }
-          else {
-            val probe = memoizedProbe(pit.next())
-            mine.iterator.flatMap { case (k, u) =>
-              probe(k) match {
-                case Some(v) => Iterator.single(f(k, v, u))
-                case None => missing match {
-                  case Some(m) => Iterator.single(m(u))
-                  case None => Iterator.empty
-                }
-              }
-            }
-          }
-        hits ++ nullMisses
-      }
-    }
+    val slices = localSlices(probes, nullKeyed, missing.isDefined)
+    val none = (Array.empty[(K, U)], Array.empty[U])
+    new KeyedProbeRDD[IndexedPartition[K, V], (Array[(K, U)], Array[U]), R](
+      partitionsRDD,
+      (0 until partitionsRDD.getNumPartitions).map(pid => (pid, slices.getOrElse(pid, none))),
+      (slice, part) => probeSlice(slice, part, f, missing))
   }
 
   /**
    * Driver-COLLECTED twin of [[lookupJoinLocal]] for root-level
-   * consumers (a `.collect()` with no parent operator): ONE `runJob`
-   * on ONLY the probe-owning partitions — the no-op task launches on
+   * consumers (a `.collect()` with no parent operator): ONE job on
+   * ONLY the probe-owning partitions — the no-op task launches on
    * every other partition, the price [[lookupJoinLocal]] pays to keep
    * its partition numbering claimable, disappear entirely. At 100 TB
    * scale that is the difference between O(probes) task launches and
@@ -475,47 +425,56 @@ class IndexedRDD[K: ClassTag, V: ClassTag] private[graft] (
   def lookupJoinLocalCollect[U: ClassTag, R: ClassTag](
       probes: Seq[(K, U)], nullKeyed: Seq[U] = Nil)(
       f: (K, V, U) => R, missing: Option[U => R] = None): Array[R] = {
+    val slices = localSlices(probes, nullKeyed, missing.isDefined)
+    if (slices.isEmpty) return Array.empty[R]
+    new KeyedProbeRDD[IndexedPartition[K, V], (Array[(K, U)], Array[U]), R](
+      partitionsRDD, slices.toSeq.sortBy(_._1),
+      (slice, part) => probeSlice(slice, part, f, missing)).collect()
+  }
+
+  /** Driver-side routing of a [[lookupJoinLocal]] batch: each owning
+    * partition's probes, plus the null-keyed rows (kept only when
+    * `keepNulls`), which ride in partition 0's slice — the SAME
+    * placement the shuffled path uses (lookupJoinStreamNullable routes
+    * nulls to partition 0), so both probe paths satisfy the documented
+    * null-group layout identically. */
+  private def localSlices[U: ClassTag](probes: Seq[(K, U)], nullKeyed: Seq[U],
+      keepNulls: Boolean): Map[Int, (Array[(K, U)], Array[U])] = {
     val part = partitioner.get
-    val grouped = probes.groupBy { case (k, _) => part.getPartition(k) }
-      .map { case (pid, ps) => (pid, ps.toArray) }
-    val nullRows =
-      if (missing.isDefined) nullKeyed.toArray else Array.empty[U]
-    val nullHome = 0
-    val kept = (grouped.keySet ++
-      (if (nullRows.nonEmpty) Set(nullHome) else Set.empty[Int])).toSeq.sorted
-    if (kept.isEmpty) return Array.empty[R]
-    val bc = context.broadcast((grouped, nullRows))
-    val perPart = context.runJob(partitionsRDD,
-      (tc: org.apache.spark.TaskContext,
-          pit: Iterator[IndexedPartition[K, V]]) => {
-        val pid = tc.partitionId()
-        val (byPid, nulls) = bc.value
-        val mine = byPid.getOrElse(pid, null)
-        val nullMisses: Iterator[R] =
-          if (pid == nullHome && nulls.nonEmpty)
-            nulls.iterator.map(missing.get)
-          else Iterator.empty
-        val hits: Iterator[R] =
-          if (mine == null) Iterator.empty
-          else if (!pit.hasNext) missing match {
-            case Some(m) => mine.iterator.map { case (_, u) => m(u) }
-            case None => Iterator.empty
-          }
-          else {
-            val probe = memoizedProbe(pit.next())
-            mine.iterator.flatMap { case (k, u) =>
-              probe(k) match {
-                case Some(v) => Iterator.single(f(k, v, u))
-                case None => missing match {
-                  case Some(m) => Iterator.single(m(u))
-                  case None => Iterator.empty
-                }
+    val byPid = probes.groupBy { case (k, _) => part.getPartition(k) }
+      .map { case (pid, ps) => (pid, (ps.toArray, Array.empty[U])) }
+    if (!keepNulls || nullKeyed.isEmpty) byPid
+    else byPid.updated(0,
+      (byPid.get(0).map(_._1).getOrElse(Array.empty[(K, U)]), nullKeyed.toArray))
+  }
+
+  /** One task of a [[lookupJoinLocal]] job: probe this partition's
+    * slice (fetching the partition only if the slice holds a probe),
+    * then emit the null-keyed misses it carries. */
+  private def probeSlice[U, R](slice: (Array[(K, U)], Array[U]),
+      part: () => Option[IndexedPartition[K, V]], f: (K, V, U) => R,
+      missing: Option[U => R]): Iterator[R] = {
+    val (mine, nulls) = slice
+    val hits: Iterator[R] =
+      if (mine.isEmpty) Iterator.empty
+      else part() match {
+        case None => missing match {
+          case Some(m) => mine.iterator.map { case (_, u) => m(u) }
+          case None => Iterator.empty
+        }
+        case Some(p) =>
+          val probe = memoizedProbe(p)
+          mine.iterator.flatMap { case (k, u) =>
+            probe(k) match {
+              case Some(v) => Iterator.single(f(k, v, u))
+              case None => missing match {
+                case Some(m) => Iterator.single(m(u))
+                case None => Iterator.empty
               }
             }
           }
-        (hits ++ nullMisses).toArray
-      }, kept)
-    perPart.flatten.toArray
+      }
+    if (nulls.isEmpty) hits else hits ++ nulls.iterator.map(missing.get)
   }
 
   /**
@@ -575,15 +534,16 @@ class IndexedRDD[K: ClassTag, V: ClassTag] private[graft] (
   }
 
   /**
-   * Broadcast-probe twin of [[lookupRangeJoinStream]] for
-   * DRIVER-RESIDENT interval batches (the small-side band join): each
-   * interval routes to its overlapping partitions ON THE DRIVER (the
-   * RangePartitioner's bounds are driver-resident), ships once via
-   * broadcast, and a narrow single-stage job runs one pruned trie
-   * range scan per delivery — no shuffle stage, and a task whose
-   * partition no interval overlaps never deserializes it. Same
-   * partition count/numbering as the index, so key-clustered
-   * partitioning claims stay valid upstairs.
+   * Keyed-probe twin of [[lookupRangeJoinStream]] for DRIVER-RESIDENT
+   * interval batches (the small-side band join): each interval routes
+   * to its overlapping partitions ON THE DRIVER (the RangePartitioner's
+   * bounds are driver-resident), each partition's task carries only the
+   * intervals routed to it ([[KeyedProbeRDD]]), and a narrow
+   * single-stage job runs one pruned trie range scan per delivery — no
+   * shuffle stage, no broadcast, and a task whose partition no interval
+   * overlaps never deserializes it. Same partition count/numbering as
+   * the index, so key-clustered partitioning claims stay valid
+   * upstairs.
    */
   def lookupRangeJoinLocal[U: ClassTag, R: ClassTag](
       probes: Seq[((K, Option[K]), U)])(f: (K, V, U) => R)(
@@ -608,14 +568,14 @@ class IndexedRDD[K: ClassTag, V: ClassTag] private[graft] (
     // task no-ops) so the physical partition count/numbering always
     // matches the index's declared partitioning — a 0-partition
     // emptyRDD would contradict upstream partitioning claims.
-    val bc = context.broadcast(byPid)
-    partitionsRDD.mapPartitionsWithIndex { (pid, pit) =>
-      bc.value.get(pid) match {
-        case None => Iterator.empty // never touches (or deserializes) pit
-        case Some(mine) =>
-          if (!pit.hasNext) Iterator.empty
-          else {
-            val p = pit.next()
+    val none = Array.empty[((K, Option[K]), U)]
+    new KeyedProbeRDD[IndexedPartition[K, V], Array[((K, Option[K]), U)], R](
+      partitionsRDD, (0 until n).map(pid => (pid, byPid.getOrElse(pid, none))),
+      (mine, part) =>
+        if (mine.isEmpty) Iterator.empty // never touches (or deserializes) the partition
+        else part() match {
+          case None => Iterator.empty
+          case Some(p) =>
             val ordK = Ordering.fromLessThan[K]((x, y) =>
               java.util.Arrays.compareUnsigned(ser.toBytes(x), ser.toBytes(y)) < 0)
             mine.iterator.flatMap { case ((lo, hi), u) =>
@@ -630,9 +590,7 @@ class IndexedRDD[K: ClassTag, V: ClassTag] private[graft] (
               }
               hits.map { case (k, v) => f(k, v, u) }
             }
-          }
-      }
-    }
+        })
   }
 
   /**

@@ -152,19 +152,13 @@ class GraftSqlExtension extends (SparkSessionExtensions => Unit) {
     // `TextFunctions.qualityScore(col("text"))`
     GraftSqlExtension.sqlFunctions.foreach(e.injectFunction)
     // the indexed planner strategies ride along: an extension-configured
-    // session plans zero-shuffle zip joins and no-scan aggregates over
-    // handles without per-session `IndexedJoin.enable` calls — in
+    // session plans zero-shuffle zip joins, no-scan aggregates,
+    // index-ordered top-k, per-group top-n and driver-served point
+    // selects over handles without per-session `enable` calls — in
     // particular, graft_changes' three diff joins zip over the
-    // co-partitioned COW snapshots out of the box (both enable() paths
+    // co-partitioned COW snapshots out of the box (the enable() paths
     // stay idempotent with this)
-    e.injectPlannerStrategy(_ => IndexedJoin.IndexedJoinStrategy)
-    e.injectPlannerStrategy(_ => IndexedAgg.IndexedCountStrategy)
-    // ...and the remaining two, completing the SQL-first surface: an
-    // extension-configured session serves index-ordered ORDER BY key
-    // LIMIT n (incl. keyset pagination) and per-group top-n without
-    // per-session enable() calls
-    e.injectPlannerStrategy(_ => IndexedTopK.IndexedTopKStrategy)
-    e.injectPlannerStrategy(_ => IndexedWindow.IndexedGroupTopNStrategy)
+    GraftStrategies.all.foreach(s => e.injectPlannerStrategy(_ => s))
   }
 }
 

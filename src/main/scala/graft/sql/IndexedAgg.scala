@@ -33,11 +33,8 @@ import org.apache.spark.sql.sources
 object IndexedAgg {
 
   /** Register the strategy on a session (idempotent). */
-  def enable(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(IndexedCountStrategy))
-      spark.experimental.extraStrategies = cur :+ IndexedCountStrategy
-  }
+  def enable(spark: SparkSession): Unit =
+    GraftStrategies.install(spark, Seq(IndexedCountStrategy))
 
   sealed trait Stat extends Serializable
   case object CountStat extends Stat

@@ -676,7 +676,7 @@ object IndexedFrame {
     * already fetched the row, so no second probe job ever runs). */
   private def rowDF(row: Option[InternalRow], schema: StructType)(
       implicit spark: SparkSession): DataFrame = {
-    val rdd = spark.sparkContext.parallelize(row.toSeq, 1)
+    val rdd = localRows(spark.sparkContext, row.toSeq)
     org.apache.spark.sql.graftbridge.ExpressionBridge
       .internalDF(spark, rdd, schema)
   }
@@ -1081,6 +1081,94 @@ object IndexedFrame {
     @transient private[sql] var SecondaryRouteBudget = 100000
 
     @transient @volatile private[sql] var lastProbeMemoHit: Boolean = false
+    /** How the most recent scan was served, for observability and
+      * tests: "point" / "range" / "secondary_point" / "full" / ...; for
+      * point and secondary scans `lastPointLookupKeys` is the probed
+      * key count (-1 otherwise). */
+    @transient @volatile var lastScanKind: String = ""
+    @transient @volatile var lastPointLookupKeys: Int = -1
+    private[sql] def markLane(kind: String, keys: Int): Unit = {
+      lastScanKind = kind
+      lastPointLookupKeys = keys
+    }
+
+    /** The secondary-index predicates of one pushed filter set:
+      * equality/IN per secondary column (NULLs match nothing and drop
+      * out) and, per ORDERED secondary column, the met interval of its
+      * range conjuncts (the same boundsOn/meet algebra as key lanes). */
+    private def secondaryPreds(filters: Array[Filter])
+        : (Seq[(String, Seq[Any])], Seq[(String, Iv[Any])]) = {
+      val eqPreds = filters.toSeq.flatMap {
+        case EqualTo(c, v) if hasSecondary(c) =>
+          Some((c, if (v == null) Nil else Seq(v)))
+        case In(c, vs) if hasSecondary(c) =>
+          Some((c, vs.toSeq.filter(_ != null)))
+        case _ => None
+      }
+      def rangeColOf(f: Filter): Option[String] = f match {
+        case GreaterThan(c, _) => Some(c)
+        case GreaterThanOrEqual(c, _) => Some(c)
+        case LessThan(c, _) => Some(c)
+        case LessThanOrEqual(c, _) => Some(c)
+        case StringStartsWith(c, _) => Some(c)
+        case _ => None
+      }
+      val rangePreds = filters.toSeq
+        .flatMap { f =>
+          rangeColOf(f).filter(hasOrderedSecondary).flatMap(c =>
+            boundsOn(c, secondaryCodec(c), eqAsPrefix = false, f)
+              .map(iv => (c, iv)))
+        }
+        .groupBy(_._1).view
+        .mapValues(ivs => meet(ivs.map(_._2), secondaryCodec(ivs.head._1).ord))
+        .toSeq
+      (eqPreds, rangePreds)
+    }
+
+    private def secondaryKind(usedRange: Boolean): String =
+      if (usedRange) "secondary_range" else "secondary_point"
+
+    /** Job-free: do `filters` carry a secondary predicate? Marks the
+      * secondary lane when they do (its key count is known only once
+      * the probe has run). */
+    private[sql] def markSecondaryLane(filters: Array[Filter]): Boolean = {
+      val (eqPreds, rangePreds) = secondaryPreds(filters)
+      val any = eqPreds.nonEmpty || rangePreds.nonEmpty
+      if (any) markLane(secondaryKind(rangePreds.nonEmpty), -1)
+      any
+    }
+
+    /** The SECONDARY lane, served on the driver: a repeated predicate
+      * answers from the probe memo with no job; otherwise the inverted
+      * index yields the primary key set (AND semantics: intersected
+      * across predicates) and one pruned multiget reads the rows. None
+      * when there is no secondary predicate or a probe is over budget —
+      * the scan lanes serve then. Never claimed in unhandledFilters:
+      * Spark re-applies the predicates above the (small) probe result,
+      * which also keeps the budget fallback sound. */
+    private[sql] def secondaryRows(filters: Array[Filter]): Option[Array[InternalRow]] = {
+      val (eqPreds, rangePreds) = secondaryPreds(filters)
+      if (eqPreds.isEmpty && rangePreds.isEmpty) return None
+      val sig = secondaryProbeSig(eqPreds, rangePreds)
+      probeMemoGet(sig) match {
+        case Some((keys, rows, usedRange)) =>
+          markLane(secondaryKind(usedRange), keys.length)
+          lastProbeMemoHit = true
+          Some(rows)
+        case None =>
+          val sets = eqPreds.map { case (c, vs) => secondaryProbe(c, vs) } ++
+            rangePreds.map { case (c, iv) => secondaryRangeProbe(c, iv) }
+          if (sets.exists(_.isEmpty)) None
+          else {
+            val keys = sets.map(_.get.toSet).reduce(_ intersect _).toArray(secTag)
+            markLane(secondaryKind(rangePreds.nonEmpty), keys.length)
+            lastProbeMemoHit = false
+            val rows = idx.multiget(keys).values.toArray
+            probeMemoPut(sig, keys, rows, rangePreds.nonEmpty)
+            Some(rows)
+          }
+      }
+    }
 
     /** Bounded driver-side memo of secondary-probe results: canonical
       * predicate signature → (primary keys, point-read rows, range?).
@@ -2528,8 +2616,6 @@ object IndexedFrame {
     override private[sql] def filteredAggFor(secCol: String, aggCol: String)
         : Option[Any => Option[GroupAgg]] =
       secondaryFilteredAggFor(secCol, aggCol)
-    @transient @volatile var lastScanKind: String = ""
-    @transient @volatile var lastPointLookupKeys: Int = -1
 
     private[sql] def keyIndex: Int = schema.fieldIndex(keyCol)
 
@@ -3761,8 +3847,6 @@ object IndexedFrame {
       private[sql] val serB: KeySerializer[B])
       extends Serializable with StatsCapable with JoinableHandle
       with ZoneMapped with TopKServable with SecondaryCapable[(A, B)] {
-    @transient @volatile var lastScanKind: String = ""
-    @transient @volatile var lastPointLookupKeys: Int = -1
     override protected def secTag: ClassTag[(A, B)] = implicitly
     override protected def secondaryForbiddenCols: Set[String] =
       Set(keyColA, keyColB)
@@ -5151,6 +5235,65 @@ object IndexedFrame {
       schema.map(_.dataType.defaultSize).sum.toLong + 8L))
     catch { case _: ArithmeticException => Long.MaxValue }
 
+  /** Rows already on the driver as a one-slice RDD, for consumers that
+    * need an RDD: a parent operator of [[IndexedPoint.IndexedPointExec]]
+    * (joins, unions), or a point select planned by `buildScan` in a
+    * session without the point strategy. A root-level collect of a
+    * driver lane never comes here and runs no job over the rows. */
+  private[sql] def localRows(sc: org.apache.spark.SparkContext,
+      rows: Seq[InternalRow]): RDD[InternalRow] = sc.parallelize(rows, 1)
+
+  /** A range lane's trie scan plus the rows of its exact corner probes
+    * (each corner is an interval's own inclusive endpoint, so corner
+    * rows never duplicate scanned rows). */
+  private[sql] def withCorners(body: RDD[InternalRow],
+      corners: Iterable[InternalRow]): RDD[InternalRow] =
+    if (corners.isEmpty) body
+    else body.union(localRows(body.sparkContext, corners.toSeq))
+
+  /**
+   * The scan contract of the three handle relations. A pushed filter
+   * set routes to one lane; the DRIVER lanes — primary point/IN probes,
+   * secondary point and range probes, and probe-memo hits of either —
+   * end with their whole result on the driver, so
+   * [[IndexedPoint.IndexedPointStrategy]] serves them without a job
+   * over the rows, and a memo hit with no job at all. `buildScan`
+   * (the plain DataSource path) serves every lane as an RDD.
+   */
+  private[sql] trait DriverLanes extends BaseRelation with PrunedFilteredScan {
+
+    /** Job-free, at planning time: do `filters` route to a driver lane?
+      * Records the lane in the handle's routing fields when they do. */
+    private[sql] def markDriverLane(filters: Array[Filter]): Boolean
+
+    /** Runs the driver lane `filters` route to: full-schema rows, a
+      * superset of the matches whenever a filter is not claimed in
+      * `unhandledFilters`. None when `filters` pick a scan lane or a
+      * secondary probe is over its budget: [[scanRows]] serves then. */
+    private[sql] def driverRows(filters: Array[Filter]): Option[Array[InternalRow]]
+
+    /** The scan lanes (ranges, zone maps, projections, full scans), for
+      * filter sets [[driverRows]] does not serve. */
+    private[sql] def scanRows(filters: Array[Filter]): RDD[InternalRow]
+
+    override def buildScan(requiredColumns: Array[String],
+        filters: Array[Filter]): RDD[Row] = {
+      val rows = driverRows(filters) match {
+        case Some(hit) => localRows(sqlContext.sparkContext, hit.toIndexedSeq)
+        case None => scanRows(filters)
+      }
+      // prune columns with one reused per-partition projection; rows
+      // are consumed streaming by the scan node (which re-projects), so
+      // no per-row copy is needed
+      val fields = requiredColumns.map(schema.fieldIndex).map(i =>
+        BoundReference(i, schema.fields(i).dataType, schema.fields(i).nullable))
+      rows.mapPartitions { it =>
+        val proj = UnsafeProjection.create(fields.toIndexedSeq)
+        it.map(r => proj(r))
+      }.asInstanceOf[RDD[Row]]
+    }
+  }
+
   /** Driver-side probe budgets for the composite relation: above
     * [[PointKeyBudget]] cross-product keys the point lane bails (two
     * 10k-element IN lists would otherwise ship 10^8 probe keys to the
@@ -5164,7 +5307,7 @@ object IndexedFrame {
   private[sql] class CompositeRelation[A, B](
       private[sql] val h: CompositeHandle[A, B])(
       @transient override val sqlContext: SQLContext)
-      extends BaseRelation with PrunedFilteredScan {
+      extends BaseRelation with DriverLanes {
 
     override def schema: StructType = h.schema
     override def needConversion: Boolean = false
@@ -5269,34 +5412,45 @@ object IndexedFrame {
       }
 
     /** One multiRange pass over the live intervals + one multiget for
-      * corner keys (each corner is an interval's own inclusive
-      * endpoint, so corner rows never duplicate interval rows). */
+      * corner keys. */
     private def serve(ivs: Seq[((A, B), (A, B))],
         corners: Seq[(A, B)]): RDD[InternalRow] = {
       val live = ivs.filter { case (f, t) => tupleOrd.lt(f, t) }
       val body: RDD[InternalRow] =
         if (live.isEmpty) sqlContext.sparkContext.emptyRDD[InternalRow]
         else h.idx.multiRange(live).map(_._2)
-      if (corners.isEmpty) body
-      else {
-        val hit = h.idx.multiget(corners.toArray).values.toSeq
-        if (hit.nonEmpty) body.union(sqlContext.sparkContext.parallelize(hit, 1))
-        else body
+      withCorners(body, h.idx.multiget(corners.toArray).values)
+    }
+
+    override private[sql] def markDriverLane(filters: Array[Filter]): Boolean =
+      chooseLane(filters) match {
+        case PointLane(as, bs) => h.markLane("point", as.size * bs.size); true
+        // no KEY lane applies: secondary-indexed VALUE columns route
+        // equality/IN (and ranges on ordered secondaries) through point
+        // probes, exactly like the single-key relation
+        case FullLane => h.markSecondaryLane(filters)
+        case _ => false
+      }
+
+    override private[sql] def driverRows(
+        filters: Array[Filter]): Option[Array[InternalRow]] = {
+      h.lastProbeMemoHit = false
+      chooseLane(filters) match {
+        case PointLane(as, bs) =>
+          val keys = (for (a <- as; b <- bs) yield (a, b)).toArray
+          h.markLane("point", keys.length)
+          Some(h.idx.multiget(keys).values.toArray)
+        case FullLane => h.secondaryRows(filters)
+        case _ => None
       }
     }
 
-    override def buildScan(requiredColumns: Array[String],
-        filters: Array[Filter]): RDD[Row] = {
-      val rows: RDD[InternalRow] = chooseLane(filters) match {
-        case PointLane(as, bs) =>
-          val keys = (for (a <- as; b <- bs) yield (a, b)).toArray
-          h.lastScanKind = "point"
-          h.lastPointLookupKeys = keys.length
-          val hit = h.idx.multiget(keys).values.toSeq
-          sqlContext.sparkContext.parallelize(hit, 1)
+    override private[sql] def scanRows(filters: Array[Filter]): RDD[InternalRow] =
+      chooseLane(filters) match {
+        case _: PointLane =>
+          throw new IllegalStateException("point lanes are served by driverRows")
         case MixedLane(as, bIv) =>
-          h.lastScanKind = "range"
-          h.lastPointLookupKeys = -1
+          h.markLane("range", -1)
           if (bIv.empty || as.isEmpty) {
             sqlContext.sparkContext.emptyRDD[InternalRow]
           } else {
@@ -5316,8 +5470,7 @@ object IndexedFrame {
             serve(parts.flatMap(_._1), parts.flatMap(_._2))
           }
         case LeadLane(iv) =>
-          h.lastScanKind = "range"
-          h.lastPointLookupKeys = -1
+          h.markLane("range", -1)
           if (iv.empty) {
             sqlContext.sparkContext.emptyRDD[InternalRow]
           } else {
@@ -5332,99 +5485,28 @@ object IndexedFrame {
           }
         case FullLane =>
           h.lastPointLookupKeys = -1
-          // no KEY lane applies: secondary-indexed VALUE columns route
-          // equality/IN (and ranges on ordered secondaries) through
-          // point probes, exactly like the single-key relation — never
-          // claimed in unhandledFilters, so Spark re-applies the
-          // predicates above and the budget fallback stays sound
-          val eqPreds = filters.flatMap {
-            case EqualTo(c, v) if h.hasSecondary(c) =>
-              Some((c, if (v == null) Nil else Seq(v)))
-            case In(c, vs) if h.hasSecondary(c) =>
-              Some((c, vs.toSeq.filter(_ != null)))
-            case _ => None
-          }
-          val rangePreds = filters
-            .flatMap { f =>
-              (f match {
-                case GreaterThan(c, _) => Some(c)
-                case GreaterThanOrEqual(c, _) => Some(c)
-                case LessThan(c, _) => Some(c)
-                case LessThanOrEqual(c, _) => Some(c)
-                case _ => None
-              }).filter(h.hasOrderedSecondary).flatMap(c =>
-                boundsOn(c, h.secondaryCodec(c), eqAsPrefix = false, f)
-                  .map(iv => (c, iv)))
+          // the z-order sort projection serves boxed full lanes on ANY
+          // key arity; zone maps prune the composite full lane exactly
+          // like the single-key one (Spark re-applies the filters above
+          // either way)
+          IndexedFrame.zProjServe(sqlContext, h.zProjection,
+              h.schema, h.joinKeyCols, filters) match {
+            case Some((kept, rdd)) =>
+              h.lastScanKind = "full_zproj"
+              h.setZoneKept(kept)
+              rdd
+            case None => h.zoneKeeps(filters) match {
+              case Some(keep) =>
+                h.lastScanKind = "full_zone"
+                h.setZoneKept(keep.count(identity))
+                org.apache.spark.rdd.PartitionPruningRDD.create(
+                  h.idx.map(_._2), keep(_))
+              case None =>
+                h.lastScanKind = "full"
+                h.idx.map(_._2)
             }
-            .groupBy(_._1).view
-            .mapValues(ivs =>
-              meet(ivs.map(_._2).toSeq, h.secondaryCodec(ivs.head._1).ord))
-            .toSeq
-          // lazy: a probe-memo hit must not pay the live probe jobs
-          lazy val secondaryKeys: Option[Array[(A, B)]] =
-            if (eqPreds.isEmpty && rangePreds.isEmpty) None
-            else {
-              val sets = eqPreds.map { case (c, vs) => h.secondaryProbe(c, vs) } ++
-                rangePreds.map { case (c, iv) => h.secondaryRangeProbe(c, iv) }
-              if (sets.exists(_.isEmpty)) None // over budget: scan serves
-              else Some(sets.map(_.get.toSet).reduce(_ intersect _)
-                .toArray(implicitly[ClassTag[(A, B)]]))
-            }
-          lazy val sig = secondaryProbeSig(eqPreds, rangePreds)
-          val memoHit: Option[(Array[(A, B)], Array[InternalRow], Boolean)] =
-            if (eqPreds.isEmpty && rangePreds.isEmpty) None
-            else h.probeMemoGet(sig)
-          memoHit match {
-            // repeated probe on this immutable snapshot: both probe jobs
-            // (postings + point reads) answered from the driver memo —
-            // the single-key relation's result cache, shared here
-            case Some((mKeys, mRows, usedRange)) =>
-              h.lastScanKind =
-                if (usedRange) "secondary_range" else "secondary_point"
-              h.lastPointLookupKeys = mKeys.length
-              h.lastProbeMemoHit = true
-              sqlContext.sparkContext.parallelize(mRows.toIndexedSeq, 1)
-            case None => secondaryKeys match {
-            case Some(keys) =>
-              h.lastScanKind =
-                if (rangePreds.nonEmpty) "secondary_range" else "secondary_point"
-              h.lastPointLookupKeys = keys.length
-              h.lastProbeMemoHit = false
-              val hit = h.idx.multiget(keys).values.toArray
-              h.probeMemoPut(sig, keys, hit, rangePreds.nonEmpty)
-              sqlContext.sparkContext.parallelize(hit.toIndexedSeq, 1)
-            case None =>
-              // the z-order sort projection serves boxed full lanes on
-              // ANY key arity; zone maps prune the composite full lane
-              // exactly like the single-key one (Spark re-applies the
-              // filters above either way)
-              IndexedFrame.zProjServe(sqlContext, h.zProjection,
-                  h.schema, h.joinKeyCols, filters) match {
-                case Some((kept, rdd)) =>
-                  h.lastScanKind = "full_zproj"
-                  h.setZoneKept(kept)
-                  rdd
-                case None => h.zoneKeeps(filters) match {
-                  case Some(keep) =>
-                    h.lastScanKind = "full_zone"
-                    h.setZoneKept(keep.count(identity))
-                    org.apache.spark.rdd.PartitionPruningRDD.create(
-                      h.idx.map(_._2), keep(_))
-                  case None =>
-                    h.lastScanKind = "full"
-                    h.idx.map(_._2)
-                }
-              }
-          }
           }
       }
-      val fields = requiredColumns.map(h.schema.fieldIndex).map(i =>
-        BoundReference(i, h.schema.fields(i).dataType, h.schema.fields(i).nullable))
-      rows.mapPartitions { it =>
-        val proj = UnsafeProjection.create(fields.toIndexedSeq)
-        it.map(r => proj(r))
-      }.asInstanceOf[RDD[Row]]
-    }
   }
 
   // =====================================================================
@@ -5490,8 +5572,6 @@ object IndexedFrame {
       implicit private[sql] val tupSer: KeySerializer[Seq[Any]])
       extends Serializable with TopKServable with JoinableHandle
       with StatsCapable with SecondaryCapable[Seq[Any]] with ZoneMapped {
-    @transient @volatile var lastScanKind: String = ""
-    @transient @volatile var lastPointLookupKeys: Int = -1
     override protected def secTag: ClassTag[Seq[Any]] = implicitly
     override protected def secondaryForbiddenCols: Set[String] = keyCols.toSet
     override private[sql] def filteredAggFor(secCol: String, aggCol: String)
@@ -6171,7 +6251,7 @@ object IndexedFrame {
 
   private[sql] class CompositeNRelation(private[sql] val h: CompositeNHandle)(
       @transient override val sqlContext: SQLContext)
-      extends BaseRelation with PrunedFilteredScan {
+      extends BaseRelation with DriverLanes {
     override def schema: StructType = h.schema
     override def needConversion: Boolean = false
 
@@ -6337,118 +6417,65 @@ object IndexedFrame {
       val body: RDD[InternalRow] =
         if (live.isEmpty) sqlContext.sparkContext.emptyRDD[InternalRow]
         else h.idx.multiRange(live)(h.tupSer).map(_._2)
-      if (corners.isEmpty) body
-      else {
-        val hit = h.idx.multiget(corners.toArray).values.toSeq
-        if (hit.nonEmpty) body.union(sqlContext.sparkContext.parallelize(hit, 1))
-        else body
+      withCorners(body, h.idx.multiget(corners.toArray).values)
+    }
+
+    override private[sql] def markDriverLane(filters: Array[Filter]): Boolean =
+      chooseLane(filters) match {
+        case EmptyLane => h.markLane("point", 0); true
+        case PointLane(keys) => h.markLane("point", keys.length); true
+        // no KEY lane applies: secondary-indexed VALUE columns route
+        // exactly like the 2-column relation's full lane
+        case FullLane => h.markSecondaryLane(filters)
+        case _ => false
+      }
+
+    override private[sql] def driverRows(
+        filters: Array[Filter]): Option[Array[InternalRow]] = {
+      h.lastProbeMemoHit = false
+      chooseLane(filters) match {
+        case EmptyLane =>
+          h.markLane("point", 0)
+          Some(Array.empty[InternalRow])
+        case PointLane(keys) =>
+          h.markLane("point", keys.length)
+          Some(h.idx.multiget(keys).values.toArray)
+        case FullLane => h.secondaryRows(filters)
+        case _ => None
       }
     }
 
-    override def buildScan(requiredColumns: Array[String],
-        filters: Array[Filter]): RDD[Row] = {
-      val rows: RDD[InternalRow] = chooseLane(filters) match {
-        case EmptyLane =>
-          h.lastScanKind = "point"
-          h.lastPointLookupKeys = 0
-          sqlContext.sparkContext.emptyRDD[InternalRow]
-        case PointLane(keys) =>
-          h.lastScanKind = "point"
-          h.lastPointLookupKeys = keys.length
-          val hit = h.idx.multiget(keys).values.toSeq
-          sqlContext.sparkContext.parallelize(hit, 1)
+    override private[sql] def scanRows(filters: Array[Filter]): RDD[InternalRow] =
+      chooseLane(filters) match {
+        case EmptyLane | _: PointLane =>
+          throw new IllegalStateException("point lanes are served by driverRows")
         case PrefixLane(prefixes, iv) =>
-          h.lastScanKind = "range"
-          h.lastPointLookupKeys = -1
+          h.markLane("range", -1)
           val parts = prefixes.map(p => intervalFor(p, iv))
           serve(parts.flatMap(_._1), parts.flatMap(_._2))
         case FullLane =>
           h.lastPointLookupKeys = -1
-          // no KEY lane applies: secondary-indexed VALUE columns and
-          // zone maps route exactly like the 2-column relation's full
-          // lane (never claimed; Spark re-applies the predicates)
-          val eqPreds = filters.flatMap {
-            case EqualTo(c, v) if h.hasSecondary(c) =>
-              Some((c, if (v == null) Nil else Seq(v)))
-            case In(c, vs) if h.hasSecondary(c) =>
-              Some((c, vs.toSeq.filter(_ != null)))
-            case _ => None
-          }
-          val rangePreds = filters
-            .flatMap { f =>
-              (f match {
-                case GreaterThan(c, _) => Some(c)
-                case GreaterThanOrEqual(c, _) => Some(c)
-                case LessThan(c, _) => Some(c)
-                case LessThanOrEqual(c, _) => Some(c)
-                case _ => None
-              }).filter(h.hasOrderedSecondary).flatMap(c =>
-                boundsOn(c, h.secondaryCodec(c), eqAsPrefix = false, f)
-                  .map(iv => (c, iv)))
-            }
-            .groupBy(_._1).view
-            .mapValues(ivs =>
-              meet(ivs.map(_._2).toSeq, h.secondaryCodec(ivs.head._1).ord))
-            .toSeq
-          lazy val secondaryKeys: Option[Array[Seq[Any]]] =
-            if (eqPreds.isEmpty && rangePreds.isEmpty) None
-            else {
-              val sets = eqPreds.map { case (c, vs) => h.secondaryProbe(c, vs) } ++
-                rangePreds.map { case (c, iv) => h.secondaryRangeProbe(c, iv) }
-              if (sets.exists(_.isEmpty)) None // over budget: scan serves
-              else Some(sets.map(_.get.toSet).reduce(_ intersect _)
-                .toArray(implicitly[ClassTag[Seq[Any]]]))
-            }
-          lazy val sig = secondaryProbeSig(eqPreds, rangePreds)
-          val memoHit: Option[(Array[Seq[Any]], Array[InternalRow], Boolean)] =
-            if (eqPreds.isEmpty && rangePreds.isEmpty) None
-            else h.probeMemoGet(sig)
-          memoHit match {
-            case Some((mKeys, mRows, usedRange)) =>
-              h.lastScanKind =
-                if (usedRange) "secondary_range" else "secondary_point"
-              h.lastPointLookupKeys = mKeys.length
-              h.lastProbeMemoHit = true
-              sqlContext.sparkContext.parallelize(mRows.toIndexedSeq, 1)
-            case None => secondaryKeys match {
-              case Some(keys) =>
-                h.lastScanKind =
-                  if (rangePreds.nonEmpty) "secondary_range" else "secondary_point"
-                h.lastPointLookupKeys = keys.length
-                h.lastProbeMemoHit = false
-                val hit = h.idx.multiget(keys).values.toArray
-                h.probeMemoPut(sig, keys, hit, rangePreds.nonEmpty)
-                sqlContext.sparkContext.parallelize(hit.toIndexedSeq, 1)
+          // projection-boxed full lanes, then zone maps, then the plain
+          // scan — same order as the other arities (never claimed;
+          // Spark re-applies the predicates)
+          IndexedFrame.zProjServe(sqlContext, h.zProjection,
+              h.schema, h.keyCols, filters) match {
+            case Some((kept, rdd)) =>
+              h.lastScanKind = "full_zproj"
+              h.setZoneKept(kept)
+              rdd
+            case None => h.zoneKeeps(filters) match {
+              case Some(keep) =>
+                h.lastScanKind = "full_zone"
+                h.setZoneKept(keep.count(identity))
+                org.apache.spark.rdd.PartitionPruningRDD.create(
+                  h.idx.map(_._2), keep(_))
               case None =>
-                // projection-boxed full lanes, then zone maps, then
-                // the plain scan — same order as the other arities
-                IndexedFrame.zProjServe(sqlContext, h.zProjection,
-                    h.schema, h.keyCols, filters) match {
-                  case Some((kept, rdd)) =>
-                    h.lastScanKind = "full_zproj"
-                    h.setZoneKept(kept)
-                    rdd
-                  case None => h.zoneKeeps(filters) match {
-                    case Some(keep) =>
-                      h.lastScanKind = "full_zone"
-                      h.setZoneKept(keep.count(identity))
-                      org.apache.spark.rdd.PartitionPruningRDD.create(
-                        h.idx.map(_._2), keep(_))
-                    case None =>
-                      h.lastScanKind = "full"
-                      h.idx.map(_._2)
-                  }
-                }
+                h.lastScanKind = "full"
+                h.idx.map(_._2)
             }
           }
       }
-      val fields = requiredColumns.map(h.schema.fieldIndex).map(i =>
-        BoundReference(i, h.schema.fields(i).dataType, h.schema.fields(i).nullable))
-      rows.mapPartitions { it =>
-        val proj = UnsafeProjection.create(fields.toIndexedSeq)
-        it.map(r => proj(r))
-      }.asInstanceOf[RDD[Row]]
-    }
   }
 
   /** Index by N >= 2 key columns of any supported type (integral/
@@ -6832,7 +6859,7 @@ object IndexedFrame {
 
   private[sql] class IndexedRelation[K](private[sql] val h: Handle[K])(
       @transient override val sqlContext: SQLContext)
-      extends BaseRelation with PrunedFilteredScan {
+      extends BaseRelation with DriverLanes {
 
     override def schema: StructType = h.schema
 
@@ -6887,189 +6914,111 @@ object IndexedFrame {
         !(rangeCapable && !anyPoint && kBounds(f).isDefined))
     }
 
-    /** (col, literal values) of one pushed equality/IN on a
-      * secondary-indexed column; NULLs match nothing and drop out. */
-    private def secondaryValuesOn(f: Filter): Option[(String, Seq[Any])] = f match {
-      case EqualTo(c, v) if h.hasSecondary(c) =>
-        Some((c, if (v == null) Nil else Seq(v)))
-      case In(c, vs) if h.hasSecondary(c) =>
-        Some((c, vs.toSeq.filter(_ != null)))
-      case _ => None
+    /** Pushed point filters' key set (AND semantics: intersected across
+      * filters); None when no point filter is pushed. */
+    private def pointKeySet(filters: Array[Filter]): Option[Array[K]] = {
+      val keySets = filters.flatMap(pointKeys)
+      if (keySets.isEmpty) None
+      else Some(keySets.reduce(_ intersect _).toArray(h.kTag))
     }
 
-    override def buildScan(requiredColumns: Array[String],
-        filters: Array[Filter]): RDD[Row] = {
+    private def keyRanges(filters: Array[Filter]): Array[Iv[K]] =
+      if (rangeCapable) filters.flatMap(kBounds) else Array.empty[Iv[K]]
+
+    // lane precedence: primary point keys, then key ranges, then
+    // secondary probes (equality/IN on any secondary, ranges on ORDERED
+    // secondaries), then the full lanes
+    override private[sql] def markDriverLane(filters: Array[Filter]): Boolean =
+      pointKeySet(filters) match {
+        case Some(keys) => h.markLane("point", keys.length); true
+        case None => keyRanges(filters).isEmpty && h.markSecondaryLane(filters)
+      }
+
+    override private[sql] def driverRows(
+        filters: Array[Filter]): Option[Array[InternalRow]] = {
       h.lastProbeMemoHit = false
-      val keySets = filters.flatMap(pointKeys)
-      val ivs =
-        if (rangeCapable) filters.flatMap(kBounds) else Array.empty[Iv[K]]
-      // primary keys routed through secondary-index probes — equality/IN
-      // on any secondary, ranges on ORDERED secondaries — when every
-      // probed filter stays under budget (AND semantics: intersect
-      // across filters). Lazy: earlier lanes shortcut the probe jobs.
-      lazy val secondaryPreds: (Array[(String, Seq[Any])], Seq[(String, Iv[Any])]) = {
-        val eqPreds = filters.flatMap(secondaryValuesOn)
-        // per ordered-secondary column: the met interval of its pushed
-        // range conjuncts (the same boundsOn/meet algebra as key lanes)
-        def rangeColOf(f: Filter): Option[String] = f match {
-          case GreaterThan(c, _) => Some(c)
-          case GreaterThanOrEqual(c, _) => Some(c)
-          case LessThan(c, _) => Some(c)
-          case LessThanOrEqual(c, _) => Some(c)
-          case StringStartsWith(c, _) => Some(c)
-          case _ => None
-        }
-        val rangePreds = filters
-          .flatMap { f =>
-            rangeColOf(f).filter(h.hasOrderedSecondary).flatMap(c =>
-              boundsOn(c, h.secondaryCodec(c), eqAsPrefix = false, f)
-                .map(iv => (c, iv)))
-          }
-          .groupBy(_._1).view
-          .mapValues(ivs =>
-            meet(ivs.map(_._2).toSeq, h.secondaryCodec(ivs.head._1).ord))
-          .toSeq
-        (eqPreds, rangePreds)
-      }
-      lazy val secondarySig: String = {
-        val (eqPreds, rangePreds) = secondaryPreds
-        secondaryProbeSig(eqPreds, rangePreds)
-      }
-      lazy val secondaryKeys: Option[(Array[K], Boolean)] = {
-        val (eqPreds, rangePreds) = secondaryPreds
-        if (eqPreds.isEmpty && rangePreds.isEmpty) None
-        else {
-          val sets = eqPreds.map { case (c, vs) => h.secondaryProbe(c, vs) } ++
-            rangePreds.map { case (c, iv) => h.secondaryRangeProbe(c, iv) }
-          if (sets.exists(_.isEmpty)) None // over budget: scan lanes serve
-          else Some((sets.map(_.get.toSet).reduce(_ intersect _).toArray(h.kTag),
-            rangePreds.nonEmpty))
-        }
-      }
-      lazy val secondaryMemo: Option[(Array[K], Array[InternalRow], Boolean)] = {
-        val (eqPreds, rangePreds) = secondaryPreds
-        if (eqPreds.isEmpty && rangePreds.isEmpty) None
-        else h.probeMemoGet(secondarySig)
-      }
-      val rows: RDD[InternalRow] =
-        if (keySets.nonEmpty) {
-          // AND semantics across pushed filters: intersect every key set
-          val keys = keySets.reduce(_ intersect _).toArray(h.kTag)
-          h.lastScanKind = "point"
-          h.lastPointLookupKeys = keys.length
+      pointKeySet(filters) match {
+        case Some(keys) =>
+          h.markLane("point", keys.length)
           // PRIMARY point probes memoize like secondary probes (sound:
           // the handle is an immutable snapshot) — a repeated key set,
-          // the dashboard shape, skips the broadcast + pruned job and
-          // answers driver-side with zero jobs
+          // the dashboard shape, skips the pruned probe job and answers
+          // driver-side with zero jobs
           val sig = "pk:" + keys.sorted(h.codec.ord).iterator
             .map(k => { val t = String.valueOf(k); s"${t.length}:$t" })
             .mkString(",")
-          h.probeMemoGet(sig) match {
+          Some(h.probeMemoGet(sig) match {
             case Some((_, memoRows, _)) =>
               h.lastProbeMemoHit = true
-              sqlContext.sparkContext.parallelize(memoRows.toIndexedSeq, 1)
+              memoRows
             case None =>
-              h.lastProbeMemoHit = false
               val hit = h.idx.multiget(keys).values.toArray
               h.probeMemoPut(sig, keys, hit, usedRange = false)
-              sqlContext.sparkContext.parallelize(hit.toIndexedSeq, 1)
-          }
-        } else if (ivs.nonEmpty) {
-          // intersect all pushed bounds into one half-open interval
-          val iv = meet(ivs.toSeq, h.codec.ord)
-          h.lastScanKind = "range"
-          h.lastPointLookupKeys = -1
-          if (iv.empty) {
-            sqlContext.sparkContext.emptyRDD[InternalRow]
-          } else {
-            val from = iv.from.getOrElse(h.codec.minKey)
-            // unbounded above closes at succ(maxKey) — one O(depth)
-            // descent; only a domain-max key lacks a successor and is
-            // probed exactly instead (corner rows never duplicate the
-            // scan: the corner IS the scan's own inclusive endpoint)
-            val (ranges, corners) = iv.to match {
-              case Some(t) => (Seq((from, t)), Nil)
-              case None => h.idx.maxKey()(h.kSer) match {
-                case None => (Nil, Nil) // empty index
-                case Some(mk) if h.codec.ord.lt(mk, from) => (Nil, Nil)
-                case Some(mk) => h.codec.succ(mk) match {
-                  case Some(end) => (Seq((from, end)), Nil)
-                  case None => (Seq((from, mk)), Seq(mk))
-                }
+              hit
+          })
+        case None =>
+          if (keyRanges(filters).nonEmpty) None else h.secondaryRows(filters)
+      }
+    }
+
+    override private[sql] def scanRows(filters: Array[Filter]): RDD[InternalRow] = {
+      val ivs = keyRanges(filters)
+      if (ivs.nonEmpty) {
+        // intersect all pushed bounds into one half-open interval
+        val iv = meet(ivs.toSeq, h.codec.ord)
+        h.markLane("range", -1)
+        if (iv.empty) {
+          sqlContext.sparkContext.emptyRDD[InternalRow]
+        } else {
+          val from = iv.from.getOrElse(h.codec.minKey)
+          // unbounded above closes at succ(maxKey) — one O(depth)
+          // descent; only a domain-max key lacks a successor and is
+          // probed exactly instead (corner rows never duplicate the
+          // scan: the corner IS the scan's own inclusive endpoint)
+          val (ranges, corners) = iv.to match {
+            case Some(t) => (Seq((from, t)), Nil)
+            case None => h.idx.maxKey()(h.kSer) match {
+              case None => (Nil, Nil) // empty index
+              case Some(mk) if h.codec.ord.lt(mk, from) => (Nil, Nil)
+              case Some(mk) => h.codec.succ(mk) match {
+                case Some(end) => (Seq((from, end)), Nil)
+                case None => (Seq((from, mk)), Seq(mk))
               }
             }
-            val live = ranges.filter { case (f, t) => h.codec.ord.lt(f, t) }
-            val body: RDD[InternalRow] =
-              if (live.isEmpty) sqlContext.sparkContext.emptyRDD[InternalRow]
-              else h.idx.range(live.head._1, live.head._2)(h.kSer).map(_._2)
-            if (corners.isEmpty) body
-            else {
-              val hit = h.idx.multiget(corners.toArray(h.kTag)).values.toSeq
-              if (hit.nonEmpty) body.union(sqlContext.sparkContext.parallelize(hit, 1))
-              else body
-            }
           }
-        } else if (secondaryMemo.isDefined) {
-          // repeated probe on this immutable snapshot: both probe jobs
-          // (postings + point reads) answered from the driver memo
-          val (keys, rows, usedRange) = secondaryMemo.get
-          h.lastScanKind =
-            if (usedRange) "secondary_range" else "secondary_point"
-          h.lastPointLookupKeys = keys.length
-          h.lastProbeMemoHit = true
-          sqlContext.sparkContext.parallelize(rows.toIndexedSeq, 1)
-        } else if (secondaryKeys.isDefined) {
-          // equality/IN (and, on ordered secondaries, ranges) on a
-          // secondary-indexed VALUE column: probe the inverted index
-          // for the primary key set, then point-read. Never claimed in
-          // unhandledFilters — Spark re-applies the predicates above
-          // the (small) probe result, which also keeps the budget
-          // fallback sound.
-          val (keys, usedRange) = secondaryKeys.get
-          h.lastScanKind =
-            if (usedRange) "secondary_range" else "secondary_point"
-          h.lastPointLookupKeys = keys.length
-          h.lastProbeMemoHit = false
-          val hit = h.idx.multiget(keys).values.toArray
-          h.probeMemoPut(secondarySig, keys, hit, usedRange)
-          sqlContext.sparkContext.parallelize(hit.toIndexedSeq, 1)
-        } else {
-          h.lastPointLookupKeys = -1
-          // no key predicate. Preference order for the full lane:
-          // the z-order SORT PROJECTION when one is attached and the
-          // pushed filters box its columns (reads only the zb
-          // directories whose Morton cell intersects the box — the
-          // value-column ZORDER read path), then zone maps (partition
-          // skipping on the primary), then the plain scan. Spark
-          // re-applies every filter above, so each is a sound
-          // superset read.
-          IndexedFrame.zProjServe(sqlContext, h.zProjection, h.schema,
-              Seq(h.keyCol), filters) match {
-            case Some((kept, rdd)) =>
-              h.lastScanKind = "full_zproj"
-              h.lastZoneKept = kept
-              rdd
-            case None => h.zoneKeeps(filters) match {
-              case Some(keep) =>
-                h.lastScanKind = "full_zone"
-                h.lastZoneKept = keep.count(identity)
-                org.apache.spark.rdd.PartitionPruningRDD.create(
-                  h.idx.map(_._2), keep(_))
-              case None =>
-                h.lastScanKind = "full"
-                h.idx.map(_._2)
-            }
+          val live = ranges.filter { case (f, t) => h.codec.ord.lt(f, t) }
+          val body: RDD[InternalRow] =
+            if (live.isEmpty) sqlContext.sparkContext.emptyRDD[InternalRow]
+            else h.idx.range(live.head._1, live.head._2)(h.kSer).map(_._2)
+          withCorners(body, h.idx.multiget(corners.toArray(h.kTag)).values)
+        }
+      } else {
+        h.lastPointLookupKeys = -1
+        // no key predicate (or a secondary probe over budget). Preference
+        // order for the full lane: the z-order SORT PROJECTION when one
+        // is attached and the pushed filters box its columns (reads only
+        // the zb directories whose Morton cell intersects the box — the
+        // value-column ZORDER read path), then zone maps (partition
+        // skipping on the primary), then the plain scan. Spark re-applies
+        // every filter above, so each is a sound superset read.
+        IndexedFrame.zProjServe(sqlContext, h.zProjection, h.schema,
+            Seq(h.keyCol), filters) match {
+          case Some((kept, rdd)) =>
+            h.lastScanKind = "full_zproj"
+            h.lastZoneKept = kept
+            rdd
+          case None => h.zoneKeeps(filters) match {
+            case Some(keep) =>
+              h.lastScanKind = "full_zone"
+              h.lastZoneKept = keep.count(identity)
+              org.apache.spark.rdd.PartitionPruningRDD.create(
+                h.idx.map(_._2), keep(_))
+            case None =>
+              h.lastScanKind = "full"
+              h.idx.map(_._2)
           }
         }
-      // prune columns with one reused per-partition projection; rows are
-      // consumed streaming by the scan node (which re-projects), so no
-      // per-row copy is needed
-      val fields = requiredColumns.map(h.schema.fieldIndex).map(i =>
-        BoundReference(i, h.schema.fields(i).dataType, h.schema.fields(i).nullable))
-      rows.mapPartitions { it =>
-        val proj = UnsafeProjection.create(fields.toIndexedSeq)
-        it.map(r => proj(r))
-      }.asInstanceOf[RDD[Row]]
+      }
     }
   }
 }

@@ -48,11 +48,8 @@ import graft.IndexedRDD
 object IndexedJoin {
 
   /** Register the strategy on a session (idempotent). */
-  def enable(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(IndexedJoinStrategy))
-      spark.experimental.extraStrategies = cur :+ IndexedJoinStrategy
-  }
+  def enable(spark: SparkSession): Unit =
+    GraftStrategies.install(spark, Seq(IndexedJoinStrategy))
 
   object IndexedJoinStrategy extends SparkStrategy {
 

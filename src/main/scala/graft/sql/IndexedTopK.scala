@@ -29,11 +29,8 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 object IndexedTopK {
 
   /** Register the strategy on a session (idempotent). */
-  def enable(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(IndexedTopKStrategy))
-      spark.experimental.extraStrategies = cur :+ IndexedTopKStrategy
-  }
+  def enable(spark: SparkSession): Unit =
+    GraftStrategies.install(spark, Seq(IndexedTopKStrategy))
 
   /** Driver-side row budget: `n` beyond this plans as Catalyst's
     * bounded-heap scan instead (the rows land on the driver here). */

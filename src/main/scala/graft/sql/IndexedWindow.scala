@@ -36,11 +36,8 @@ import org.apache.spark.sql.types.IntegerType
 object IndexedWindow {
 
   /** Register the strategy on a session (idempotent). */
-  def enable(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(IndexedGroupTopNStrategy))
-      spark.experimental.extraStrategies = cur :+ IndexedGroupTopNStrategy
-  }
+  def enable(spark: SparkSession): Unit =
+    GraftStrategies.install(spark, Seq(IndexedGroupTopNStrategy))
 
   object IndexedGroupTopNStrategy extends SparkStrategy {
 

@@ -119,15 +119,16 @@ class ProbeMemoSpec extends AnyFunSuite {
     def q() = hd.filter($"k".isin(keys: _*))
       .select($"v").as[String].collect().sorted.toSeq
     val expect = (10L to 40L).map(k => s"v$k").sorted
-    val (first, _) = jobsDuring(q())
+    val (first, jFirst) = jobsDuring(q())
     assert(first === expect)
     assert(!h.lastProbeMemoHit && h.lastScanKind === "point")
+    // a miss is the pruned multiget job alone: the rows it returns are
+    // answered on the driver, never shipped back through a second job
+    assert(jFirst === 1, s"point probe (memo miss) started $jFirst jobs")
     val (again, jAgain) = jobsDuring(q())
     assert(again === expect)
     assert(h.lastProbeMemoHit, "repeat point probe must serve from the memo")
-    // the only job left is the 1-slice parallelize of the memo rows —
-    // the broadcast + pruned multiget job is gone
-    assert(jAgain <= 1, s"memoized point probe started $jAgain jobs")
+    assert(jAgain === 0, s"memoized point probe started $jAgain jobs")
     // a different key set misses and probes live
     val (other, _) = jobsDuring(
       hd.filter($"k".isin((100L to 105L).map(Long.box): _*))
