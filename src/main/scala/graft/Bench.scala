@@ -354,8 +354,7 @@ object Bench {
     * probe directories, append deltas). */
   private[graft] def microAnnCatalog(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
     import org.apache.spark.sql.functions.{col, lit}
-    val path = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_bench_ann").toString
+    val path = graft.LaneDirs.path("graft_bench_ann")
     spark.sql("DROP TABLE IF EXISTS bench_ann")
     new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -530,12 +529,9 @@ object Bench {
   private[graft] def microExportManifest(spark: SparkSession,
       sfDir: String): Seq[(String, Double)] = {
     import org.apache.spark.sql.functions.{col, lit}
-    val path = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "bench_manifest_tbl").toString
-    val out = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "bench_manifest_out").toString
-    val outFull = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "bench_manifest_outf").toString
+    val path = graft.LaneDirs.path("bench_manifest_tbl")
+    val out = graft.LaneDirs.path("bench_manifest_out")
+    val outFull = graft.LaneDirs.path("bench_manifest_outf")
     spark.sql("DROP TABLE IF EXISTS bench_man")
     Seq(path, out, outFull).foreach(p => new scala.reflect.io.Directory(
       new java.io.File(p)).deleteRecursively())
@@ -628,17 +624,17 @@ object Bench {
       .groupBy(col("user_id"), col("day"))
       .agg(fCount(fLit(1)).as("n_events"),
         fRound(fSum(col("value")), 2).as("sum_value"))
-    val hHash = graft.sql.IndexedFrame.indexComposite(
-      agg, "user_id", "day", ordered = false, numPartitions = 16)
+    val hHash = graft.sql.IndexedFrame.indexCompositeN(
+      agg, Seq("user_id", "day"), ordered = false, numPartitions = 16)
     hHash.idx.cached; hHash.idx.count()
     // the "once" rewrite repeats 3x like every lane (full diag runs);
     // each run rebuilds the clustered layout, the last stays for the
     // read micros
     val builds = scala.collection.mutable.ArrayBuffer
-      .empty[graft.sql.IndexedFrame.CompositeHandle[Long, Long]]
+      .empty[graft.sql.IndexedFrame.CompositeNHandle]
     val tRewrite = timed3("micro_zorder_rewrite_once") {
       builds.lastOption.foreach(_.idx.unpersist())
-      val h = hHash.zOrdered().analyzeZones("user_id", "day")
+      val h = hHash.zOrderedN(Seq("user_id", "day")).analyzeZones("user_id", "day")
       h.idx.cached; h.idx.count()
       builds += h
       ()
@@ -675,8 +671,7 @@ object Bench {
     * micro). Cells kept go to gauges. */
   private[graft] def microZProj(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
     import org.apache.spark.sql.functions.{col, lit}
-    val path = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_bench_zproj").toString
+    val path = graft.LaneDirs.path("graft_bench_zproj")
     spark.sql("DROP TABLE IF EXISTS bench_zproj")
     new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
     val base = spark.read.parquet(s"$sfDir/orders.parquet")
@@ -758,8 +753,7 @@ object Bench {
       val df = (0 until mult).map(i =>
         base.select((col("o_orderkey") + lit(i * shift)).as("o_orderkey"),
           col("o_custkey"), col("o_totalprice"))).reduce(_ union _)
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_bench_dml_$tag").toString
+      val path = graft.LaneDirs.path(s"graft_bench_dml_$tag")
       spark.sql(s"DROP TABLE IF EXISTS bench_dml_$tag")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       df.createOrReplaceTempView(s"bench_dml_src_$tag")
@@ -788,8 +782,7 @@ object Bench {
   private[graft] def microCatalogReopen(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
     import org.apache.spark.sql.functions.col
     def reopenLane(tag: String, statements: Int): Seq[(String, Double)] = {
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_bench_reopen_$tag").toString
+      val path = graft.LaneDirs.path(s"graft_bench_reopen_$tag")
       spark.sql(s"DROP TABLE IF EXISTS bench_reopen_$tag")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       spark.read.parquet(s"$sfDir/customer.parquet")
@@ -851,8 +844,7 @@ object Bench {
     def reopenLane1000(): Seq[(String, Double)] = {
       import org.apache.spark.sql.functions.{col, lit}
       val tag = "1000"
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_bench_reopen_$tag").toString
+      val path = graft.LaneDirs.path(s"graft_bench_reopen_$tag")
       spark.sql(s"DROP TABLE IF EXISTS bench_reopen_$tag")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       spark.read.parquet(s"$sfDir/customer.parquet")
@@ -1410,8 +1402,8 @@ object Bench {
 
     val evDF = graft.queries.Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("value"))
-    val hEv = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-      evDF, "user_id", "event_id", 32)
+    val hEv = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+      evDF, Seq("user_id", "event_id"), 32)
     hEv.toDF.count()
     val cachedEv = evDF.cache(); cachedEv.count()
     val tGsIdx = timed3("micro_sql_group_stats_idx_20")((0 until 20).foreach { _ =>
@@ -1511,8 +1503,8 @@ object Bench {
     import org.apache.spark.sql.functions.{col, count => fCount, lit => fLit}
     val evDF = graft.queries.Tables.events(spark, sfDir)
       .select($"ts", $"event_id", $"user_id", $"value")
-    val ht = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-      evDF, "ts", "event_id", 16)
+    val ht = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+      evDF, Seq("ts", "event_id"), 16)
     ht.idx.count()
     val zlo = fLit("2024-01-20 00:00:00").cast("timestamp")
     val zhi = fLit("2024-01-23 00:00:00").cast("timestamp")
@@ -1551,14 +1543,14 @@ object Bench {
     import org.apache.spark.sql.functions.{col, max => fMax, round => fRound}
     val g = graft.queries.Tables.events(spark, sfDir)
       .groupBy($"user_id", $"ts").agg(fRound(fMax($"value"), 2).as("mv"))
-    val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-      g, "user_id", "ts", 16)
+    val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+      g, Seq("user_id", "ts"), 16)
     h.idx.count()
     val cg = g.cache(); cg.count()
     def cutoff(i: Int) = java.sql.Timestamp.valueOf(
       f"2024-01-${5 + i % 20}%02d 12:00:00")
     val tAsOfIdx = timed3("micro_sql_asof_idx_50")((0 until 50).foreach { i =>
-      h.asOf((i % 25 + 1).toLong, cutoff(i)).collect()
+      h.asOf(Seq((i % 25 + 1).toLong), cutoff(i)).collect()
     })
     val tAsOfScan = timed3("micro_sql_asof_scan_50")((0 until 50).foreach { i =>
       cg.filter(col("user_id") === (i % 25 + 1).toLong &&
@@ -1591,15 +1583,15 @@ object Bench {
     // BATCH as-of join (200 probes at once): interval-routed floor
     // descents vs Catalyst's entity join + per-probe window max over
     // the cached versions table
-    val hB = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-      g, "user_id", "ts", 16)
+    val hB = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+      g, Seq("user_id", "ts"), 16)
     hB.idx.count()
     def asOfProbe() = spark.range(0, 200).select(
       (col("id") % 25 + 1).as("pu"),
       org.apache.spark.sql.functions.expr(
         "timestamp_micros((1704153600 + id * 9137) * 1000000)").as("pt"))
     val tBatchIdx = timed3("micro_sql_asof_batch_idx_5")((0 until 5).foreach { _ =>
-      hB.asOfJoinFrame(asOfProbe(), "pu", "pt").collect()
+      hB.asOfJoinFrame(asOfProbe(), Seq("pu"), "pt").collect()
     })
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("pu"), col("pt")).orderBy(col("ts").desc)

@@ -1507,19 +1507,10 @@ object IndexedRDD {
     ordered(elems.partitionBy(
       new org.apache.spark.RangePartitioner(numPartitions, elems)))
 
-  /** Two-level hash partitioner — the OVERSIZED-PARTITION guard
-    * (SURVEY §7.5 risk 6): base buckets that [[skewAware]]'s count
-    * pass found too large split into `splits(b)` sub-partitions by an
-    * independent second hash (byteswap32 — decorrelated from
-    * `hashCode % n`, which is what overloads a bucket when keys share
-    * a stride, e.g. ids that are all ≡ 0 mod the partition count).
-    * Routing stays a pure function of the key, so every downstream
-    * consumer — multiget pruning, one-sided COW shuffles, zip joins
-    * against `partitionBy(this)` sides, IO round-trips (the
-    * partitioner is serialized with the save) — works unchanged. */
   /** Z-CURVE partitioner over a two-long composite key (the layout
-    * behind `OPTIMIZE ... ZORDER BY`): routes a key by binary-searching
-    * its Morton interleave against sampled z bounds, so partitions hold
+    * behind `OPTIMIZE ... ZORDER BY` on two Long-coded key columns;
+    * keys are `Seq(a, b)`): routes a key by binary-searching its Morton
+    * interleave against sampled z bounds, so partitions hold
     * z-CONTIGUOUS key sets — each one covering a tight 2-D box of the
     * key space, which is exactly what makes per-partition min/max zone
     * maps on BOTH dimensions prune 2-D box queries. Routing is a pure
@@ -1533,12 +1524,13 @@ object IndexedRDD {
   class MortonPartitioner(val bounds: Array[Long], val bits: Int,
       val swapped: Boolean) extends org.apache.spark.Partitioner {
     override def numPartitions: Int = bounds.length + 1
+    private def interleave(a: Long, b: Long): Long =
+      if (swapped) graft.operators.ZOrder.interleave(b, a, bits)
+      else graft.operators.ZOrder.interleave(a, b, bits)
     private[graft] def zOf(key: Any): Long = key match {
-      case (a: Long, b: Long) =>
-        if (swapped) graft.operators.ZOrder.interleave(b, a, bits)
-        else graft.operators.ZOrder.interleave(a, b, bits)
+      case Seq(a: Long, b: Long) => interleave(a, b)
       case other => throw new IllegalArgumentException(
-        s"MortonPartitioner routes (Long, Long) composite keys, got " +
+        s"MortonPartitioner routes Seq(Long, Long) composite keys, got " +
           s"${if (other == null) "null" else other.getClass.getName}")
     }
     override def getPartition(key: Any): Int = {
@@ -1580,9 +1572,8 @@ object IndexedRDD {
     * values, at most 255 — 256 buckets/dim at 8 bits); `ords(d)`
     * orders that component (the key codec's ordering — serializable);
     * `perm(d)` is the KEY-COMPONENT index z-dimension `d` reads
-    * (ZORDER BY may name the key columns in any order). Accepts
-    * Seq[Any] keys (N-ary composite) and (a, b) tuples (the two-column
-    * composite with non-Long components). */
+    * (ZORDER BY may name the key columns in any order). Keys are the
+    * Seq[Any] tuples of composite handles. */
   class RankZPartitioner(val edges: Array[Array[Any]],
       val ords: Array[Ordering[Any]], val perm: Array[Int],
       val bounds: Array[Long])
@@ -1603,17 +1594,14 @@ object IndexedRDD {
     }
     private[graft] def zOf(key: Any): Long = {
       val n = edges.length
-      def comp(key: IndexedSeq[Any]): Array[Long] =
-        Array.tabulate(n)(d => rankOf(key(perm(d)), d))
-      val ranks = key match {
-        case s: Seq[_] =>
-          require(s.length == n, s"key arity ${s.length} != $n dims")
-          comp(s.toIndexedSeq)
-        case (a, b) if n == 2 => comp(IndexedSeq(a, b))
+      val s = key match {
+        case s: Seq[_] => s.toIndexedSeq
         case other => throw new IllegalArgumentException(
-          s"RankZPartitioner routes Seq[Any] / Tuple2 composite keys, " +
-            s"got ${if (other == null) "null" else other.getClass.getName}")
+          s"RankZPartitioner routes Seq[Any] composite keys, got " +
+            s"${if (other == null) "null" else other.getClass.getName}")
       }
+      require(s.length == n, s"key arity ${s.length} != $n dims")
+      val ranks = Array.tabulate(n)(d => rankOf(s(perm(d)), d))
       // 8 bits per dimension (<= 255 edges); dim 0 takes the HIGH
       // lane of each bit group so ZORDER BY's first column leads
       var z = 0L
@@ -1651,6 +1639,16 @@ object IndexedRDD {
       31 * java.util.Arrays.hashCode(bounds) + edges.length
   }
 
+  /** Two-level hash partitioner — the OVERSIZED-PARTITION guard
+    * (SURVEY §7.5 risk 6): base buckets that [[skewAware]]'s count
+    * pass found too large split into `splits(b)` sub-partitions by an
+    * independent second hash (byteswap32 — decorrelated from
+    * `hashCode % n`, which is what overloads a bucket when keys share
+    * a stride, e.g. ids that are all ≡ 0 mod the partition count).
+    * Routing stays a pure function of the key, so every downstream
+    * consumer — multiget pruning, one-sided COW shuffles, zip joins
+    * against `partitionBy(this)` sides, IO round-trips (the
+    * partitioner is serialized with the save) — works unchanged. */
   class SplitPartitioner(val baseParts: Int, val splits: Array[Int])
       extends org.apache.spark.Partitioner {
     require(splits.length == baseParts)

@@ -214,8 +214,7 @@ object OperatorQueries {
       // filtered scan from the reloaded copy. Fixed per-process path,
       // overwritten on every run — repeated Verify/Bench invocations
       // must not accumulate index copies on disk
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_ir_save_load").toString
+      val path = graft.LaneDirs.path("graft_ir_save_load")
       val idx = IndexedRDD(Tables.customer(s, dir)
         .select($"c_custkey", $"c_acctbal").as[(Long, Double)].rdd)
       graft.IndexedRDDIO.save(idx, path)
@@ -256,9 +255,9 @@ object OperatorQueries {
         .agg(round(sum($"o_totalprice"), 2).as("total"))
         .withColumn("o_bucket", ($"o_custkey" % 100).cast("long"))
         .select($"o_bucket", $"o_custkey", $"total")
-      val h1 = graft.sql.IndexedFrame.indexComposite(c, "c_bucket", "c_custkey",
+      val h1 = graft.sql.IndexedFrame.indexCompositeN(c, Seq("c_bucket", "c_custkey"),
         numPartitions = 16)
-      val h2 = graft.sql.IndexedFrame.indexComposite(totals, "o_bucket", "o_custkey",
+      val h2 = graft.sql.IndexedFrame.indexCompositeN(totals, Seq("o_bucket", "o_custkey"),
         numPartitions = 16)
       h1.toDF.join(h2.toDF,
           $"c_bucket" === $"o_bucket" && $"c_custkey" === $"o_custkey")
@@ -345,14 +344,14 @@ object OperatorQueries {
     "ir_sql_pointget_composite" -> { (s, dir) =>
       import s.implicits._
       implicit val sp: SparkSession = s
-      // COMPOSITE (two-column) SQL handle over the Tuple2 serializer
+      // two-column COMPOSITE SQL handle over the concat serializer
       // (reference KeySerializer.scala:145-176 as first-class SQL
       // keys): pushed conjunctive equality/IN on both columns routes
       // into the partition-pruned tuple multiget — 3 probes here, no
       // scan
       val df = Tables.customer(s, dir)
         .withColumn("c_bucket", ($"c_custkey" % 100).cast("long"))
-      val h = graft.sql.IndexedFrame.indexComposite(df, "c_bucket", "c_custkey")
+      val h = graft.sql.IndexedFrame.indexCompositeN(df, Seq("c_bucket", "c_custkey"))
       h.toDF.filter($"c_bucket" === 17L && $"c_custkey".isin(17L, 117L, 999917L))
         .select($"c_bucket", $"c_custkey", $"c_acctbal")
     },
@@ -366,7 +365,7 @@ object OperatorQueries {
       // range scan across every second-column value
       val df = Tables.customer(s, dir)
         .withColumn("c_bucket", ($"c_custkey" % 100).cast("long"))
-      val h = graft.sql.IndexedFrame.indexComposite(df, "c_bucket", "c_custkey",
+      val h = graft.sql.IndexedFrame.indexCompositeN(df, Seq("c_bucket", "c_custkey"),
         ordered = true)
       h.toDF.filter($"c_bucket".between(10L, 12L))
         .select($"c_bucket", $"c_custkey", $"c_acctbal")
@@ -406,14 +405,14 @@ object OperatorQueries {
       // same delete/update/insert clause semantics, delta cost
       val df = Tables.customer(s, dir)
         .withColumn("c_bucket", ($"c_custkey" % 100).cast("long"))
-      val h = graft.sql.IndexedFrame.indexComposite(df, "c_bucket", "c_custkey")
+      val h = graft.sql.IndexedFrame.indexCompositeN(df, Seq("c_bucket", "c_custkey"))
       val src = s.range(1, 31)
         .select(($"id" % 100).as("sb"), $"id".as("sk"),
           ($"id" % 5).cast("double").as("delta"))
         .union(s.range(1, 6)
           .select(lit(77L).as("sb"), ($"id" + 20000000L).as("sk"),
             ($"id" % 5).cast("double").as("delta")))
-      val merged = h.mergeFrame(src, "sb", "sk",
+      val merged = h.mergeFrame(src, Seq("sb", "sk"),
         deleteWhen = Some(col("s.delta") === 0.0),
         updateSet = Map("c_acctbal" -> (col("t.c_acctbal") + col("s.delta"))),
         insertValues = Map(
@@ -568,8 +567,7 @@ object OperatorQueries {
       // the final read happens in that reopened session, so the lane
       // proves durability, not cache reuse
       graft.sql.IndexedJoin.enable(s)
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_table").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_table")
       s.sql("DROP TABLE IF EXISTS graft_cat_customer")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.customer(s, dir).createOrReplaceTempView("cat_ctas_src")
@@ -602,8 +600,7 @@ object OperatorQueries {
       // REOPENED session (no in-session chain exists there): version 1
       // is the state after the UPDATE and before the DELETE
       graft.sql.IndexedJoin.enable(s)
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_tt").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_tt")
       s.sql("DROP TABLE IF EXISTS graft_cat_tt")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.customer(s, dir).createOrReplaceTempView("cat_tt_src")
@@ -628,8 +625,7 @@ object OperatorQueries {
       // base + deltas lands on the rolled-back content. Version 1 is
       // the state after the UPDATE; the DELETE (version 2) is undone.
       graft.sql.IndexedJoin.enable(s)
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_restore").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_restore")
       s.sql("DROP TABLE IF EXISTS graft_cat_restore")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.customer(s, dir).createOrReplaceTempView("cat_restore_src")
@@ -674,8 +670,7 @@ object OperatorQueries {
       // the base save, so a REOPENED session routes the secondary
       // probe with no rebuild — the read below happens in that session
       graft.sql.IndexedJoin.enable(s)
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_ddl").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_ddl")
       s.sql("DROP TABLE IF EXISTS graft_cat_ddl")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.customer(s, dir).createOrReplaceTempView("cat_ddl_src")
@@ -701,8 +696,7 @@ object OperatorQueries {
       // the merged result order-independent; the read happens in a
       // REOPENED session so it proves the log, not a cache.
       graft.sql.IndexedJoin.enable(s)
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_conc").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_conc")
       s.sql("DROP TABLE IF EXISTS graft_cat_conc")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.customer(s, dir).createOrReplaceTempView("cat_conc_src")
@@ -762,8 +756,7 @@ object OperatorQueries {
       // each under the schema current at ITS commit — to the evolved
       // state
       graft.sql.IndexedJoin.enable(s)
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_evolve").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_evolve")
       s.sql("DROP TABLE IF EXISTS graft_cat_evolve")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.customer(s, dir)
@@ -793,7 +786,7 @@ object OperatorQueries {
       graft.sql.IndexedJoin.enable(s)
       val df = Tables.customer(s, dir)
         .withColumn("c_bucket", ($"c_custkey" % 100).cast("long"))
-      val h = graft.sql.IndexedFrame.indexComposite(df, "c_bucket", "c_custkey")
+      val h = graft.sql.IndexedFrame.indexCompositeN(df, Seq("c_bucket", "c_custkey"))
       h.toDF.createOrReplaceTempView("dml_mrgc_corpus")
       s.range(1, 31)
         .select(($"id" % 100).as("sb"), $"id".as("sk"),
@@ -818,7 +811,7 @@ object OperatorQueries {
       // SQL-text MERGE at ARITY 3: the ON clause carries one equality
       // per key column and routes into the N-ary mergeFrame — the
       // multi-tenant (b1, b2, id) layout gets the same delta-cost DML
-      // surface as the 1- and 2-column handles
+      // surface as the single-key and two-column handles
       graft.sql.IndexedJoin.enable(s)
       val df = Tables.customer(s, dir)
         .withColumn("b1", ($"c_custkey" % 10).cast("long"))
@@ -962,8 +955,7 @@ object OperatorQueries {
       // with zero replays. RETAIN 72 HOURS first proves the
       // fresh-history no-op (all stamps are younger than the cutoff).
       graft.sql.IndexedJoin.enable(s)
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_vh").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_vh")
       s.sql("DROP TABLE IF EXISTS graft_cat_vh")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.customer(s, dir).createOrReplaceTempView("cat_vh_src")
@@ -1061,7 +1053,7 @@ object OperatorQueries {
       // inverted VALUE-column index on an N-ARY handle: pushed
       // equality on c_nationkey probes the postings then point-reads
       // the matching tuples — no corpus scan, same routing as the
-      // single-key and 2-column handles
+      // single-key and two-column handles
       val df = Tables.customer(s, dir)
         .withColumn("b1", ($"c_custkey" % 10).cast("long"))
         .withColumn("b2", ($"c_custkey" % 100).cast("long"))
@@ -1095,7 +1087,7 @@ object OperatorQueries {
       // -> count(*) answered from key runs (values never read), plus
       // count(DISTINCT leading) = boundary-adjusted run counts and
       // count(*)/min/max(leading) from index structure — all claimed
-      // by IndexedAgg on the N-ary handle exactly like the 2-ary one
+      // by IndexedAgg on the N-ary handle exactly like at arity 2
       graft.sql.IndexedAgg.enable(s)
       val df = Tables.customer(s, dir)
         .withColumn("b1", ($"c_custkey" % 10).cast("long"))
@@ -1264,7 +1256,7 @@ object OperatorQueries {
       // scan and NOT a driver-side cross product
       val df = Tables.customer(s, dir)
         .withColumn("c_bucket", ($"c_custkey" % 100).cast("long"))
-      val h = graft.sql.IndexedFrame.indexComposite(df, "c_bucket", "c_custkey",
+      val h = graft.sql.IndexedFrame.indexCompositeN(df, Seq("c_bucket", "c_custkey"),
         ordered = true)
       // (scan kind is set at execution; IndexedFrameSpec asserts this
       // exact shape takes the "range" lane, not point or full)
@@ -1306,12 +1298,12 @@ object OperatorQueries {
       // pushed LEADING-RANGE from the reloaded copy
       val df = Tables.customer(s, dir)
         .withColumn("c_bucket", ($"c_custkey" % 100).cast("long"))
-      val h = graft.sql.IndexedFrame.indexComposite(df, "c_bucket", "c_custkey",
+      val h = graft.sql.IndexedFrame.indexCompositeN(df, Seq("c_bucket", "c_custkey"),
         ordered = true)
       val path = registerTempDirForCleanup(
         java.nio.file.Files.createTempDirectory("graft_sql_frame_load_composite"))
       graft.sql.IndexedFrame.save(h, path)
-      val loaded = graft.sql.IndexedFrame.loadComposite(s, path)
+      val loaded = graft.sql.IndexedFrame.loadCompositeN(s, path)
       val range = loaded.toDF.filter($"c_bucket".between(10L, 12L))
         .select($"c_bucket", $"c_custkey", $"c_acctbal")
       val point = loaded.toDF
@@ -1330,8 +1322,8 @@ object OperatorQueries {
       // O(range)-tasks layout for composite range workloads at scale
       val df = Tables.customer(s, dir)
         .withColumn("c_bucket", ($"c_custkey" % 100).cast("long"))
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-        df, "c_bucket", "c_custkey", numPartitions = 16)
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+        df, Seq("c_bucket", "c_custkey"), numPartitions = 16)
       h.toDF.filter($"c_bucket".between(20L, 24L))
         .select($"c_bucket", $"c_custkey", $"c_acctbal")
     },
@@ -1346,7 +1338,7 @@ object OperatorQueries {
       graft.sql.IndexedAgg.enable(s)
       val df = Tables.customer(s, dir)
         .withColumn("c_bucket", ($"c_custkey" % 100).cast("long"))
-      val h = graft.sql.IndexedFrame.indexComposite(df, "c_bucket", "c_custkey",
+      val h = graft.sql.IndexedFrame.indexCompositeN(df, Seq("c_bucket", "c_custkey"),
         ordered = true)
       h.toDF.agg(count(lit(1)).as("cnt"),
         min($"c_bucket").as("min_bucket"), max($"c_bucket").as("max_bucket"))
@@ -1428,8 +1420,8 @@ object OperatorQueries {
       // a month of events" reads O(days) partitions, not O(corpus).
       val ev = Tables.events(s, dir)
         .select($"ts", $"event_id", $"user_id", $"value")
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-        ev, "ts", "event_id", numPartitions = 16)
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+        ev, Seq("ts", "event_id"), numPartitions = 16)
       h.toDF.filter($"ts" >= lit("2024-01-20 00:00:00").cast("timestamp") &&
           $"ts" < lit("2024-01-23 00:00:00").cast("timestamp"))
         .select(unix_millis($"ts").as("ts_ms"), $"event_id", $"user_id",
@@ -1462,9 +1454,9 @@ object OperatorQueries {
       // (user, ts) pairs (max-aggregate is order-insensitive).
       val g = Tables.events(s, dir).groupBy($"user_id", $"ts")
         .agg(round(max($"value"), 2).as("mv"))
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-        g, "user_id", "ts", 16)
-      h.asOf(5L, java.sql.Timestamp.valueOf("2024-01-20 00:00:00"))
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+        g, Seq("user_id", "ts"), 16)
+      h.asOf(Seq(5L), java.sql.Timestamp.valueOf("2024-01-20 00:00:00"))
         .select($"user_id", unix_millis($"ts").as("ts_ms"), $"mv")
     },
 
@@ -1475,7 +1467,7 @@ object OperatorQueries {
       // key, asOf(Seq(tenant, user), T) reads that entity's latest
       // version at-or-before T — one bounded floor descent over the
       // N-ary tuple byte space plus a point probe; the multi-tenant
-      // SCD lookup the 2-column asOf could not express
+      // SCD lookup a two-column key cannot express
       val g = Tables.events(s, dir).groupBy($"user_id", $"ts")
         .agg(round(max($"value"), 2).as("mv"))
         .withColumn("tenant", ($"user_id" % 5).cast("long"))
@@ -1495,7 +1487,7 @@ object OperatorQueries {
       val df = Tables.orders(s, dir)
         .withColumn("od", $"o_orderdate".cast("date"))
         .select($"od", $"o_orderkey", $"o_totalprice")
-      val h = graft.sql.IndexedFrame.indexComposite(df, "od", "o_orderkey",
+      val h = graft.sql.IndexedFrame.indexCompositeN(df, Seq("od", "o_orderkey"),
         ordered = true)
       h.toDF.filter($"od" >= lit("1996-01-01").cast("date") &&
           $"od" < lit("1996-04-01").cast("date"))
@@ -1513,8 +1505,8 @@ object OperatorQueries {
       graft.sql.IndexedTopK.enable(s)
       val ev = Tables.events(s, dir)
         .select($"ts", $"event_id", $"user_id", $"value")
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-        ev, "ts", "event_id", numPartitions = 16)
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+        ev, Seq("ts", "event_id"), numPartitions = 16)
       h.toDF.orderBy($"ts", $"event_id").limit(50)
         .select(unix_millis($"ts").as("ts_ms"), $"event_id",
           round($"value", 2).as("value"))
@@ -1568,8 +1560,8 @@ object OperatorQueries {
       // (c_mktsegment, c_custkey) clusters neither c_nationkey nor its
       // probes, but the shared inverted-index machinery routes the
       // pushed equality into point probes of PAIR keys all the same
-      val h = graft.sql.IndexedFrame.indexCompositeAny(
-        Tables.customer(s, dir), "c_mktsegment", "c_custkey")
+      val h = graft.sql.IndexedFrame.indexCompositeN(
+        Tables.customer(s, dir), Seq("c_mktsegment", "c_custkey"))
         .addSecondaryIndex("c_nationkey")
       val out = h.toDF.filter($"c_nationkey" === 7L)
         .select($"c_mktsegment", $"c_custkey", $"c_nationkey", $"c_acctbal")
@@ -1607,8 +1599,8 @@ object OperatorQueries {
       // table gets asked, with no row read and no value shipped
       graft.sql.IndexedAgg.enable(s)
       val ev = Tables.events(s, dir).select($"ts", $"event_id", $"value")
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-        ev, "ts", "event_id", 16)
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+        ev, Seq("ts", "event_id"), 16)
       h.toDF.filter($"ts" >= lit("2024-01-10 00:00:00").cast("timestamp") &&
           $"ts" < lit("2024-01-20 00:00:00").cast("timestamp"))
         .agg(count(lit(1)).as("cnt"), min($"ts").as("mn"), max($"ts").as("mx"))
@@ -1623,8 +1615,8 @@ object OperatorQueries {
       // partitions on the composite FULL lane
       val ev = Tables.events(s, dir)
         .select($"event_id", $"user_id", $"ts", $"value")
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-        ev, "event_id", "user_id", numPartitions = 16).analyzeZones("ts")
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+        ev, Seq("event_id", "user_id"), numPartitions = 16).analyzeZones("ts")
       h.toDF.filter($"ts" >= lit("2024-01-10 00:00:00").cast("timestamp") &&
           $"ts" < lit("2024-01-14 00:00:00").cast("timestamp"))
         .select($"event_id", $"user_id", round($"value", 2).as("value"))
@@ -1651,10 +1643,10 @@ object OperatorQueries {
       // layout is globally sorted in lexicographic pair order, so the
       // same O(n) covering-prefix read serves two-column sorts
       graft.sql.IndexedTopK.enable(s)
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
         Tables.orders(s, dir)
           .withColumn("o_bucket", (col("o_orderkey") % 97).cast("long")),
-        "o_bucket", "o_orderkey", numPartitions = 16)
+        Seq("o_bucket", "o_orderkey"), numPartitions = 16)
       h.toDF.orderBy($"o_bucket", $"o_orderkey").limit(50)
         .select($"o_bucket", $"o_orderkey", $"o_totalprice")
     },
@@ -1722,8 +1714,8 @@ object OperatorQueries {
       // covering-partition pick, O(page) at any depth
       graft.sql.IndexedTopK.enable(s)
       val ev = Tables.events(s, dir).select($"ts", $"event_id", $"value")
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-        ev, "ts", "event_id", 16)
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+        ev, Seq("ts", "event_id"), 16)
       h.toDF.filter($"ts" >= lit("2024-01-15 00:00:00").cast("timestamp"))
         .orderBy($"ts", $"event_id").limit(50)
         .select($"ts", $"event_id", round($"value", 2).as("value"))
@@ -1741,8 +1733,8 @@ object OperatorQueries {
       graft.sql.IndexedTopK.enable(s)
       val g = Tables.events(s, dir).groupBy($"user_id", $"ts")
         .agg(round(max($"value"), 2).as("mv"))
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-        g, "user_id", "ts", 16)
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+        g, Seq("user_id", "ts"), 16)
       h.toDF.filter($"user_id" === 7L &&
           $"ts" > lit("2024-01-05 00:00:00").cast("timestamp"))
         .orderBy($"ts").limit(20)
@@ -1777,8 +1769,8 @@ object OperatorQueries {
       graft.sql.IndexedAgg.enable(s)
       val g = Tables.events(s, dir).groupBy($"user_id", $"ts")
         .agg(round(max($"value"), 2).as("mv"))
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-        g, "user_id", "ts", 16)
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+        g, Seq("user_id", "ts"), 16)
       val all = h.toDF.groupBy($"user_id").agg(count(lit(1)).as("cnt"))
         .withColumn("scope", lit("all"))
       val windowed = h.toDF.filter($"user_id".between(5L, 15L))
@@ -1890,8 +1882,8 @@ object OperatorQueries {
       // both shuffling only the delta to the pair partitioning
       val base = Tables.customer(s, dir)
         .select($"c_mktsegment", $"c_custkey", $"c_acctbal")
-      val h = graft.sql.IndexedFrame.indexCompositeAny(
-        base, "c_mktsegment", "c_custkey")
+      val h = graft.sql.IndexedFrame.indexCompositeN(
+        base, Seq("c_mktsegment", "c_custkey"))
       val ups = base.filter($"c_custkey" % 10 === 4)
         .select($"c_mktsegment", $"c_custkey",
           ($"c_acctbal" + 100).as("c_acctbal"))
@@ -1988,8 +1980,8 @@ object OperatorQueries {
       // tuple serializer (lex string component self-delimits), and the
       // pushed two-column IN × IN routes into the tuple multiget —
       // 12 cross-product probes, 3 hits, no scan
-      val h = graft.sql.IndexedFrame.indexCompositeAny(
-        Tables.customer(s, dir), "c_name", "c_custkey")
+      val h = graft.sql.IndexedFrame.indexCompositeN(
+        Tables.customer(s, dir), Seq("c_name", "c_custkey"))
       h.toDF.filter(
           $"c_name".isin("Customer#000000002", "Customer#000000017",
             "Customer#000000123") &&
@@ -2005,8 +1997,8 @@ object OperatorQueries {
       // in a single multiRange pass (the lex-encoded string lead keeps
       // the concatenated tuple byte order lexicographic, so per-lead
       // second-column intervals are contiguous byte ranges)
-      val h = graft.sql.IndexedFrame.indexCompositeAny(
-        Tables.customer(s, dir), "c_mktsegment", "c_custkey", ordered = true)
+      val h = graft.sql.IndexedFrame.indexCompositeN(
+        Tables.customer(s, dir), Seq("c_mktsegment", "c_custkey"), ordered = true)
       h.toDF.filter(
           $"c_mktsegment".isin("BUILDING", "AUTOMOBILE") &&
             $"c_custkey".between(1L, 500L))
@@ -2088,10 +2080,10 @@ object OperatorQueries {
         .select($"c_mktsegment", $"c_custkey", $"c_acctbal")
       val names = Tables.customer(s, dir)
         .select($"c_mktsegment".as("m2"), $"c_custkey".as("k2"), $"c_name")
-      val h1 = graft.sql.IndexedFrame.indexCompositeAny(
-        base, "c_mktsegment", "c_custkey", numPartitions = 16)
-      val h2 = graft.sql.IndexedFrame.indexCompositeAny(
-        names, "m2", "k2", numPartitions = 16)
+      val h1 = graft.sql.IndexedFrame.indexCompositeN(
+        base, Seq("c_mktsegment", "c_custkey"), numPartitions = 16)
+      val h2 = graft.sql.IndexedFrame.indexCompositeN(
+        names, Seq("m2", "k2"), numPartitions = 16)
       h1.toDF.join(h2.toDF, $"c_mktsegment" === $"m2" && $"c_custkey" === $"k2")
         .select($"c_mktsegment", $"c_custkey", $"c_acctbal", $"c_name")
     },
@@ -2140,10 +2132,8 @@ object OperatorQueries {
       // (base + committed deltas) before batch 2 streams in — the
       // final state must equal the never-killed run, which is exactly
       // what the shared oracle replays
-      val ckpt = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_ir_stream_restart").toString
-      val engineCkpt = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_ir_stream_restart_q").toString
+      val ckpt = graft.LaneDirs.path("graft_ir_stream_restart")
+      val engineCkpt = graft.LaneDirs.path("graft_ir_stream_restart_q")
       new scala.reflect.io.Directory(new java.io.File(ckpt)).deleteRecursively()
       new scala.reflect.io.Directory(new java.io.File(engineCkpt)).deleteRecursively()
       val init = Tables.customer(s, dir)
@@ -2192,8 +2182,7 @@ object OperatorQueries {
       // backfill-then-tail (Delta CDF's shape): the version-0 corpus
       // arrives first as `insert` rows, then the retained deltas.
       graft.sql.IndexedJoin.enable(s)
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_feed").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_feed")
       s.sql("DROP TABLE IF EXISTS graft_cat_feed")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.customer(s, dir).select($"c_custkey", $"c_name", $"c_acctbal")
@@ -2226,8 +2215,7 @@ object OperatorQueries {
       // boundaries (snapshot+2, then 2 versions per batch) and
       // returns the accumulated feed, which must equal the unlimited
       // replay bit-for-bit.
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_feedlim").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_feedlim")
       s.sql("DROP TABLE IF EXISTS graft_cat_feedlim")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.customer(s, dir).filter($"c_custkey" <= 120)
@@ -2272,8 +2260,7 @@ object OperatorQueries {
       // byte-bounded rate limit (maxBytesPerTrigger) splits the
       // catch-up one version per batch — required in-lane — and the
       // accumulated feed must equal the unlimited replay bit-for-bit.
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_feedts").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_feedts")
       s.sql("DROP TABLE IF EXISTS graft_cat_feedts")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.customer(s, dir).filter($"c_custkey" <= 120)
@@ -2321,8 +2308,7 @@ object OperatorQueries {
       // cannot prune). Required in-lane: the box scan was zone-pruned
       // and kept FEWER than all partitions; the oracle proves the box
       // semantics bit-for-bit.
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_zorder").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_zorder")
       s.sql("DROP TABLE IF EXISTS graft_cat_zorder")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.events(s, dir)
@@ -2363,8 +2349,7 @@ object OperatorQueries {
       // permutation. Required in-lane: the box scan kept fewer
       // partitions than the hash CTAS layout's; the oracle proves the
       // box semantics bit-for-bit.
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_zorder3").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_zorder3")
       s.sql("DROP TABLE IF EXISTS graft_cat_zorder3")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.events(s, dir)
@@ -2407,8 +2392,7 @@ object OperatorQueries {
       // intersecting cells' directories. Required in-lane: the box
       // scan was served from the projection and kept FEWER than all
       // 256 cells; the oracle proves the box semantics bit-for-bit.
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_zvals").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_zvals")
       s.sql("DROP TABLE IF EXISTS graft_cat_zvals")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.events(s, dir).select($"event_id", $"user_id", $"value")
@@ -2453,8 +2437,7 @@ object OperatorQueries {
       // serves through the delta overlay exactly like the 2-dim form.
       // Required in-lane: projection-served scan, fewer than all 512
       // cells kept.
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_zvals3").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_zvals3")
       s.sql("DROP TABLE IF EXISTS graft_cat_zvals3")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.events(s, dir)
@@ -2497,8 +2480,7 @@ object OperatorQueries {
       // columns) — from the durable index-name manifest for catalog
       // tables, so a REOPENED session (which is what probes here) sees
       // exactly the indexes its DML maintains.
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_idxs").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_idxs")
       s.sql("DROP TABLE IF EXISTS graft_cat_idxs")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.events(s, dir).select($"event_id", $"user_id", $"value")
@@ -2524,10 +2506,8 @@ object OperatorQueries {
       // it fresh through later DML with no further GENERATE calls
       // (the post-commit refresh hook, Delta's
       // symlinkFormatManifest.enabled shape).
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_manstale").toString
-      val out = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_manstale_out").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_manstale")
+      val out = graft.LaneDirs.path("graft_cat_lane_manstale_out")
       s.sql("DROP TABLE IF EXISTS graft_cat_manstale")
       Seq(path, out).foreach(p => new scala.reflect.io.Directory(
         new java.io.File(p)).deleteRecursively())
@@ -2564,8 +2544,7 @@ object OperatorQueries {
       // replay applies every delta under the schema current at its
       // commit). Required in-lane: time travel to a pre-evolution
       // version still carries the OLD name and INT type.
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_evolve2").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_evolve2")
       s.sql("DROP TABLE IF EXISTS graft_cat_evolve2")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.customer(s, dir).filter($"c_custkey".between(1, 200))
@@ -2608,8 +2587,7 @@ object OperatorQueries {
       // ungated append aborts with nothing committed; the gated one
       // evolves + lands; the read happens REOPENED so evolution and
       // values replay from the durable log.
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_automerge").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_automerge")
       s.sql("DROP TABLE IF EXISTS graft_cat_automerge")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.customer(s, dir).filter($"c_custkey" <= 100)
@@ -2645,10 +2623,8 @@ object OperatorQueries {
       // redelivery of batch 0 in between. Required in-lane: each table
       // holds EXACTLY base + 2 versions (the redelivery skipped both
       // atomically); the oracle replays the final joint state.
-      val pc = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_txn_c").toString
-      val ps = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_txn_s").toString
+      val pc = graft.LaneDirs.path("graft_cat_lane_txn_c")
+      val ps = graft.LaneDirs.path("graft_cat_lane_txn_s")
       Seq("graft_cat_txn_c" -> pc, "graft_cat_txn_s" -> ps).foreach {
         case (t, p) =>
           s.sql(s"DROP TABLE IF EXISTS $t")
@@ -2695,8 +2671,7 @@ object OperatorQueries {
       // to the sequential chain, with zero user OPTIMIZE calls.
       // Required in-lane: a fold actually exists (the reopen read the
       // accelerated cover, not 12 raw deltas).
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_fold").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_fold")
       s.sql("DROP TABLE IF EXISTS graft_cat_fold")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.customer(s, dir).filter($"c_custkey".between(1, 300))
@@ -2739,8 +2714,7 @@ object OperatorQueries {
       // the SplitPartitioner round-trips through the save and keys
       // still route.
       graft.sql.IndexedJoin.enable(s)
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_reskew").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_reskew")
       s.sql("DROP TABLE IF EXISTS graft_cat_reskew")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.customer(s, dir).filter($"c_custkey".between(1, 100))
@@ -2772,8 +2746,7 @@ object OperatorQueries {
       // window, sidecar inventory — oracle against the fixture; the
       // row count reads O(partitions) off the index headers
       graft.sql.IndexedJoin.enable(s)
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_desc").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_desc")
       s.sql("DROP TABLE IF EXISTS graft_cat_desc")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.customer(s, dir).createOrReplaceTempView("cat_desc_src")
@@ -2795,10 +2768,8 @@ object OperatorQueries {
       // final read happens in a REOPENED session replaying the CLONE's
       // base + its one delta
       graft.sql.IndexedJoin.enable(s)
-      val srcPath = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_clone_src").toString
-      val dstPath = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_clone_dst").toString
+      val srcPath = graft.LaneDirs.path("graft_cat_lane_clone_src")
+      val dstPath = graft.LaneDirs.path("graft_cat_lane_clone_dst")
       s.sql("DROP TABLE IF EXISTS graft_cat_clone_src")
       s.sql("DROP TABLE IF EXISTS graft_cat_clone_dst")
       new scala.reflect.io.Directory(new java.io.File(srcPath)).deleteRecursively()
@@ -2833,8 +2804,7 @@ object OperatorQueries {
       // the sidecar is durable, so the final read in a REOPENED
       // session reflects exactly the statements that passed
       graft.sql.IndexedJoin.enable(s)
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_check").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_check")
       s.sql("DROP TABLE IF EXISTS graft_cat_check")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.customer(s, dir).createOrReplaceTempView("cat_check_src")
@@ -2868,10 +2838,8 @@ object OperatorQueries {
       // proves the _txn marker's exactly-once skip; the final read
       // happens in a REOPENED session replaying base + deltas.
       graft.sql.IndexedJoin.enable(s)
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_stream").toString
-      val engineCkpt = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_stream_q").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_stream")
+      val engineCkpt = graft.LaneDirs.path("graft_cat_lane_stream_q")
       s.sql("DROP TABLE IF EXISTS graft_cat_stream")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       new scala.reflect.io.Directory(new java.io.File(engineCkpt)).deleteRecursively()
@@ -3161,8 +3129,8 @@ object OperatorQueries {
       // leading-ts window prunes per key before bucketing.
       graft.sql.IndexedAgg.enable(s)
       val ev = Tables.events(s, dir).select($"ts", $"event_id", $"value")
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-        ev, "ts", "event_id", 16)
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+        ev, Seq("ts", "event_id"), 16)
       // the grouped fold keys on CATALYST'S date_trunc (timestamp);
       // the post-agg DATE cast only normalizes the output type, so the
       // oracle compares identically across DuckDB versions (date_trunc
@@ -3182,8 +3150,8 @@ object OperatorQueries {
       // zero data rows read, one (day, stats)-pair exchange
       graft.sql.IndexedAgg.enable(s)
       val ev = Tables.events(s, dir).select($"ts", $"event_id", $"value")
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-        ev, "ts", "event_id", 16)
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+        ev, Seq("ts", "event_id"), 16)
       h.toDF.groupBy(date_trunc("day", $"ts").as("d"))
         .agg(count(lit(1)).as("n"), min($"ts").as("first_ts"),
           max($"ts").as("last_ts"))
@@ -3309,8 +3277,8 @@ object OperatorQueries {
       // "timelines for this user batch" query; the corpus never scans.
       graft.sql.IndexedJoin.enable(s)
       val ev = Tables.events(s, dir).select($"user_id", $"event_id", $"value")
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-        ev, "user_id", "event_id", 16)
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+        ev, Seq("user_id", "event_id"), 16)
       val hd = h.toDF
       val p = s.range(0, 40).select(($"id" % 30 + 1).as("pu"), $"id".as("tag"))
       hd.join(p, hd("user_id") === p("pu"))
@@ -3328,8 +3296,8 @@ object OperatorQueries {
       // is never rescanned. The online feature-join shape.
       val versions = Tables.events(s, dir).groupBy($"user_id", $"ts")
         .agg(round(max($"value"), 2).as("mv"))
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-        versions, "user_id", "ts", 16)
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+        versions, Seq("user_id", "ts"), 16)
       val input = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, Long)]
       val acc = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
@@ -3339,7 +3307,7 @@ object OperatorQueries {
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[(Long, Long)], _: Long) =>
           val p = batch.toDF("pu0", "ptm")
             .select($"pu0".as("pu"), expr("timestamp_micros(ptm)").as("pt"))
-          val res = h.asOfJoinFrame(p, "pu", "pt")
+          val res = h.asOfJoinFrame(p, Seq("pu"), "pt")
           acc.synchronized { acc ++= res.collect() }
           ()
         }.start()
@@ -3353,7 +3321,7 @@ object OperatorQueries {
       } finally q.stop()
       val schema = h.asOfJoinFrame(
         s.range(0).select(lit(1L).as("pu"),
-          expr("timestamp_micros(0)").as("pt")), "pu", "pt").schema
+          expr("timestamp_micros(0)").as("pt")), Seq("pu"), "pt").schema
       s.createDataFrame(
         new java.util.ArrayList(scala.jdk.CollectionConverters
           .BufferHasAsJava(acc).asJava), schema)
@@ -3367,11 +3335,11 @@ object OperatorQueries {
       // version or for unknown entities — the feature-store default
       val versions = Tables.events(s, dir).groupBy($"user_id", $"ts")
         .agg(round(max($"value"), 2).as("mv"))
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-        versions, "user_id", "ts", 16)
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+        versions, Seq("user_id", "ts"), 16)
       val p = s.range(0, 200).select(($"id" % 40 + 1).as("pu"),
         expr("timestamp_micros((1704153600 + id * 9137) * 1000000)").as("pt"))
-      h.asOfJoinFrame(p, "pu", "pt", keepMisses = true)
+      h.asOfJoinFrame(p, Seq("pu"), "pt", keepMisses = true)
     },
 
     "ir_sql_asof_lookup" -> { (s, dir) =>
@@ -3387,11 +3355,11 @@ object OperatorQueries {
       // per-entity window max.
       val versions = Tables.events(s, dir).groupBy($"user_id", $"ts")
         .agg(round(max($"value"), 2).as("mv"))
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-        versions, "user_id", "ts", 16)
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+        versions, Seq("user_id", "ts"), 16)
       val p = s.range(0, 200).select(($"id" % 25 + 1).as("pu"),
         expr("timestamp_micros((1704153600 + id * 9137) * 1000000)").as("pt"))
-      h.asOfJoinFrame(p, "pu", "pt")
+      h.asOfJoinFrame(p, Seq("pu"), "pt")
     },
 
     "ir_sql_range_lookup_join" -> { (s, dir) =>
@@ -3508,8 +3476,8 @@ object OperatorQueries {
       // The "which entities exist" query at corpus scale.
       graft.sql.IndexedAgg.enable(s)
       val ev = Tables.events(s, dir).select($"user_id", $"event_id", $"value")
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-        ev, "user_id", "event_id", numPartitions = 16)
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+        ev, Seq("user_id", "event_id"), numPartitions = 16)
       h.toDF.select($"user_id").distinct()
     },
 
@@ -3523,8 +3491,8 @@ object OperatorQueries {
       // triples. Catalyst's default reads and exchanges every row.
       graft.sql.IndexedAgg.enable(s)
       val ev = Tables.events(s, dir).select($"user_id", $"event_id", $"value")
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-        ev, "user_id", "event_id", numPartitions = 16)
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+        ev, Seq("user_id", "event_id"), numPartitions = 16)
       h.toDF.groupBy($"user_id").agg(count(lit(1)).as("n"),
         min($"event_id").as("mn"), max($"event_id").as("mx"))
     },
@@ -3559,8 +3527,8 @@ object OperatorQueries {
       // Catalyst's default exchanges and sorts every row.
       graft.sql.IndexedWindow.enable(s)
       val ev = Tables.events(s, dir).select($"user_id", $"event_id", $"value")
-      val h = graft.sql.IndexedFrame.indexCompositeRangePartitioned(
-        ev, "user_id", "event_id", numPartitions = 16)
+      val h = graft.sql.IndexedFrame.indexCompositeNRangePartitioned(
+        ev, Seq("user_id", "event_id"), numPartitions = 16)
       h.toDF.withColumn("rn", row_number().over(
           org.apache.spark.sql.expressions.Window
             .partitionBy($"user_id").orderBy($"event_id")))

@@ -258,8 +258,7 @@ object PipelineQueries {
       // rebuild, no corpus rescan. nprobe = nlist here, so the result
       // must EQUAL exact brute-force top-k over the LIVE (mutated)
       // content — which is what the oracle computes.
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_ann").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_ann")
       s.sql("DROP TABLE IF EXISTS graft_cat_ann")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.embeddings(s, dir).createOrReplaceTempView("cat_ann_src")
@@ -286,8 +285,7 @@ object PipelineQueries {
       // REOPENED session probes; nprobe = nlist, so each query's
       // answer equals exact brute force over the live mutated content
       // — the oracle's cross-join window per query.
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_annb").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_annb")
       s.sql("DROP TABLE IF EXISTS graft_cat_annb")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.embeddings(s, dir).createOrReplaceTempView("cat_annb_src")
@@ -318,8 +316,7 @@ object PipelineQueries {
       // of one driver round-trip per query. nprobe = nlist and the
       // oracle replays sample, codebooks, per-query ADC and re-rank
       // bit-for-bit over the mutated content.
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_annbpq").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_annbpq")
       s.sql("DROP TABLE IF EXISTS graft_cat_annbpq")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.embeddings(s, dir).createOrReplaceTempView("cat_annbpq_src")
@@ -346,8 +343,7 @@ object PipelineQueries {
       // same pool-before-top-k SQL predicate as graft_ann's — each
       // query's k best AMONG live rows matching the filter, still one
       // job and still reading only the batch's probed lists.
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_annbf").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_annbf")
       s.sql("DROP TABLE IF EXISTS graft_cat_annbf")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.embeddings(s, dir).createOrReplaceTempView("cat_annbf_src")
@@ -376,8 +372,7 @@ object PipelineQueries {
       // unchanged by definition, and nprobe = nlist is exact for ANY
       // centroids — so the reopened-session probe must still equal
       // brute-force top-k over the live mutated content.
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_annr").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_annr")
       s.sql("DROP TABLE IF EXISTS graft_cat_annr")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.embeddings(s, dir).createOrReplaceTempView("cat_annr_src")
@@ -406,8 +401,7 @@ object PipelineQueries {
       // time-travel reader would be silently wrong. Probing the
       // PRE-DML version must therefore equal brute-force top-k over
       // the ORIGINAL corpus, no matter what committed afterwards.
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_annat").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_annat")
       s.sql("DROP TABLE IF EXISTS graft_cat_annat")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.embeddings(s, dir).createOrReplaceTempView("cat_annat_src")
@@ -437,8 +431,7 @@ object PipelineQueries {
       // statistics are asserted by the drift spec
       // (GraftVectorIndexSpec: skew rises under a shifted ingest,
       // falls after REINDEX).
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_annst").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_annst")
       s.sql("DROP TABLE IF EXISTS graft_cat_annst")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.embeddings(s, dir).createOrReplaceTempView("cat_annst_src")
@@ -459,8 +452,7 @@ object PipelineQueries {
       // by definition, so the probe must still equal brute-force top-k
       // over the live mutated content (the ann_catalog_topk oracle),
       // now served from compacted lists in a reopened session.
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_anno").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_anno")
       s.sql("DROP TABLE IF EXISTS graft_cat_anno")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.embeddings(s, dir).createOrReplaceTempView("cat_anno_src")
@@ -491,8 +483,7 @@ object PipelineQueries {
       // must EQUAL brute-force top-k over the filtered live content,
       // which is what the oracle computes (including the DML: deletes
       // drop out, appended twins carry their label).
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_annf").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_annf")
       s.sql("DROP TABLE IF EXISTS graft_cat_annf")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.embeddings(s, dir).createOrReplaceTempView("cat_annf_src")
@@ -521,8 +512,7 @@ object PipelineQueries {
       // oracle replays codebook training, residual code assignment,
       // ADC scores, and the exact re-rank bit-for-bit over the mutated
       // content (nprobe = nlist, shortlist 16·k = 320).
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_cat_lane_annpq").toString
+      val path = graft.LaneDirs.path("graft_cat_lane_annpq")
       s.sql("DROP TABLE IF EXISTS graft_cat_annpq")
       new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
       Tables.embeddings(s, dir).createOrReplaceTempView("cat_annpq_src")

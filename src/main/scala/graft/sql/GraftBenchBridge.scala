@@ -52,13 +52,6 @@ object GraftBenchBridge {
   }
 
   /** The composite-key twin of [[h1ScanInfo]]. */
-  def compositeScanInfo(sp: SparkSession, path: String): (String, Int) = {
-    val h = GraftTables.current(sp, path)._2.handleAny
-      .asInstanceOf[IndexedFrame.CompositeHandle[_, _]]
-    (h.lastScanKind, h.lastZoneKept)
-  }
-
-  /** The N-ary composite-key twin of [[h1ScanInfo]]. */
   def compositeNScanInfo(sp: SparkSession, path: String): (String, Int) = {
     val h = GraftTables.current(sp, path)._2.handleAny
       .asInstanceOf[IndexedFrame.CompositeNHandle]

@@ -306,7 +306,7 @@ class GraftTimeTravelRule(session: SparkSession) extends Rule[LogicalPlan] {
 
 /** The post-hoc DML rewrite. One instance per session. */
 class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
-  import IndexedFrame.{CompositeHandle, CompositeNHandle, CompositeNRelation, CompositeRelation, Handle, IndexedRelation}
+  import IndexedFrame.{CompositeNHandle, CompositeNRelation, Handle, IndexedRelation}
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
     case m: MergeIntoTable if m.resolved => rewriteMerge(m).getOrElse(m)
@@ -367,36 +367,6 @@ class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
         def overwrite(sp: SparkSession, rows: DataFrame): DataFrame = {
           implicit val s0: SparkSession = sp
           h.deleteFrame(h.toDF.select(h.keyCol)).upsertFrame(rows).toDF(sp)
-        }
-      })
-    case r: CompositeRelation[_, _] =>
-      val h: CompositeHandle[_, _] = r.h
-      Some(new Adapter {
-        def keyCols: Seq[String] = Seq(h.keyColA, h.keyColB)
-        def schema: StructType = h.schema
-        def df(sp: SparkSession): DataFrame = h.toDF(sp)
-        def upsert(sp: SparkSession, rows: DataFrame): DataFrame =
-          h.upsertFrame(rows).toDF(sp)
-        def delete(sp: SparkSession, keys: DataFrame): DataFrame =
-          h.deleteFrame(keys).toDF(sp)
-        def merge(sp: SparkSession, src: DataFrame, srcKeys: Seq[String],
-            spec: MergeSpec): DataFrame =
-          h.mergeFrame(src, srcKeys.head, srcKeys(1), spec.deleteWhen,
-            spec.updateWhen, spec.updateSet, spec.insertWhen,
-            spec.insertValues,
-            notBySourceDeleteWhen = spec.nbsDeleteWhen,
-            notBySourceUpdateWhen = spec.nbsUpdateWhen,
-            notBySourceUpdateSet = spec.nbsUpdateSet)(sp).toDF(sp)
-        def mergeSets(sp: SparkSession, src: DataFrame, srcKeys: Seq[String],
-            spec: MergeSpec): IndexedFrame.MergeSets =
-          h.mergeChangeSets(src, srcKeys.head, srcKeys(1), spec.deleteWhen,
-            spec.updateWhen, spec.updateSet, spec.insertWhen,
-            spec.insertValues, insertAll = false, spec.nbsDeleteWhen,
-            spec.nbsUpdateWhen, spec.nbsUpdateSet)(sp)
-        def overwrite(sp: SparkSession, rows: DataFrame): DataFrame = {
-          implicit val s0: SparkSession = sp
-          h.deleteFrame(h.toDF.select(h.keyColA, h.keyColB))
-            .upsertFrame(rows).toDF(sp)
         }
       })
     case r: CompositeNRelation =>
@@ -1200,7 +1170,6 @@ object GraftSqlExtension {
 
   private def graftHandleOf(rel: BaseRelation): Option[DdlHandle] = rel match {
     case r: IndexedFrame.IndexedRelation[_] => Some(r.h)
-    case r: IndexedFrame.CompositeRelation[_, _] => Some(r.h)
     case r: IndexedFrame.CompositeNRelation => Some(r.h)
     case _ => None
   }
@@ -1281,8 +1250,6 @@ object GraftSqlExtension {
 
   private def relKeyCols(rel: BaseRelation): Option[Seq[String]] = rel match {
     case r: IndexedFrame.IndexedRelation[_] => Some(Seq(r.h.keyCol))
-    case r: IndexedFrame.CompositeRelation[_, _] =>
-      Some(Seq(r.h.keyColA, r.h.keyColB))
     case r: IndexedFrame.CompositeNRelation => Some(r.h.keyCols)
     case _ => None
   }

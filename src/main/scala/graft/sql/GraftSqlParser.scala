@@ -252,7 +252,7 @@ case class GraftOptimizeCommand(view: String,
     AttributeReference("lineage_depth_after", IntegerType, nullable = false)())
 
   override def run(sp: SparkSession): Seq[Row] = {
-    import IndexedFrame.{CompositeNRelation, CompositeRelation, IndexedRelation}
+    import IndexedFrame.{CompositeNRelation, IndexedRelation}
     // catalog tables compact their on-disk delta log: the current
     // content becomes a fresh base save and replay cost resets to one
     // load — the durable twin of the view-snapshot compaction below
@@ -273,11 +273,6 @@ case class GraftOptimizeCommand(view: String,
       GraftSqlParser.graftViewRelation(sp, view, "OPTIMIZE")
     val (df, rows, parts, dBefore, dAfter) = rel match {
       case r: IndexedRelation[_] =>
-        val db = r.h.idx.lineageDepth
-        val c = r.h.compacted
-        (c.toDF(sp), c.idx.count(), c.idx.partitions.length, db,
-          c.idx.lineageDepth)
-      case r: CompositeRelation[_, _] =>
         val db = r.h.idx.lineageDepth
         val c = r.h.compacted
         (c.toDF(sp), c.idx.count(), c.idx.partitions.length, db,

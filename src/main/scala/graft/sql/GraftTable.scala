@@ -131,13 +131,13 @@ class GraftTableProvider extends RelationProvider
 }
 
 /** The store behind [[GraftTableProvider]]: handle build/save/load
-  * dispatch over the three key arities, the per-statement delta log,
-  * and a per-SESSION live-handle cache (weak-keyed like the DML
-  * version chains) so repeated queries reuse the cached index and a
-  * genuinely new session reloads — and therefore honestly replays —
-  * from disk. */
+  * dispatch over the two key kinds (single and composite), the
+  * per-statement delta log, and a per-SESSION live-handle cache
+  * (weak-keyed like the DML version chains) so repeated queries reuse
+  * the cached index and a genuinely new session reloads — and
+  * therefore honestly replays — from disk. */
 private[sql] object GraftTables {
-  import IndexedFrame.{CompositeHandle, CompositeNHandle, Handle}
+  import IndexedFrame.{CompositeNHandle, Handle}
 
   // ------------------------------------------- object-store semantics
   //
@@ -229,28 +229,6 @@ private[sql] object GraftTables {
       H1(h.withRemappedSchema(newSchema, positions))
     def reskew(maxRowsPerPartition: Long): TableHandle =
       H1(h.reskewed(maxRowsPerPartition))
-  }
-
-  private final case class H2(h: CompositeHandle[_, _]) extends TableHandle {
-    def keyCols: Seq[String] = Seq(h.keyColA, h.keyColB)
-    def schema: StructType = h.schema
-    def toDF(sp: SparkSession): DataFrame = h.toDF(sp)
-    def relation(sp: SparkSession): BaseRelation =
-      new IndexedFrame.CompositeRelation(h)(sp.sqlContext)
-    def delete(keys: DataFrame): TableHandle = H2(h.deleteFrame(keys))
-    def upsert(rows: DataFrame): TableHandle = H2(h.upsertFrame(rows))
-    def saveTo(path: String): Unit = IndexedFrame.save(h, path)
-    def idxAny: graft.IndexedRDD[_, _] = h.idx
-    def handleAny: AnyRef = h
-    def maintainSidecarsFrom(old: TableHandle,
-        del: Option[DataFrame], up: Option[DataFrame]): Unit =
-      h.maintainSidecarsFrom(old.handleAny, del, up)
-    def widen(newSchema: StructType): TableHandle =
-      H2(h.withWidenedSchema(newSchema))
-    def remap(newSchema: StructType, positions: Array[Int]): TableHandle =
-      H2(h.withRemappedSchema(newSchema, positions))
-    def reskew(maxRowsPerPartition: Long): TableHandle =
-      H2(h.reskewed(maxRowsPerPartition))
   }
 
   private final case class HN(h: CompositeNHandle) extends TableHandle {
@@ -412,8 +390,6 @@ private[sql] object GraftTables {
         case _ =>
           H1(IndexedFrame.index(data, k, ordered, parts))
       }
-      case Seq(a, b) =>
-        H2(IndexedFrame.indexCompositeAny(data, a, b, ordered, parts, uuidCols))
       case ks =>
         HN(IndexedFrame.indexCompositeN(data, ks, ordered, parts, uuidCols))
     }
@@ -2168,8 +2144,7 @@ private[sql] object GraftTables {
       try { in.readObject(); in.readBoolean(); in.readObject().asInstanceOf[String] }
       finally in.close()
     tag match {
-      case "composite" => H2(IndexedFrame.loadComposite(sp, path))
-      case "compositeN" => HN(IndexedFrame.loadCompositeN(sp, path))
+      case "composite" | "compositeN" => HN(IndexedFrame.loadCompositeN(sp, path))
       case _ => H1(IndexedFrame.load(sp, path))
     }
   }
@@ -3685,13 +3660,13 @@ private[sql] object GraftTables {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** The base-rewrite transform behind `OPTIMIZE t ZORDER BY (x, y)`:
-    * re-cluster the rewritten base along the Morton curve of the
-    * table's TWO composite key columns and analyze zone maps on both
-    * (see [[IndexedFrame.CompositeHandle.zOrdered]] — under the Morton
+  /** The base-rewrite transform behind `OPTIMIZE t ZORDER BY (x, y,
+    * ...)`: re-cluster the rewritten base along the z-curve of the
+    * table's composite key columns and analyze zone maps on all of them
+    * (see [[IndexedFrame.CompositeNHandle.zOrderedN]] — under a z-curve
     * layout key columns zone-map like any clustered value column, and
-    * the zone path is what prunes 2-D box queries). Restricted to the
-    * key columns BY DESIGN: partition assignment must stay a pure key
+    * the zone path is what prunes box queries). Restricted to the key
+    * columns BY DESIGN: partition assignment must stay a pure key
     * function or point routing and one-sided COW shuffles break — a
     * keyed store cannot re-cluster by non-key columns; key the table
     * by the dimensions instead. */
@@ -3700,21 +3675,6 @@ private[sql] object GraftTables {
     zorder match {
       case None => identity
       case Some(dims) => {
-        case H2(ch) =>
-          require(dims.toSet == Set(ch.keyColA, ch.keyColB),
-            s"ZORDER BY must name exactly the table's composite key " +
-              s"columns (${ch.keyColA}, ${ch.keyColB}); a keyed store " +
-              "cannot re-cluster by non-key columns without losing key " +
-              "routing — key the table by the z dimensions instead")
-          val swapped = dims.head == ch.keyColB
-          // raw-bit Morton fast path for 2xLong keys; rank-space for
-          // any other ordered component type (same layout guarantees)
-          val z =
-            if (ch.codecA.isInstanceOf[IndexedFrame.LongCodec] &&
-                ch.codecB.isInstanceOf[IndexedFrame.LongCodec])
-              ch.zOrdered(swapped)
-            else ch.zOrderedRank(swapped)
-          H2(z.analyzeZones(dims: _*))
         case HN(ch) =>
           HN(ch.zOrderedN(dims).analyzeZones(dims: _*))
         case other => throw new IllegalArgumentException(

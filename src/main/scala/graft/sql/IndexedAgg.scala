@@ -80,7 +80,6 @@ object IndexedAgg {
     private def bareRelation(p: LogicalPlan): Option[IndexedFrame.StatsCapable] = p match {
       case lr: LogicalRelation => lr.relation match {
         case rel: IndexedFrame.IndexedRelation[_] => Some(rel.h)
-        case rel: IndexedFrame.CompositeRelation[_, _] => Some(rel.h)
         case rel: IndexedFrame.CompositeNRelation => Some(rel.h)
         case _ => None
       }

@@ -1044,16 +1044,14 @@ object IndexedFrame {
         probe: RDD[InternalRow], keyIdx: Int): RDD[(InternalRow, InternalRow)]
   }
 
-  /** The stats surface [[IndexedAgg]] plans against, implemented by
-    * single-key AND composite handles: `count(*)` from index sizes and
-    * — when the index can answer them in the column's natural order —
-    * `min/max` of ONE column from O(depth) radix descents, already
-    * converted to the column's external Scala form (a SQL literal of
-    * the column type converts from it directly; UUID handles hand back
-    * the canonical string, Int/Short keys narrow back from Long). */
+  /** Spec hook: runs at the start of each (secondary column, aggregate
+    * column) grouped-fold carry inside a DML commit — tests install a
+    * throwing hook to show a failed carry never fails the statement. */
+  private[sql] var foldCarryHook: (String, String) => Unit = (_, _) => ()
+
   /** VALUE-column → primary-key inverted indexes, shared by single-key
     * AND composite handles (K is the primary key type — a scalar or a
-    * pair): [[addSecondaryIndex]] pays one shuffle of (value, key)
+    * key tuple): [[addSecondaryIndex]] pays one shuffle of (value, key)
     * pairs — never the rows — and builds an [[graft.IndexedRDD]] keyed
     * by the value column, holding the primary keys per value. A pushed
     * equality/IN on that column then serves as TWO partition-pruned
@@ -1914,7 +1912,8 @@ object IndexedFrame {
       *  - the delta exceeds [[IndexedFrame.FilteredAggCarryCap]] per
       *    partition (bounded driver traffic), or either column's type
       *    changed, or the post-statement distinct count left the memo
-      *    gate.
+      *    gate;
+      *  - the carry itself throws (any non-fatal error).
       * Sums are exact under retraction by construction: fp folds in
       * BigDecimal (error-free, order-independent) and integral in
       * checked Long. */
@@ -2078,7 +2077,15 @@ object IndexedFrame {
             .foreach { case (k, f) => out += (k -> f) }
           Some(out.result())
         }
-        carry().foreach(secGroupAggMemo.put((secCol, aggCol), _))
+        // a pure optimization: a failed carry drops the memo entry
+        // (the next probe refolds lazily) and never fails the commit
+        try {
+          foldCarryHook(secCol, aggCol)
+          carry().foreach(secGroupAggMemo.put((secCol, aggCol), _))
+        } catch {
+          case scala.util.control.NonFatal(_) =>
+            secGroupAggMemo.remove((secCol, aggCol))
+        }
       }
     }
 
@@ -2160,12 +2167,9 @@ object IndexedFrame {
         asc: Boolean): Seq[InternalRow] =
       throw new UnsupportedOperationException("unfiltered top-k only")
 
+    // a paging session walks tens of distinct cursors
     @transient private lazy val topKMemo =
-      new java.util.LinkedHashMap[(String, Int, Boolean), Seq[InternalRow]](8, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Int, Boolean), Seq[InternalRow]]): Boolean =
-          size > 32 // a paging session walks tens of distinct cursors
-      }
+      new SnapshotLru[(String, Int, Boolean), Seq[InternalRow]](32)
 
     /** First/last `n` rows in layout order (within the met interval of
       * `fs`, when given) — O(n) rows read from the covering partitions
@@ -2176,20 +2180,36 @@ object IndexedFrame {
       // filters on one immutable handle target one key column of one
       // type, so their rendered forms are collision-free memo tokens
       val sig = fs.map(_.toString).sorted.mkString("&")
-      topKMemo.synchronized { Option(topKMemo.get((sig, n, asc))) } match {
-        case Some(rows) => rows
-        case None =>
-          val rows =
-            if (fs.isEmpty) fetchOrderedRows(n, asc)
-            else fetchOrderedRowsInRange(fs, n, asc)
-          if (n <= 2048) topKMemo.synchronized {
-            topKMemo.put((sig, n, asc), rows); ()
-          }
-          rows
-      }
+      def fetch: Seq[InternalRow] =
+        if (fs.isEmpty) fetchOrderedRows(n, asc)
+        else fetchOrderedRowsInRange(fs, n, asc)
+      if (n <= 2048) topKMemo.getOrCompute((sig, n, asc))(fetch) else fetch
     }
   }
 
+  /** LRU-capped driver memo of values computed on ONE immutable
+    * snapshot: entries never go stale (COW mutations return a new
+    * handle with fresh memos), so a hit answers with no job at all. */
+  private[sql] final class SnapshotLru[K, V](cap: Int) {
+    private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+        size > cap
+    }
+    def getOrCompute(k: K)(compute: => V): V =
+      m.synchronized(Option(m.get(k))).getOrElse {
+        val v = compute
+        m.synchronized { m.put(k, v); () }
+        v
+      }
+  }
+
+  /** The stats surface [[IndexedAgg]] plans against, implemented by
+    * single-key AND composite handles: `count(*)` from index sizes and
+    * — when the index can answer them in the column's natural order —
+    * `min/max` of ONE column from O(depth) radix descents, already
+    * converted to the column's external Scala form (a SQL literal of
+    * the column type converts from it directly; UUID handles hand back
+    * the canonical string, Int/Short keys narrow back from Long). */
   private[sql] trait StatsCapable {
     /** Column whose min/max the index answers in natural order, if any. */
     private[sql] def statsKeyCol: Option[String]
@@ -2552,7 +2572,7 @@ object IndexedFrame {
     * when the pushed filters box its columns: Some((kept zb cells,
     * rows in `schema` field order)); None = no projection attached or
     * no pushed comparison constrains either projected column (the
-    * primary serves). Shared by all three relation arities — the
+    * primary serves). Shared by both relation kinds — the
     * projection itself is handle-kind-agnostic. */
   private[sql] def zProjServe(sqlContext: SQLContext,
       zp: Option[ZProjection.ZProjInfo], schema: StructType,
@@ -3019,54 +3039,27 @@ object IndexedFrame {
       }
     }
 
-    // range-count twin of the probe memo: counts on an immutable
-    // snapshot never go stale, so a repeated bounded interval answers
-    // with no job at all (LRU-capped; a count is 8 bytes, the cap just
+    // range-count twin of the probe memo: a repeated bounded interval
+    // answers with no job at all (a count is 8 bytes, the cap just
     // bounds the key strings)
-    @transient private lazy val rangeCountMemo =
-      new java.util.LinkedHashMap[(K, K), java.lang.Long](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(K, K), java.lang.Long]): Boolean = size > 64
-      }
+    @transient private lazy val rangeCountMemo = new SnapshotLru[(K, K), Long](64)
     override private[sql] def rangeCountFor(fs: Seq[Filter]): Option[() => Long] =
       boundedIntervalOf(fs).map {
         case None => () => 0L
         case Some((lo, hi)) => () =>
-          rangeCountMemo.synchronized {
-            Option(rangeCountMemo.get((lo, hi)))
-          } match {
-            case Some(c) => c.longValue()
-            case None =>
-              val c = idx.rangeCount(lo, hi)(kSer)
-              rangeCountMemo.synchronized {
-                rangeCountMemo.put((lo, hi), java.lang.Long.valueOf(c)); ()
-              }
-              c
-          }
+          rangeCountMemo.getOrCompute((lo, hi))(idx.rangeCount(lo, hi)(kSer))
       }
 
     @transient private lazy val rangeExtremaMemo =
-      new java.util.LinkedHashMap[(K, K), (Option[Any], Option[Any])](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(K, K), (Option[Any], Option[Any])]): Boolean =
-          size > 64
-      }
+      new SnapshotLru[(K, K), (Option[Any], Option[Any])](64)
     override private[sql] def rangeExtremaFor(
         fs: Seq[Filter]): Option[() => (Option[Any], Option[Any])] =
       boundedIntervalOf(fs).map {
         case None => () => (None, None)
         case Some((lo, hi)) => () =>
-          rangeExtremaMemo.synchronized {
-            Option(rangeExtremaMemo.get((lo, hi)))
-          } match {
-            case Some(r) => r
-            case None =>
-              val (mn, mx) = idx.rangeExtrema(lo, hi)(kSer)
-              val r = (mn.map(codec.toExternalSql), mx.map(codec.toExternalSql))
-              rangeExtremaMemo.synchronized {
-                rangeExtremaMemo.put((lo, hi), r); ()
-              }
-              r
+          rangeExtremaMemo.getOrCompute((lo, hi)) {
+            val (mn, mx) = idx.rangeExtrema(lo, hi)(kSer)
+            (mn.map(codec.toExternalSql), mx.map(codec.toExternalSql))
           }
       }
 
@@ -3818,1314 +3811,8 @@ object IndexedFrame {
       case _ => specFor(schema, col, uuid = false)
     }
 
-  /** COMPOSITE two-column key handle (reference treats Tuple2 keys as
-    * first-class — Tuple2Serializer, reference KeySerializer.scala:
-    * 145-176): rows are indexed by the (leading, second) key pair
-    * through [[KeySerializer.ConcatTuple2Serializer]] (component
-    * prefix-freedom makes the unprefixed concatenation both prefix-free
-    * and, for order-preserving components, lexicographically
-    * order-preserving — variable-width string leads included), and
-    * pushed predicates route as
-    *
-    *  - conjunctive equality/IN on BOTH columns → partition-pruned
-    *    `multiget` over the cross product of the pushed key sets;
-    *  - equality or range on the LEADING column alone (ordered
-    *    handles) → radix-trie range scan over the tuple byte space —
-    *    a leading-column interval is one contiguous byte range;
-    *  - leading equality/IN × second-column range (ordered handles) →
-    *    one disjoint trie interval per leading value in a single
-    *    multiRange pass;
-    *  - anything else → indexed full scan, Spark re-applies residuals.
-    */
-  class CompositeHandle[A, B](val idx: IndexedRDD[(A, B), InternalRow],
-      val keyColA: String, val keyColB: String, val schema: StructType,
-      val ordered: Boolean,
-      private[sql] val codecA: KeyCodec[A], private[sql] val codecB: KeyCodec[B])(
-      implicit private[sql] val ctA: ClassTag[A],
-      private[sql] val ctB: ClassTag[B],
-      private[sql] val serA: KeySerializer[A],
-      private[sql] val serB: KeySerializer[B])
-      extends Serializable with StatsCapable with JoinableHandle
-      with ZoneMapped with TopKServable with SecondaryCapable[(A, B)] {
-    override protected def secTag: ClassTag[(A, B)] = implicitly
-    override protected def secondaryForbiddenCols: Set[String] =
-      Set(keyColA, keyColB)
-    override private[sql] def filteredAggFor(secCol: String, aggCol: String)
-        : Option[Any => Option[GroupAgg]] =
-      secondaryFilteredAggFor(secCol, aggCol)
-
-    private[sql] implicit val tupSer: KeySerializer[(A, B)] =
-      new KeySerializer.ConcatTuple2Serializer[A, B](serA, serB)
-    private[sql] val tupleOrd: Ordering[(A, B)] =
-      Ordering.Tuple2(codecA.ord, codecB.ord)
-
-    override private[sql] def idxAny: IndexedRDD[Any, InternalRow] =
-      idx.asInstanceOf[IndexedRDD[Any, InternalRow]]
-    override private[sql] def joinKeyCols: Seq[String] = Seq(keyColA, keyColB)
-    override private[sql] def keyTypeTag: String =
-      s"composite:${codecTag(codecA)},${codecTag(codecB)}"
-    override private[sql] def zoneKeyCols: Set[String] =
-      // under a Morton layout the key lanes do NOT serve interval
-      // filters (no natural-order descent), so the key columns are
-      // zone-mapped like any clustered value column — per-partition
-      // min/max of both dims are tight 2-D boxes there, and the zone
-      // path is what prunes box queries. COW ops preserve the
-      // partitioner, so the permission survives DML.
-      if (idx.partitioner.exists(p =>
-          p.isInstanceOf[graft.IndexedRDD.MortonPartitioner] ||
-            p.isInstanceOf[graft.IndexedRDD.RankZPartitioner]))
-        Set.empty
-      else Set(keyColA, keyColB)
-
-    /** Z-ORDERED rebuild (the engine under `OPTIMIZE t ZORDER BY (a,
-      * b)`): redistribute this handle's rows so each partition holds a
-      * z-CONTIGUOUS (Morton-contiguous) slice of the (a, b) key space
-      * — equal-depth bounds sampled from the data — then re-index per
-      * partition. One corpus shuffle, same cost class as any base
-      * rewrite. Key routing stays exact (the partitioner is a pure key
-      * function); leading-range descents decline (not a
-      * RangePartitioner) and 2-D box queries prune through zone maps
-      * on the key columns instead — call `analyzeZones(a, b)` on the
-      * result (the catalog OPTIMIZE does). Both key components must be
-      * integral/temporal (Long-coded). `swapped` = the interleave
-      * leads with `keyColB`. */
-    def zOrdered(swapped: Boolean = false): CompositeHandle[A, B] = {
-      require(codecA.isInstanceOf[LongCodec] && codecB.isInstanceOf[LongCodec],
-        "ZORDER needs integral/temporal key components — " +
-          s"($keyColA, $keyColB) are ${codecTag(codecA)}/${codecTag(codecB)}")
-      val bits = 31
-      val parts = math.max(1, idx.partitions.length)
-      val pairs = idx.asInstanceOf[RDD[((Long, Long), InternalRow)]]
-      def z(k: (Long, Long)): Long =
-        if (swapped) graft.operators.ZOrder.interleave(k._2, k._1, bits)
-        else graft.operators.ZOrder.interleave(k._1, k._2, bits)
-      // equal-depth bounds from a bounded sample (what RangePartitioner
-      // does): O(parts) driver bytes regardless of corpus size
-      val sample = pairs.keys.map(z)
-        .takeSample(withReplacement = false, num = math.max(1024, parts * 64))
-        .sorted
-      val bounds =
-        if (sample.isEmpty) Array.empty[Long]
-        else {
-          val step = sample.length.toDouble / parts
-          (1 until parts).map(i =>
-            sample(math.min(sample.length - 1, (i * step).toInt)))
-            .distinct.toArray
-        }
-      val mp = new graft.IndexedRDD.MortonPartitioner(bounds, bits, swapped)
-      val redist = pairs.partitionBy(mp)
-        .asInstanceOf[RDD[((A, B), InternalRow)]]
-      new CompositeHandle[A, B](IndexedRDD(redist).cached,
-        keyColA, keyColB, schema, ordered = false, codecA, codecB)
-    }
-
-    /** RANK-SPACE z-ordered rebuild — serves `OPTIMIZE ... ZORDER BY`
-      * when a key component is NOT Long-coded (strings, UUIDs,
-      * decimals), where the raw-bit [[zOrdered]] interleave cannot
-      * apply: each component maps to its equal-depth bucket rank
-      * first (see [[CompositeNHandle.zOrderedN]] — same kernel).
-      * `swapped` = `keyColB` leads the interleave. */
-    def zOrderedRank(swapped: Boolean = false): CompositeHandle[A, B] = {
-      val perm = if (swapped) Array(1, 0) else Array(0, 1)
-      val cods = Array[KeyCodec[_]](codecA, codecB)
-      val ords = perm.map(i => cods(i).ord.asInstanceOf[Ordering[Any]])
-      val parts = math.max(1, idx.partitions.length)
-      val sample = idx.keys
-        .takeSample(withReplacement = false,
-          num = math.max(1024, parts * 64))
-      def comp(k: Any, i: Int): Any = {
-        val t = k.asInstanceOf[(A, B)]
-        if (i == 0) t._1 else t._2
-      }
-      val mp = IndexedFrame.rankZFor(sample.asInstanceOf[Array[Any]],
-        comp, ords, perm, parts)
-      val redist = idx.asInstanceOf[RDD[((A, B), InternalRow)]]
-        .partitionBy(mp)
-      new CompositeHandle[A, B](IndexedRDD(redist).cached,
-        keyColA, keyColB, schema, ordered = false, codecA, codecB)
-    }
-
-    private def keyedProbe(probe: RDD[InternalRow], iA: Int,
-        iB: Int): RDD[((A, B), InternalRow)] = {
-      val cA = codecA
-      val cB = codecB
-      probe.mapPartitions(_.flatMap { r =>
-        if (r.isNullAt(iA) || r.isNullAt(iB)) Iterator.empty
-        else Iterator.single(((cA.fromRow(r, iA), cB.fromRow(r, iB)), r.copy()))
-      })
-    }
-    private def keyedProbeNullable(probe: RDD[InternalRow], iA: Int,
-        iB: Int): RDD[(Any, InternalRow)] = {
-      val cA = codecA
-      val cB = codecB
-      probe.mapPartitions(_.map { r =>
-        (if (r.isNullAt(iA) || r.isNullAt(iB)) null
-         else ((cA.fromRow(r, iA), cB.fromRow(r, iB)): Any), r.copy())
-      })
-    }
-    override private[sql] def lookupJoinRows(probe: RDD[InternalRow],
-        keyIdxs: Array[Int], keepMisses: Boolean): RDD[(InternalRow, InternalRow)] =
-      if (!keepMisses)
-        idx.lookupJoinStream(keyedProbe(probe, keyIdxs(0), keyIdxs(1)))(
-          (_, v, u) => (v, u))
-      else
-        idx.lookupJoinStreamNullable(
-          keyedProbeNullable(probe, keyIdxs(0), keyIdxs(1)))(
-          (_, v, u) => (v, u), u => (null.asInstanceOf[InternalRow], u))
-    override private[sql] def lookupSemiRows(probe: RDD[InternalRow],
-        keyIdxs: Array[Int], anti: Boolean): RDD[InternalRow] = {
-      val cA = codecA
-      val cB = codecB
-      val iA = keyIdxs(0)
-      val iB = keyIdxs(1)
-      val keys = probe.mapPartitions(_.flatMap { r =>
-        if (r.isNullAt(iA) || r.isNullAt(iB)) Iterator.empty
-        else Iterator.single((cA.fromRow(r, iA), cB.fromRow(r, iB)))
-      })
-      idx.lookupSemiStream(keys, anti).map(_._2)
-    }
-    override private[sql] def lookupProbeFilter(probe: RDD[InternalRow],
-        keyIdxs: Array[Int], anti: Boolean): RDD[InternalRow] =
-      if (!anti)
-        idx.lookupJoinStream(keyedProbe(probe, keyIdxs(0), keyIdxs(1)))((_, _, u) => u)
-      else
-        idx.lookupJoinStreamNullable(
-          keyedProbeNullable(probe, keyIdxs(0), keyIdxs(1)))(
-          (_, _, _) => null.asInstanceOf[InternalRow], u => u).filter(_ != null)
-
-    private def localPairProbes(probeRows: Array[InternalRow],
-        keyIdxs: Array[Int]): (Seq[((A, B), InternalRow)], Seq[InternalRow]) = {
-      val cA = codecA
-      val cB = codecB
-      val iA = keyIdxs(0)
-      val iB = keyIdxs(1)
-      val (nulls, keyed) =
-        probeRows.partition(r => r.isNullAt(iA) || r.isNullAt(iB))
-      (keyed.toSeq.map(r => ((cA.fromRow(r, iA), cB.fromRow(r, iB)), r)),
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(nulls))
-    }
-    override private[sql] def lookupJoinRowsLocal(
-        probeRows: Array[InternalRow], keyIdxs: Array[Int],
-        keepMisses: Boolean): Option[RDD[(InternalRow, InternalRow)]] = {
-      val (probes, nulls) = localPairProbes(probeRows, keyIdxs)
-      Some(
-        if (!keepMisses) idx.lookupJoinLocal(probes)((_, v, u) => (v, u))
-        else idx.lookupJoinLocal(probes, nulls)(
-          (_, v, u) => (v, u),
-          Some((u: InternalRow) => (null.asInstanceOf[InternalRow], u))))
-    }
-    override private[sql] def lookupProbeFilterLocal(
-        probeRows: Array[InternalRow], keyIdxs: Array[Int],
-        anti: Boolean): Option[RDD[InternalRow]] = {
-      val (probes, nulls) = localPairProbes(probeRows, keyIdxs)
-      Some(
-        if (!anti) idx.lookupJoinLocal(probes)((_, _, u) => u)
-        else idx.lookupJoinLocal(probes, nulls)(
-          (_, _, _) => null.asInstanceOf[InternalRow],
-          Some((u: InternalRow) => u)).filter(_ != null))
-    }
-    override private[sql] def lookupJoinRowsLocalCollect(
-        probeRows: Array[InternalRow], keyIdxs: Array[Int],
-        keepMisses: Boolean): Option[Array[(InternalRow, InternalRow)]] = {
-      val (probes, nulls) = localPairProbes(probeRows, keyIdxs)
-      Some(
-        if (!keepMisses) idx.lookupJoinLocalCollect(probes)((_, v, u) => (v, u))
-        else idx.lookupJoinLocalCollect(probes, nulls)(
-          (_, v, u) => (v, u),
-          Some((u: InternalRow) => (null.asInstanceOf[InternalRow], u))))
-    }
-
-    override private[sql] def lookupSecondaryCols: Set[String] = secondaryColSet
-    override private[sql] def lookupJoinRowsBySecondary(col: String,
-        probe: RDD[InternalRow], keyIdx: Int): RDD[(InternalRow, InternalRow)] =
-      secLookupJoinRows(col, probe, keyIdx).get
-    override private[sql] def lookupOuterRowsBySecondary(col: String,
-        probe: RDD[InternalRow], keyIdx: Int): RDD[(InternalRow, InternalRow)] =
-      secLookupOuterRows(col, probe, keyIdx).get
-
-    override private[sql] def prefixLookupCapable: Boolean =
-      ordered && tupSer.isOrderPreserving &&
-        idx.partitioner.exists(
-          _.isInstanceOf[org.apache.spark.RangePartitioner[_, _]])
-    override private[sql] def lookupJoinRowsByPrefix(probe: RDD[InternalRow],
-        keyIdx: Int): RDD[(InternalRow, InternalRow)] = {
-      val cA = codecA
-      val bMin = codecB.minKey
-      val keyed: RDD[(((A, B), Option[(A, B)]), InternalRow)] =
-        probe.mapPartitions(_.flatMap { r =>
-          if (r.isNullAt(keyIdx)) Iterator.empty
-          else {
-            val a = cA.fromRow(r, keyIdx)
-            // the entity's whole tuple run: [(a, minB), (succ a, minB))
-            Iterator.single((((a, bMin), cA.succ(a).map(ua => (ua, bMin))),
-              r.copy()))
-          }
-        })
-      idx.lookupRangeJoinStream(keyed)((_, v, u) => (v, u))(
-        implicitly, implicitly, tupSer)
-    }
-
-
-    /** The tuple encoding's byte order is lexicographic (a, b) when
-      * order-preserving, so the byte-extreme tuple's first component IS
-      * the leading column's natural extremum. min/max of the SECOND
-      * column alone are not index-answerable and fall through to the
-      * default planner. */
-    override private[sql] def statsKeyCol: Option[String] =
-      if (ordered && tupSer.isOrderPreserving) Some(keyColA) else None
-    // memoized like the single-key handle: the index never mutates, so
-    // the first stats job answers every later stats query driver-side
-    @transient private lazy val statsFull: (Long, Option[Any], Option[Any]) = {
-      val (c, mn, mx) = idx.keyStats()
-      (c, mn.map(t => codecA.toExternalSql(t._1)),
-        mx.map(t => codecA.toExternalSql(t._1)))
-    }
-    // reloaded handles carry the save-time exact count, so the first
-    // stats/planning touch launches NO job at all
-    @transient private[sql] var presetStatsCount: Option[Long] = None
-    @transient private lazy val statsCount: Long =
-      presetStatsCount.getOrElse(idx.count())
-    override private[sql] def statsAll(
-        withExtrema: Boolean): (Long, Option[Any], Option[Any]) =
-      if (withExtrema) statsFull else (statsCount, None, None)
-    override private[sql] def markStats(): Unit = { lastScanKind = "stats" }
-
-    /** The bounded LEADING-column interval `fs` pins down, when every
-      * conjunct is an A-range/equality (IsNotNull on either key column
-      * is vacuous — no null key components are stored). Tuple-space
-      * form `[(aLo, minB), (aHi, minB))` — exact because the tuple
-      * order is lexicographic. Needs B's domain minimum (BigInt
-      * components have none and fall through to the scan path). Any B
-      * predicate needs row inspection and falls through too. */
-    private def boundedLeadIntervalOf(
-        fs: Seq[Filter]): Option[Option[((A, B), (A, B))]] = {
-      if (!ordered || !tupSer.isOrderPreserving || fs.isEmpty) return None
-      val minBOpt = Try(codecB.minKey).toOption
-      if (minBOpt.isEmpty) return None
-      val minB = minBOpt.get
-      val ivs = fs.map {
-        case IsNotNull(c) if c == keyColA || c == keyColB => Some(Iv[A](None, None))
-        case f => boundsOn(keyColA, codecA, eqAsPrefix = true, f)
-      }
-      if (ivs.exists(_.isEmpty)) return None
-      val iv = meet(ivs.map(_.get), codecA.ord)
-      if (iv.empty) Some(None)
-      else (iv.from, iv.to) match {
-        case (Some(lo), Some(hi)) => Some(Some(((lo, minB), (hi, minB))))
-        case _ => None // unbounded side: leave it to the scan path
-      }
-    }
-
-    // memoized like the single-key handle: counts/extrema on an
-    // immutable snapshot never go stale (LRU-capped driver state)
-    @transient private lazy val rangeCountMemo =
-      new java.util.LinkedHashMap[((A, B), (A, B)), java.lang.Long](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[((A, B), (A, B)), java.lang.Long]): Boolean =
-          size > 64
-      }
-    /** `SELECT count(*) WHERE a BETWEEN ...` on a (ts, id)-style layout:
-      * pruned radix descents over the leading-interval tuple range —
-      * values never read, rows never ship. The time-bounded count every
-      * 100 TB events table gets asked for. */
-    override private[sql] def rangeCountFor(fs: Seq[Filter]): Option[() => Long] =
-      boundedLeadIntervalOf(fs).map {
-        case None => () => 0L
-        case Some((lo, hi)) => () =>
-          rangeCountMemo.synchronized {
-            Option(rangeCountMemo.get((lo, hi)))
-          } match {
-            case Some(c) => c.longValue()
-            case None =>
-              val c = idx.rangeCount(lo, hi)(tupSer)
-              rangeCountMemo.synchronized {
-                rangeCountMemo.put((lo, hi), java.lang.Long.valueOf(c)); ()
-              }
-              c
-          }
-      }
-    @transient private lazy val rangeExtremaMemo =
-      new java.util.LinkedHashMap[((A, B), (A, B)), (Option[Any], Option[Any])](
-          16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[((A, B), (A, B)), (Option[Any], Option[Any])])
-            : Boolean = size > 64
-      }
-    /** `GROUP BY a COUNT(*)` on the LEADING key column: per-partition
-      * key-run counting (values never examined) + a reduce of the tiny
-      * (group, count) pairs — the "events per user/day" aggregate with
-      * no data-row exchange. Optional leading-interval conjuncts
-      * restrict the groups; non-leading predicates fall through.
-      * Secondary-indexed columns route to posting lengths. */
-    /** Bounded memo of CACHED grouped-pushdown result RDDs on this
-      * IMMUTABLE snapshot: a repeated identical grouped query reuses
-      * the cached O(groups) result instead of re-walking the key
-      * stream — the dashboard-repeat shape, the same snapshot-memo
-      * soundness argument as the probe/top-k memos (COW mutations
-      * return a NEW handle, so entries never invalidate). LRU-capped
-      * at 8 lanes; evicted entries unpersist. */
-    @transient private lazy val groupedResultMemo =
-      new java.util.LinkedHashMap[(String, Option[Any], Option[Any]), RDD[_]](
-        16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Option[Any], Option[Any]), RDD[_]])
-            : Boolean = {
-          val evict = size() > 8
-          if (evict) e.getValue.unpersist(blocking = false)
-          evict
-        }
-      }
-    /** Structural (lane, lo, hi) keys — interpolated-string signatures
-      * could collide for string-keyed bounds containing the separator. */
-    private def memoGrouped[T](sig: (String, Option[Any], Option[Any]))(
-        compute: => RDD[T]): RDD[T] =
-      groupedResultMemo.synchronized {
-        groupedResultMemo.get(sig) match {
-          case null =>
-            // O(groups) rows spread over the full shuffle fan-out:
-            // narrow-merge to a handful of partitions so every REPEAT
-            // collect pays a few task launches, not one per shuffle
-            // partition
-            val r0 = compute
-            val r = r0.coalesce(math.min(8, math.max(1, r0.getNumPartitions)))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-            groupedResultMemo.put(sig, r)
-            r
-          case r => r.asInstanceOf[RDD[T]]
-        }
-      }
-
-    override private[sql] def groupCountsFor(col: String,
-        fs: Seq[Filter]): Option[() => RDD[(Any, Long)]] = {
-      if (col != keyColA) return secondaryGroupCountsFor(col, fs)
-      val ivs = fs.map {
-        case IsNotNull(c) if c == keyColA || c == keyColB => Some(Iv[A](None, None))
-        case f => boundsOn(keyColA, codecA, eqAsPrefix = true, f)
-      }
-      if (ivs.exists(_.isEmpty)) return None
-      val iv = meet(ivs.map(_.get), codecA.ord)
-      val ordA = codecA.ord
-      val dt = schema(keyColA).dataType
-      val lo = iv.from
-      val hi = iv.to
-      val isEmpty = iv.empty
-      Some(() =>
-        if (isEmpty) idx.context.emptyRDD[(Any, Long)]
-        else memoGrouped(("gc", lo.map(x => x: Any), hi.map(x => x: Any))) {
-          val unbounded = lo.isEmpty && hi.isEmpty
-          val partial = idx.partitionsRDD.mapPartitions { pit =>
-            if (!pit.hasNext) Iterator.empty
-            else {
-              val m = new java.util.HashMap[Any, java.lang.Long]()
-              pit.next().iterator.foreach { case (k, _) =>
-                val a = k._1
-                if (unbounded || (lo.forall(l => ordA.gteq(a, l)) &&
-                    hi.forall(h => ordA.lt(a, h)))) {
-                  val prev = m.get(a)
-                  m.put(a, if (prev == null) 1L else prev.longValue() + 1L)
-                }
-              }
-              import scala.jdk.CollectionConverters._
-              m.entrySet().iterator().asScala
-                .map(e => (e.getKey: Any, e.getValue.longValue()))
-            }
-          }
-          partial.reduceByKey(_ + _).map { case (a, c) => (toCatalystKey(dt, a), c) }
-        })
-    }
-
-    override private[sql] def colsAreFullKey(cols: Seq[String]): Boolean =
-      cols.length == 2 && cols.toSet == Set(keyColA, keyColB)
-
-    /** Ordered range-partitioned layout: partitions hold DISJOINT
-      * CONTIGUOUS tuple ranges and tries stream in key order, so each
-      * partition's distinct-leading-value runs are locally countable
-      * and a leading value spans only ADJACENT partitions. */
-    private def leadRunsServable: Boolean =
-      ordered && tupSer.isOrderPreserving &&
-        idx.partitioner.exists(_.isInstanceOf[org.apache.spark.RangePartitioner[_, _]])
-
-    /** `count(DISTINCT leading)`: ONE job collects per-partition
-      * (run count, first, last) — O(partitions) driver state, zero
-      * rows read, zero shuffle — then subtracts the runs that continue
-      * across a partition boundary (a value spanning p partitions is
-      * counted p times and joined p−1 times). Memoized on the
-      * immutable snapshot: repeats cost zero jobs. */
-    @transient private lazy val leadDistinctMemo: Long = {
-      val ordA = codecA.ord
-      val bounds = idx.partitionsRDD.mapPartitionsWithIndex { (pid, pit) =>
-        if (!pit.hasNext) Iterator.empty
-        else {
-          val it = pit.next().iterator
-          if (!it.hasNext) Iterator.empty
-          else {
-            var runs = 0L
-            var first: A = null.asInstanceOf[A]
-            var last: A = null.asInstanceOf[A]
-            var any = false
-            it.foreach { case (k, _) =>
-              val a = k._1
-              if (!any) { first = a; any = true; runs = 1L }
-              else if (!ordA.equiv(last, a)) runs += 1
-              last = a
-            }
-            Iterator.single((pid, runs, first, last))
-          }
-        }
-      }.collect().sortBy(_._1)
-      val joins = bounds.iterator.sliding(2).withPartial(false).count {
-        case Seq((_, _, _, lastPrev), (_, _, firstCur, _)) =>
-          ordA.equiv(lastPrev, firstCur)
-        case _ => false
-      }
-      bounds.iterator.map(_._2).sum - joins
-    }
-    override private[sql] def countDistinctFor(col: String): Option[() => Long] = {
-      if (col != keyColA)
-        return if (col == keyColB) None else secondaryCountDistinct(col)
-      if (!leadRunsServable) return None
-      Some(() => leadDistinctMemo)
-    }
-
-    /** `GROUP BY f(leading) → count(*)[, min/max(leading)]` on the
-      * composite layout — `date_trunc('day', ts)` rollups on the
-      * (ts, id) time-series index: bucket stats off the TUPLE-KEY
-      * stream (values never read), one (bucket, stats)-pair exchange.
-      * Filters must all be leading-column bounds. */
-    override private[sql] def exprGroupStatsFor(col: String,
-        bucketFactory: () => Any => Any, fs: Seq[Filter],
-        withExtrema: Boolean): Option[() => RDD[(Any, Long, Any, Any)]] = {
-      if (col != keyColA) return None
-      val ivs = fs.map {
-        case IsNotNull(c) if c == keyColA => Some(Iv[A](None, None))
-        case f => boundsOn(keyColA, codecA, eqAsPrefix = true, f)
-      }
-      if (ivs.exists(_.isEmpty)) return None
-      val iv = meet(ivs.map(_.get), codecA.ord)
-      val dtA = schema(keyColA).dataType
-      Some(exprGroupStatsThunk[(A, B), A](idx, codecA.ord,
-        a => toCatalystKey(dtA, a), (kk: (A, B)) => kk._1,
-        bucketFactory, iv.from, iv.to, iv.empty, withExtrema))
-    }
-
-    /** `SELECT DISTINCT leading [WHERE leading-bounds]` with ZERO
-      * shuffle: job 1 collects per-partition boundary values
-      * (O(partitions) driver state), job 2 streams each trie's run
-      * heads in key order, dropping a partition's first head when it
-      * continues the previous partition's last run. The met interval
-      * filters identically on both sides of a boundary (same value ⇒
-      * same verdict), so the drop set stays valid under filters. */
-    override private[sql] def distinctValuesFor(col: String,
-        fs: Seq[Filter]): Option[() => RDD[Any]] = {
-      if (col != keyColA || !leadRunsServable) return None
-      val ivs = fs.map {
-        case IsNotNull(c) if c == keyColA || c == keyColB => Some(Iv[A](None, None))
-        case f => boundsOn(keyColA, codecA, eqAsPrefix = true, f)
-      }
-      if (ivs.exists(_.isEmpty)) return None
-      val iv = meet(ivs.map(_.get), codecA.ord)
-      val ordA = codecA.ord
-      val dtA = schema(keyColA).dataType
-      val lo = iv.from
-      val hi = iv.to
-      val isEmpty = iv.empty
-      Some { () =>
-        if (isEmpty) idx.context.emptyRDD[Any]
-        else {
-          val bounds = idx.partitionsRDD.mapPartitionsWithIndex { (pid, pit) =>
-            if (!pit.hasNext) Iterator.empty
-            else {
-              val it = pit.next().iterator
-              if (!it.hasNext) Iterator.empty
-              else {
-                var first: A = null.asInstanceOf[A]
-                var last: A = null.asInstanceOf[A]
-                var any = false
-                it.foreach { case (k, _) =>
-                  if (!any) { first = k._1; any = true }
-                  last = k._1
-                }
-                Iterator.single((pid, first, last))
-              }
-            }
-          }.collect().sortBy(_._1)
-          val drop: Set[Int] = bounds.iterator.sliding(2).withPartial(false)
-            .collect {
-              case Seq((_, _, lastPrev), (pid, firstCur, _))
-                  if ordA.equiv(lastPrev, firstCur) => pid
-            }.toSet
-          val dropB = idx.context.broadcast(drop)
-          idx.partitionsRDD.mapPartitionsWithIndex { (pid, pit) =>
-            if (!pit.hasNext) Iterator.empty
-            else {
-              var prevSet = false
-              var prev: A = null.asInstanceOf[A]
-              val heads = pit.next().iterator.map(_._1._1).filter { a =>
-                val isNew = !prevSet || !ordA.equiv(prev, a)
-                prev = a
-                prevSet = true
-                isNew
-              }
-              val kept = if (dropB.value.contains(pid)) heads.drop(1) else heads
-              kept.filter(a => lo.forall(l => ordA.gteq(a, l)) &&
-                  hi.forall(h => ordA.lt(a, h)))
-                .map(a => toCatalystKey(dtA, a))
-            }
-          }
-        }
-      }
-    }
-
-    override private[sql] def groupStatCol(col: String): Option[String] =
-      if (col == keyColA) Some(keyColB) else None
-
-    private[sql] def groupTopNServable: Boolean = leadRunsServable
-
-    /** Per-group top-n — `row_number() OVER (PARTITION BY a ORDER BY
-      * b) <= n` for EVERY group at once, served straight off the
-      * layout: the tuple order clusters each a-run contiguously and
-      * already sorted by b, so job 2 streams each trie once and emits
-      * the first n rows per run with their ranks — NO shuffle, NO
-      * sort, NO per-group window state, at most n rows per group ever
-      * materialized. Job 1 is the boundary pass: O(partitions) driver
-      * state assigns each partition's FIRST run its rank offset (rows
-      * of the same leading value in earlier partitions — a run spans
-      * only ADJACENT partitions under range partitioning). The
-      * "latest/first n events per user across all users" query, at any
-      * corpus size: Catalyst's default exchanges and sorts EVERY row. */
-    private[sql] def groupTopN(n: Int): RDD[(InternalRow, Int)] = {
-      val ordA = codecA.ord
-      val bounds = idx.partitionsRDD.mapPartitionsWithIndex { (pid, pit) =>
-        if (!pit.hasNext) Iterator.empty
-        else {
-          val it = pit.next().iterator
-          if (!it.hasNext) Iterator.empty
-          else {
-            var first: A = null.asInstanceOf[A]
-            var last: A = null.asInstanceOf[A]
-            var cntLast = 0L
-            var any = false
-            it.foreach { case (k, _) =>
-              val a = k._1
-              if (!any) { first = a; last = a; cntLast = 1L; any = true }
-              else if (ordA.equiv(a, last)) cntLast += 1
-              else { last = a; cntLast = 1L }
-            }
-            Iterator.single((pid, first, last, cntLast))
-          }
-        }
-      }.collect().sortBy(_._1)
-      // rank offset of each partition's first run: rows of that value
-      // carried in from preceding partitions
-      val offsets = Map.newBuilder[Int, Long]
-      var carry = 0L
-      var prevLast: Option[A] = None
-      bounds.foreach { case (pid, first, last, cntLast) =>
-        val off = if (prevLast.exists(ordA.equiv(_, first))) carry else 0L
-        if (off > 0) offsets += pid -> off
-        // rows of lastA seen so far: a single-run partition extends the
-        // carried prefix; otherwise lastA began inside this partition
-        carry = (if (ordA.equiv(first, last)) off else 0L) + cntLast
-        prevLast = Some(last)
-      }
-      val offB = idx.context.broadcast(offsets.result())
-      val nn = n
-      idx.partitionsRDD.mapPartitionsWithIndex { (pid, pit) =>
-        if (!pit.hasNext) Iterator.empty
-        else {
-          val off0 = offB.value.getOrElse(pid, 0L)
-          var cur: A = null.asInstanceOf[A]
-          var curSet = false
-          var firstRun = true
-          var pos = 0L
-          pit.next().iterator.flatMap { case (k, row) =>
-            val a = k._1
-            if (!curSet || !ordA.equiv(cur, a)) {
-              if (curSet) firstRun = false
-              cur = a
-              curSet = true
-              pos = if (firstRun) off0 else 0L
-            }
-            pos += 1
-            if (pos <= nn) Iterator.single((row, pos.toInt))
-            else Iterator.empty
-          }
-        }
-      }
-    }
-
-    /** `GROUP BY leading → count(*), min(second), max(second)` — the
-      * per-entity timeline summary ("per user: event count, first and
-      * last seen") answered from key tuples alone: per-partition
-      * (count, minB, maxB) partials over the key stream (values NEVER
-      * deserialized), then one reduceByKey of O(groups) triples — the
-      * same partial-aggregate exchange shape Catalyst would emit, minus
-      * every data row. Same leading-interval gating as
-      * [[groupCountsFor]]. */
-    override private[sql] def groupStatsFor(col: String,
-        fs: Seq[Filter]): Option[() => RDD[(Any, Long, Any, Any)]] = {
-      if (col != keyColA) return None
-      val ivs = fs.map {
-        case IsNotNull(c) if c == keyColA || c == keyColB => Some(Iv[A](None, None))
-        case f => boundsOn(keyColA, codecA, eqAsPrefix = true, f)
-      }
-      if (ivs.exists(_.isEmpty)) return None
-      val iv = meet(ivs.map(_.get), codecA.ord)
-      val ordA = codecA.ord
-      val ordB = codecB.ord
-      val dtA = schema(keyColA).dataType
-      val dtB = schema(keyColB).dataType
-      val lo = iv.from
-      val hi = iv.to
-      val isEmpty = iv.empty
-      val streamRuns = leadRunsServable
-      Some(() =>
-        if (isEmpty) idx.context.emptyRDD[(Any, Long, Any, Any)]
-        else memoGrouped(("gs", lo.map(x => x: Any), hi.map(x => x: Any))) {
-          val unbounded = lo.isEmpty && hi.isEmpty
-          val partial = idx.partitionsRDD.mapPartitions { pit =>
-            if (!pit.hasNext) Iterator.empty
-            else if (streamRuns) {
-              // ordered layout: runs are contiguous and b-sorted, so
-              // each run folds streaming — min = first b, max = last
-              // b, no hashing, no per-key map state; the reduce below
-              // only ever merges partition-BOUNDARY runs
-              val out = scala.collection.mutable.ArrayBuffer
-                .empty[(A, (Long, B, B))]
-              var cur: A = null.asInstanceOf[A]
-              var curSet = false
-              var cnt = 0L
-              var mnB: B = null.asInstanceOf[B]
-              var mxB: B = null.asInstanceOf[B]
-              def flush(): Unit =
-                if (curSet && cnt > 0) out += ((cur, (cnt, mnB, mxB)))
-              pit.next().iterator.foreach { case (k, _) =>
-                val a = k._1
-                if (!curSet || !ordA.equiv(cur, a)) {
-                  flush()
-                  cur = a
-                  curSet = true
-                  cnt = 0L
-                }
-                if (unbounded || (lo.forall(l => ordA.gteq(a, l)) &&
-                    hi.forall(h => ordA.lt(a, h)))) {
-                  if (cnt == 0L) mnB = k._2
-                  mxB = k._2
-                  cnt += 1
-                }
-              }
-              flush()
-              out.iterator
-            } else {
-              val m = new java.util.HashMap[A, (Long, B, B)]()
-              pit.next().iterator.foreach { case (k, _) =>
-                val a = k._1
-                if (unbounded || (lo.forall(l => ordA.gteq(a, l)) &&
-                    hi.forall(h => ordA.lt(a, h)))) {
-                  val prev = m.get(a)
-                  if (prev == null) m.put(a, (1L, k._2, k._2))
-                  else m.put(a, (prev._1 + 1L,
-                    if (ordB.lt(k._2, prev._2)) k._2 else prev._2,
-                    if (ordB.gt(k._2, prev._3)) k._2 else prev._3))
-                }
-              }
-              import scala.jdk.CollectionConverters._
-              m.entrySet().iterator().asScala
-                .map(e => (e.getKey, e.getValue))
-            }
-          }
-          partial.reduceByKey { (x, y) =>
-            (x._1 + y._1,
-              if (ordB.lt(x._2, y._2)) x._2 else y._2,
-              if (ordB.gt(x._3, y._3)) x._3 else y._3)
-          }.map { case (a, (c, mnB, mxB)) =>
-            (toCatalystKey(dtA, a), c, toCatalystKey(dtB, mnB),
-              toCatalystKey(dtB, mxB))
-          }
-        })
-    }
-
-    /** min/max of the LEADING column under its own pushed interval: the
-      * byte-extreme tuples' first components, from two bounded O(depth)
-      * descents. */
-    override private[sql] def rangeExtremaFor(
-        fs: Seq[Filter]): Option[() => (Option[Any], Option[Any])] =
-      boundedLeadIntervalOf(fs).map {
-        case None => () => (None, None)
-        case Some((lo, hi)) => () =>
-          rangeExtremaMemo.synchronized {
-            Option(rangeExtremaMemo.get((lo, hi)))
-          } match {
-            case Some(r) => r
-            case None =>
-              val (mn, mx) = idx.rangeExtrema(lo, hi)(tupSer)
-              val r = (mn.map(t => codecA.toExternalSql(t._1)),
-                mx.map(t => codecA.toExternalSql(t._1)))
-              rangeExtremaMemo.synchronized {
-                rangeExtremaMemo.put((lo, hi), r); ()
-              }
-              r
-          }
-      }
-
-    /** `ORDER BY a[, b] LIMIT n`: a range-partitioned composite layout
-      * is globally sorted in lexicographic (a, b) order, so a uniform-
-      * direction sort on the pair — or on the leading column alone
-      * (ties broken deterministically by b) — reads the covering
-      * partition prefix/suffix only. */
-    override private[sql] def topKCapable: Boolean =
-      ordered && tupSer.isOrderPreserving &&
-        idx.partitioner.exists(_.isInstanceOf[org.apache.spark.RangePartitioner[_, _]])
-    override private[sql] def topKCols: Seq[String] = Seq(keyColA, keyColB)
-    override protected def fetchOrderedRows(n: Int, asc: Boolean): Seq[InternalRow] =
-      idx.takeOrderedByKey(n, asc)(tupSer).toSeq.map(_._2)
-    override protected def markTopK(): Unit = {
-      lastScanKind = "topk"
-      lastPointLookupKeys = -1
-    }
-
-    @transient private lazy val maxKeyMemo: Option[(A, B)] = idx.maxKey()
-
-    /** Composite keyset pagination: `WHERE a >= cursor ORDER BY a[, b]
-      * LIMIT n` (time-series export pages) and `WHERE a = X AND b >
-      * cursor ORDER BY b LIMIT n` (PER-ENTITY TIMELINE pages — a
-      * user's activity feed, a document's version history). Claimable
-      * when the conjuncts are leading-column interval bounds, or one
-      * exact leading equality plus second-column bounds; anything else
-      * needs row inspection and falls through. topKCapable already
-      * implies order-preserving components, so both codecs have domain
-      * minima. */
-    override private[sql] def topKFilterClaimable(fs: Seq[Filter]): Boolean =
-      topKCapable && fs.forall {
-        case IsNotNull(c) => c == keyColA || c == keyColB
-        case f => boundsOn(keyColA, codecA, eqAsPrefix = true, f).isDefined
-      }
-
-    /** (pinned A value, met B interval) when `fs` is exactly one exact
-      * leading-column equality plus optional second-column bounds —
-      * the per-entity timeline claim. A normalizing leading codec
-      * (uuid) never claims: the probe could return rows whose raw
-      * string differs from the literal, and no residual filter runs
-      * above this node. */
-    private def pinnedLeadOf(fs: Seq[Filter]): Option[(A, Iv[B])] = {
-      if (!codecA.exactLiterals) return None
-      var aEq: Option[A] = None
-      var ok = true
-      val bIvs = scala.collection.mutable.ArrayBuffer.empty[Iv[B]]
-      fs.foreach {
-        case IsNotNull(c) if c == keyColA || c == keyColB => ()
-        case EqualTo(c, v) if c == keyColA && v != null =>
-          Try(codecA.fromLiteral(v)).toOption match {
-            case Some(k) if aEq.forall(codecA.ord.equiv(_, k)) => aEq = Some(k)
-            case _ => ok = false
-          }
-        case f => boundsOn(keyColB, codecB, eqAsPrefix = false, f) match {
-          case Some(iv) => bIvs += iv
-          case None => ok = false
-        }
-      }
-      if (!ok) None else aEq.map(a => (a, meet(bIvs.toSeq, codecB.ord)))
-    }
-
-    override private[sql] def topKClaimable(sortCols: Seq[String],
-        fs: Seq[Filter]): Boolean =
-      topKCapable && sortCols.nonEmpty && (
-        (topKCols.take(sortCols.length) == sortCols && topKFilterClaimable(fs)) ||
-          ((sortCols == Seq(keyColB) ||
-            topKCols.take(sortCols.length) == sortCols) &&
-            pinnedLeadOf(fs).isDefined))
-
-    /** Close an unbounded-above scan that starts at `from` at succ of
-      * the max tuple (by B, else carry into A); the all-domain-max
-      * tuple has no successor and merges in as an exact corner probe. */
-    private def closeAtMax(from: (A, B)): (Option[(A, B)], Option[(A, B)]) =
-      maxKeyMemo match {
-        case None => (None, None)
-        case Some(mk) if tupleOrd.lt(mk, from) => (None, None)
-        case Some(mk) =>
-          codecB.succ(mk._2).map(b2 => (mk._1, b2))
-            .orElse(codecA.succ(mk._1).map(a2 => (a2, codecB.minKey))) match {
-            case Some(end) => (Some(end), None)
-            case None => (Some(mk), Some(mk))
-          }
-      }
-
-    private def serveTupleRange(from: (A, B), toOpt: Option[(A, B)],
-        corner: Option[(A, B)], n: Int, asc: Boolean): Seq[InternalRow] =
-      toOpt match {
-        case None => Nil
-        case Some(to) =>
-          val body =
-            idx.takeOrderedByKeyInRange(from, to, n, asc)(tupSer).toSeq.map(_._2)
-          corner match {
-            case None => body
-            case Some(ck) =>
-              val cRow = idx.multiget(Array(ck)).values.toSeq
-              (if (asc) body ++ cRow else cRow ++ body).take(n)
-          }
-      }
-
-    override protected def fetchOrderedRowsInRange(fs: Seq[Filter], n: Int,
-        asc: Boolean): Seq[InternalRow] = pinnedLeadOf(fs) match {
-      case Some((a, bIv)) =>
-        // per-entity page: one contiguous tuple range under the pinned A
-        if (bIv.empty) return Nil
-        val from = (a, bIv.from.getOrElse(codecB.minKey))
-        val (toOpt, corner) = bIv.to match {
-          case Some(t) => (Some((a, t)), None)
-          case None => codecA.succ(a) match {
-            case Some(a2) => (Some((a2, codecB.minKey)), None)
-            // a IS the domain max: the global close cannot overshoot
-            case None => closeAtMax(from)
-          }
-        }
-        serveTupleRange(from, toOpt, corner, n, asc)
-      case None =>
-        val ivs = fs.flatMap(f => boundsOn(keyColA, codecA, eqAsPrefix = true, f))
-        val iv = meet(ivs, codecA.ord)
-        if (iv.empty) return Nil
-        val minB = codecB.minKey
-        val from = (iv.from.getOrElse(codecA.minKey), minB)
-        val (toOpt, corner) = iv.to match {
-          case Some(t) => (Some((t, minB)), None)
-          case None => closeAtMax(from)
-        }
-        serveTupleRange(from, toOpt, corner, n, asc)
-    }
-
-    /** DISTRIBUTED copy-on-write upsert — the composite twin of
-      * [[Handle.upsertFrame]]: only the delta shuffles to the index's
-      * pair partitioning; the corpus never moves. Columns must match
-      * this handle's schema by name and type. */
-    def upsertFrame(updates: DataFrame): CompositeHandle[A, B] = {
-      // catalogString ignores nullability metadata (containsNull et
-      // al) — the InternalRow layout is identical either way, and an
-      // array-literal update frame legitimately differs there
-      val got = updates.schema.map(f => (f.name, f.dataType.catalogString))
-      val want = schema.map(f => (f.name, f.dataType.catalogString))
-      require(got == want,
-        s"update schema $got must match handle schema $want")
-      new CompositeHandle[A, B](
-        idx.multiputRDD(compositePairs(updates, keyColA, keyColB, codecA, codecB)),
-        keyColA, keyColB, schema, ordered, codecA, codecB)
-    }
-
-    /** Snapshot compaction — see [[Handle.compacted]]. */
-    def compacted: CompositeHandle[A, B] =
-      new CompositeHandle[A, B](idx.compacted(),
-        keyColA, keyColB, schema, ordered, codecA, codecB)
-
-    /** Post-build re-skew — see [[Handle.reskewed]]. */
-    private[sql] def reskewed(maxRowsPerPartition: Long): CompositeHandle[A, B] = {
-      val r = idx.reskewed(maxRowsPerPartition, ordered)
-      if (r eq idx) this
-      else new CompositeHandle[A, B](r, keyColA, keyColB, schema, ordered,
-        codecA, codecB)
-    }
-
-    /** Schema evolution — see [[Handle.withWidenedSchema]]. */
-    private[sql] def withWidenedSchema(newSchema: StructType): CompositeHandle[A, B] = {
-      IndexedFrame.validateWiden(schema, newSchema)
-      if (newSchema.length == schema.length) return this
-      val f = new WidenRow(schema.fields.map(_.dataType), newSchema)
-      new CompositeHandle[A, B](idx.mapValues(f(_)),
-        keyColA, keyColB, newSchema, ordered, codecA, codecB)
-    }
-
-    /** General evolution — see [[Handle.withRemappedSchema]]; either
-      * key component may be renamed, never dropped or type-changed. */
-    private[sql] def withRemappedSchema(newSchema: StructType,
-        positions: Array[Int]): CompositeHandle[A, B] = {
-      IndexedFrame.validateRemap(schema, newSchema, positions)
-      val names = Seq(keyColA, keyColB).map { k =>
-        val pos = positions.indexOf(schema.fieldIndex(k))
-        require(pos >= 0, s"cannot drop key column '$k'")
-        require(newSchema.fields(pos).dataType == schema(k).dataType,
-          s"cannot change the type of key column '$k'")
-        newSchema.fields(pos).name
-      }
-      if (IndexedFrame.remapIsNameOnly(schema, newSchema, positions))
-        new CompositeHandle[A, B](idx, names.head, names(1), newSchema,
-          ordered, codecA, codecB)
-      else {
-        val f = new RemapRow(schema.fields.map(_.dataType), newSchema, positions)
-        new CompositeHandle[A, B](idx.mapValues(f(_)),
-          names.head, names(1), newSchema, ordered, codecA, codecB)
-      }
-    }
-
-    /** Delta-cost sidecar transplant across one DML statement — the
-      * composite twin of [[Handle.maintainSidecarsFrom]]. */
-    private[sql] def maintainSidecarsFrom(oldAny: AnyRef,
-        del: Option[DataFrame], up: Option[DataFrame]): Unit = {
-      val old = oldAny.asInstanceOf[CompositeHandle[A, B]]
-      implicit val kt: ClassTag[(A, B)] = secTag
-      val (ca, cb) = (codecA, codecB)
-      val delKeys = del.map(_.queryExecution.toRdd.map(r =>
-        (ca.fromRow(r, 0), cb.fromRow(r, 1))))
-      val upKeys = up.map(u =>
-        compositePairs(u, keyColA, keyColB, ca, cb).map(_._1))
-      maintainSecondariesFrom(old, delKeys, upKeys)
-      widenZonesFrom(old, upKeys.map { ks =>
-        idx.lookupJoinStream(ks.map((_, ())))((_, row, _) => row)
-          .mapPartitionsWithIndex((pid, it) => it.map(r => (pid, r)))
-      })
-    }
-
-    /** DISTRIBUTED copy-on-write delete by (a, b) key pairs: `keys`
-      * must be a two-column DataFrame typed like (keyColA, keyColB), in
-      * that order. Unknown pairs are ignored, matching SQL DELETE. */
-    def deleteFrame(keys: DataFrame): CompositeHandle[A, B] = {
-      require(keys.schema.length == 2 &&
-          keys.schema(0).dataType == schema(keyColA).dataType &&
-          keys.schema(1).dataType == schema(keyColB).dataType,
-        s"(${schema(keyColA).dataType.catalogString}, " +
-          s"${schema(keyColB).dataType.catalogString}) key columns " +
-          s"required, got ${keys.schema.map(_.dataType.catalogString)}")
-      val (ca, cb) = (codecA, codecB)
-      val kRdd = keys.queryExecution.toRdd.map { r =>
-        if (r.isNullAt(0) || r.isNullAt(1))
-          throw new IllegalArgumentException("null delete key component")
-        (ca.fromRow(r, 0), cb.fromRow(r, 1))
-      }
-      new CompositeHandle[A, B](idx.deleteRDD(kRdd),
-        keyColA, keyColB, schema, ordered, codecA, codecB)
-    }
-
-    def toDF(implicit spark: SparkSession): DataFrame =
-      spark.baseRelationToDataFrame(new CompositeRelation(this)(spark.sqlContext))
-
-    /** SQL `MERGE INTO` on the COMPOSITE key — the two-column twin of
-      * the single-key [[Handle.mergeFrame]], matched on BOTH key
-      * columns (`ON t.a = s.<srcA> AND t.b = s.<srcB>`). Same clause
-      * presence/order rules, same Column addressing (`col("t.x")` /
-      * `col("s.x")`), same delta-cost execution: one left lookup join,
-      * one COW delete pass, one COW upsert pass, all computed against
-      * the original snapshot with key-disjoint change sets. `WHEN NOT
-      * MATCHED BY SOURCE` rides the `notBySource*` arguments exactly
-      * as on [[Handle.mergeFrame]] (plain target column names, served
-      * by the corpus-kept anti join — the corpus never shuffles). */
-    def mergeFrame(source: DataFrame, sourceKeyA: String, sourceKeyB: String,
-        deleteWhen: Option[Column] = None,
-        updateWhen: Option[Column] = None,
-        updateSet: Map[String, Column] = Map.empty,
-        insertWhen: Option[Column] = None,
-        insertValues: Map[String, Column] = Map.empty,
-        insertAll: Boolean = false,
-        notBySourceDeleteWhen: Option[Column] = None,
-        notBySourceUpdateWhen: Option[Column] = None,
-        notBySourceUpdateSet: Map[String, Column] = Map.empty)(
-        implicit spark: SparkSession): CompositeHandle[A, B] = {
-      val ms = mergeChangeSets(source, sourceKeyA, sourceKeyB, deleteWhen, updateWhen,
-        updateSet, insertWhen, insertValues, insertAll,
-        notBySourceDeleteWhen, notBySourceUpdateWhen, notBySourceUpdateSet)
-      val afterDel = ms.del.map(deleteFrame).getOrElse(this)
-      val result = ms.ups.map(afterDel.upsertFrame).getOrElse(afterDel)
-      if (ms.persisted) {
-        result.idx.cached.count() // one pass over the persisted join
-        ms.release()
-      }
-      result
-    }
-
-    /** [[mergeFrame]]'s change sets WITHOUT application — the durable
-      * catalog-table DML path writes both frames as the table's delta
-      * log first, then applies from disk so replay is bit-exact. */
-    private[sql] def mergeChangeSets(source: DataFrame, sourceKeyA: String, sourceKeyB: String,
-        deleteWhen: Option[Column],
-        updateWhen: Option[Column],
-        updateSet: Map[String, Column],
-        insertWhen: Option[Column],
-        insertValues: Map[String, Column],
-        insertAll: Boolean,
-        notBySourceDeleteWhen: Option[Column],
-        notBySourceUpdateWhen: Option[Column],
-        notBySourceUpdateSet: Map[String, Column])(
-        implicit spark: SparkSession): MergeSets = {
-      import org.apache.spark.sql.functions.{col => fCol}
-      require(!updateSet.contains(keyColA) && !updateSet.contains(keyColB),
-        "MERGE may not update a key column")
-      val joined = source.alias("s").join(toDF.alias("t"),
-        fCol(s"s.$sourceKeyA") === fCol(s"t.$keyColA") &&
-          fCol(s"s.$sourceKeyB") === fCol(s"t.$keyColB"), "left")
-      if (auditMergePlans)
-        lastMergePlan = joined.queryExecution.executedPlan.toString
-      val matched = fCol(s"t.$keyColA").isNotNull
-      // see the single-key mergeFrame: persist + eager snapshot when
-      // multiple change sets read the joined view, so the source plan
-      // executes once
-      val reads = Seq(deleteWhen.isDefined, updateSet.nonEmpty,
-        insertAll || insertValues.nonEmpty).count(identity)
-      if (reads >= 2)
-        joined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // a merge may carry ONLY NOT-MATCHED-BY-SOURCE clauses — the
-      // matched/insert machinery then contributes nothing
-      val hasMatchedSide = deleteWhen.isDefined || updateSet.nonEmpty ||
-        insertAll || insertValues.nonEmpty
-      require(hasMatchedSide || notBySourceDeleteWhen.isDefined ||
-        notBySourceUpdateSet.nonEmpty, "MERGE needs at least one WHEN clause")
-      val cs =
-        if (hasMatchedSide)
-          mergeClauses(joined, matched, schema, deleteWhen, updateWhen,
-            updateSet, insertWhen, insertValues, insertAll)
-        else MergeChangeSets(org.apache.spark.sql.functions.lit(false),
-          hasDelete = false, None)
-      val nbsBoth =
-        notBySourceDeleteWhen.isDefined && notBySourceUpdateSet.nonEmpty
-      // both NBS clause kinds read the anti join (delete keys and
-      // update rows are separate consumers) — persist it so the
-      // corpus-kept anti pass executes ONCE, mirroring the
-      // matched-side joined cache
-      val unmatched =
-        if (notBySourceDeleteWhen.isDefined || notBySourceUpdateSet.nonEmpty)
-          Some {
-            val u =
-            toDF.alias("t").join(
-              source.select(fCol(sourceKeyA), fCol(sourceKeyB)).alias("s"),
-              fCol(s"t.$keyColA") === fCol(s"s.$sourceKeyA") &&
-                fCol(s"t.$keyColB") === fCol(s"s.$sourceKeyB"), "left_anti")
-            if (nbsBoth)
-              u.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            else u
-          }
-        else None
-      val nbs = unmatched.map(u => nbsClauses(
-          u, Seq(keyColA, keyColB), schema, notBySourceDeleteWhen,
-          notBySourceUpdateWhen, notBySourceUpdateSet))
-        .getOrElse(NbsChangeSets(None, None))
-      val matchedDel =
-        if (cs.hasDelete) Some(joined.filter(cs.delC)
-          .select(fCol(s"t.$keyColA").as(keyColA),
-            fCol(s"t.$keyColB").as(keyColB)))
-        else None
-      val allDel = (matchedDel ++ nbs.delKeys).reduceOption(_ unionByName _)
-      val allUps = (cs.upserts ++ nbs.updRows).reduceOption(_ unionByName _)
-      MergeSets(allDel, allUps, reads >= 2 || nbsBoth,
-        () => {
-          if (reads >= 2) joined.unpersist(blocking = false)
-          if (nbsBoth) unmatched.foreach(_.unpersist(blocking = false))
-          ()
-        })
-    }
-
-    /** Per-key point-in-time read — the versioned-dimension ("SCD")
-      * lookup on an `(id, ts)` layout: the row for leading key `a`
-      * whose second key is the LARGEST value ≤ `t`, or empty if `a`
-      * has no version at-or-before `t`. ONE bounded
-      * [[graft.IndexedRDD.floorEntry]] pass over the tuple byte space
-      * (the floor of `(a, succ t)` is either `a`'s latest version ≤ t
-      * or some earlier leading key — one driver-side check tells them
-      * apart) returns the row with its key, so no second probe job
-      * runs. Requires an ordered handle. */
-    def asOf(a: Any, t: Any)(implicit spark: SparkSession): DataFrame = {
-      require(ordered && tupSer.isOrderPreserving,
-        "asOf needs an ordered composite handle with order-preserving keys")
-      val ka = codecA.fromLiteral(a)
-      val kb = codecB.fromLiteral(t)
-      // strict upper bound in tuple order: (a, succ t); when t is the
-      // b-domain max, everything of leading key a qualifies — bound at
-      // (succ a, minB) instead, falling back to the global max entry
-      val floor: Option[((A, B), InternalRow)] = codecB.succ(kb) match {
-        case Some(ub) => idx.floorEntry((ka, ub))(tupSer)
-        case None => codecA.succ(ka) match {
-          case Some(ua) => idx.floorEntry((ua, codecB.minKey))(tupSer)
-          case None => idx.maxEntry()(tupSer)
-        }
-      }
-      val hit = floor.filter { case ((fa, _), _) => codecA.ord.equiv(fa, ka) }
-      lastScanKind = "asof"
-      rowDF(hit.map(_._2), schema)
-    }
-
-    /** BATCH point-in-time join — the feature-store primitive: for
-      * every probe row (entity, t), the LATEST version row of that
-      * entity with time <= t, emitted as probe columns ++ version
-      * columns. Inner semantics by default (probes with no version, or
-      * with a null entity/time, emit nothing — SQL's as-of condition
-      * is never true on null); `keepMisses` gives LEFT-OUTER semantics
-      * instead: every probe row kept, version columns null-extended. Each probe row routes to the partitions
-      * overlapping its entity's `[(a, minB), (a, succ t))` tuple
-      * interval — ONE partition unless the entity's versions straddle
-      * a boundary — and runs one O(depth) bounded floor descent; a
-      * tiny per-probe reduce picks the boundary-spanning winner. The
-      * versions corpus never moves and is never scanned: cost scales
-      * with the probe batch. Catalyst's equivalent is a join on entity
-      * (corpus shuffle!) plus a per-entity window max. Probe column
-      * dtypes must match the key columns'; output column names must
-      * not collide (rename probe columns first). */
-    def asOfJoinFrame(probe: DataFrame, entityCol: String, timeCol: String,
-        keepMisses: Boolean = false)(
-        implicit spark: SparkSession): DataFrame = {
-      require(ordered && tupSer.isOrderPreserving &&
-        idx.partitioner.exists(
-          _.isInstanceOf[org.apache.spark.RangePartitioner[_, _]]),
-        "asOfJoinFrame needs a range-partitioned ordered composite handle")
-      require(probe.schema(entityCol).dataType == schema(keyColA).dataType &&
-        probe.schema(timeCol).dataType == schema(keyColB).dataType,
-        s"probe ($entityCol, $timeCol) must match the key dtypes " +
-          s"(${schema(keyColA).dataType.catalogString}, " +
-          s"${schema(keyColB).dataType.catalogString})")
-      require(probe.schema.fieldNames.toSet
-        .intersect(schema.fieldNames.toSet).isEmpty,
-        "probe and version column names must not collide")
-      val ia = probe.schema.fieldIndex(entityCol)
-      val ib = probe.schema.fieldIndex(timeCol)
-      val cA = codecA
-      val cB = codecB
-      val keyed: RDD[(((A, B), Option[(A, B)]), InternalRow)] =
-        probe.queryExecution.toRdd.mapPartitions(_.flatMap { r =>
-          if (r.isNullAt(ia) || r.isNullAt(ib)) {
-            // LEFT-OUTER keeps null-keyed probes as guaranteed misses:
-            // an EMPTY interval routes once and floors to None
-            if (keepMisses)
-              Iterator.single((((cA.minKey, cB.minKey),
-                Some((cA.minKey, cB.minKey)): Option[(A, B)]), r.copy()))
-            else Iterator.empty
-          } else {
-            val a = cA.fromRow(r, ia)
-            val t = cB.fromRow(r, ib)
-            val lo = (a, cB.minKey)
-            // strict tuple upper bound (a, succ t); t at the b-domain
-            // max bounds at (succ a, minB); a also at the max =>
-            // unbounded above
-            val ub: Option[(A, B)] = cB.succ(t) match {
-              case Some(s2) => Some((a, s2))
-              case None => cA.succ(a).map(ua => (ua, cB.minKey))
-            }
-            Iterator.single(((lo, ub), r.copy()))
-          }
-        })
-      val outSchema = org.apache.spark.sql.types.StructType(
-        probe.schema.fields ++ schema.fields.map(_.copy(nullable = true)))
-      val types = outSchema.fields.map(_.dataType)
-      val nVersion = schema.length
-      val rows = idx.lookupFloorStream(keyed)(implicitly, tupSer)
-        .mapPartitions { it =>
-          val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-          val nullVersion: InternalRow =
-            new org.apache.spark.sql.catalyst.expressions
-              .GenericInternalRow(nVersion)
-          val proj = UnsafeProjection.create(types)
-          it.flatMap {
-            case (Some((_, v)), u) =>
-              Iterator.single(proj(joined(u, v)): InternalRow)
-            case (None, u) =>
-              if (keepMisses)
-                Iterator.single(proj(joined(u, nullVersion)): InternalRow)
-              else Iterator.empty
-          }
-        }
-      org.apache.spark.sql.graftbridge.ExpressionBridge
-        .internalDF(spark, rows, outSchema)
-    }
-  }
-
-  /** Keyed internal-row pairs for a composite build. */
-  private def compositePairs[A, B](df: DataFrame, keyColA: String, keyColB: String,
-      ca: KeyCodec[A], cb: KeyCodec[B]): RDD[((A, B), InternalRow)] = {
-    val (ia, ib) = (df.schema.fieldIndex(keyColA), df.schema.fieldIndex(keyColB))
-    df.queryExecution.toRdd.mapPartitions(_.map { r =>
-      if (r.isNullAt(ia) || r.isNullAt(ib))
-        throw new IllegalArgumentException(
-          s"null key in composite ($keyColA, $keyColB)")
-      ((ca.fromRow(r, ia), cb.fromRow(r, ib)), r.copy(): InternalRow)
-    })
-  }
-
-  /** Shared composite build: hash-partitioned (optionally at a forced
-    * count for co-partitioned zip joins), ordered, or — with
-    * `rangeParts > 0` — globally range-partitioned in lexicographic
-    * (a, b) order. */
-  private def buildComposite[A, B](df: DataFrame, keyColA: String, keyColB: String,
-      sa: KeySpec[A], sb: KeySpec[B], ordered: Boolean, numPartitions: Int,
-      rangeParts: Int): CompositeHandle[A, B] = {
-    implicit val cta: ClassTag[A] = sa.tag
-    implicit val ctb: ClassTag[B] = sb.tag
-    implicit val serA: KeySerializer[A] = sa.ser
-    implicit val serB: KeySerializer[B] = sb.ser
-    implicit val tupSer: KeySerializer[(A, B)] =
-      new KeySerializer.ConcatTuple2Serializer[A, B](serA, serB)
-    val raw = compositePairs(df, keyColA, keyColB, sa.codec, sb.codec)
-    val idx =
-      if (rangeParts > 0) {
-        implicit val ord: Ordering[(A, B)] = Ordering.Tuple2(sa.codec.ord, sb.codec.ord)
-        IndexedRDD.rangePartitioned(raw, rangeParts)
-      } else {
-        val p =
-          if (numPartitions > 0)
-            raw.partitionBy(new org.apache.spark.HashPartitioner(numPartitions))
-          else raw
-        if (ordered) IndexedRDD.ordered(p) else IndexedRDD(p)
-      }
-    new CompositeHandle[A, B](idx.cached, keyColA, keyColB, df.schema,
-      ordered || rangeParts > 0, sa.codec, sb.codec)
-  }
-
-  private def integralSpec(df: DataFrame, c: String, caller: String): KeySpec[Long] =
-    df.schema(c).dataType match {
-      case dt @ (LongType | IntegerType | ShortType | ByteType |
-                 TimestampType | TimestampNTZType | DateType) =>
-        KeySpec[Long](new LongCodec(dt), KeySerializer.LongSerializer,
-          implicitly[ClassTag[Long]])
-      case other => throw new IllegalArgumentException(
-        s"$caller requires integral or temporal columns, got ${other.catalogString} for $c; " +
-          "use indexCompositeAny for string/uuid components")
-    }
-
-  /** Index a DataFrame by TWO integral key columns (composite key,
-    * uniqueness enforced over the pair, last write wins). `ordered=true`
-    * builds radix partitions so leading-column ranges push down. */
-  def indexComposite(df: DataFrame, keyColA: String, keyColB: String,
-      ordered: Boolean = false, numPartitions: Int = 0): CompositeHandle[Long, Long] =
-    buildComposite(df, keyColA, keyColB,
-      integralSpec(df, keyColA, "indexComposite"),
-      integralSpec(df, keyColB, "indexComposite"), ordered, numPartitions, 0)
-
-  /** Composite handle over ANY supported key-column pair — integral,
-    * string (lex-keyed), uuid-string (name the column in `uuidCols`),
-    * decimal(p,0)/BigInt. The reference's generic `Tuple2Serializer`
-    * contract (ref KeySerializer.scala:145-176, any two serializable
-    * key types) at the SQL surface: (string, long), (uuid, long),
-    * (string, string), ... all index, push down point/lead/mixed
-    * lanes (where the component orders allow), and zip-join. */
-  def indexCompositeAny(df: DataFrame, keyColA: String, keyColB: String,
-      ordered: Boolean = false, numPartitions: Int = 0,
-      uuidCols: Set[String] = Set.empty): CompositeHandle[_, _] =
-    (specFor(df.schema, keyColA, uuidCols(keyColA)),
-      specFor(df.schema, keyColB, uuidCols(keyColB))) match {
-      case (sa: KeySpec[a], sb: KeySpec[b]) =>
-        buildComposite[a, b](df, keyColA, keyColB, sa, sb, ordered, numPartitions, 0)
-    }
-
-  /** RANGE-PARTITIONED composite handle: (a, b) pairs globally sorted
-    * in lexicographic order across `numPartitions` partitions with a
-    * radix tree inside each. The concatenated tuple serializer is
-    * order-preserving, so pushed leading-column intervals AND the
-    * a-point × b-range mixed lane prune PARTITIONS
-    * (IndexedRDD.range/multiRange under a RangePartitioner) before
-    * descending the per-partition tries — O(range) tasks at 100 TB,
-    * the composite twin of [[indexRangePartitioned]]. */
-  def indexCompositeRangePartitioned(df: DataFrame, keyColA: String,
-      keyColB: String, numPartitions: Int): CompositeHandle[Long, Long] =
-    buildComposite(df, keyColA, keyColB,
-      integralSpec(df, keyColA, "indexCompositeRangePartitioned"),
-      integralSpec(df, keyColB, "indexCompositeRangePartitioned"),
-      ordered = true, 0, numPartitions)
-
-  /** [[indexCompositeAny]] × [[indexCompositeRangePartitioned]]: a
-    * range-partitioned composite over any supported key pair. */
-  def indexCompositeAnyRangePartitioned(df: DataFrame, keyColA: String,
-      keyColB: String, numPartitions: Int,
-      uuidCols: Set[String] = Set.empty): CompositeHandle[_, _] =
-    (specFor(df.schema, keyColA, uuidCols(keyColA)),
-      specFor(df.schema, keyColB, uuidCols(keyColB))) match {
-      case (sa: KeySpec[a], sb: KeySpec[b]) =>
-        buildComposite[a, b](df, keyColA, keyColB, sa, sb,
-          ordered = true, 0, numPartitions)
-    }
-
   /** MERGE clause machinery shared by the single-key and composite
-    * [[Handle.mergeFrame]]/[[CompositeHandle.mergeFrame]]: clause
+    * [[Handle.mergeFrame]]/[[CompositeNHandle.mergeFrame]]: clause
     * presence, conditions, and change-set rows. SQL THREE-VALUED
     * semantics for clause conditions — a clause whose condition is
     * not TRUE is SKIPPED and the row falls through to the next clause
@@ -5173,17 +3860,6 @@ object IndexedFrame {
     MergeChangeSets(delC, hasDelete, upserts)
   }
 
-  /** `WHEN NOT MATCHED BY SOURCE` change sets, shared by the three
-    * `mergeFrame`s: clauses over the target rows whose key appears in
-    * NO source row (`unmatched` — the corpus-kept anti join of the
-    * handle against the source keys, which never shuffles the corpus).
-    * Conditions and update expressions are Columns over PLAIN target
-    * column names (SQL forbids source references here). Same
-    * three-valued condition handling and delete-before-update clause
-    * order as the matched clauses; the SQL rewrite pins textual order
-    * into the conditions before calling in. Key-disjoint from every
-    * matched/insert change set by construction — unmatched keys are in
-    * the target and not in the source. */
   /** A MERGE reduced to its two physical passes: the delete-key frame
     * and the upsert-row frame, both lazy and computed against the
     * pre-merge snapshot. `persisted` says the joined view was cached
@@ -5196,6 +3872,17 @@ object IndexedFrame {
   private[sql] final case class MergeSets(del: Option[DataFrame],
       ups: Option[DataFrame], persisted: Boolean, release: () => Unit)
 
+  /** `WHEN NOT MATCHED BY SOURCE` change sets, shared by the two
+    * `mergeFrame`s: clauses over the target rows whose key appears in
+    * NO source row (`unmatched` — the corpus-kept anti join of the
+    * handle against the source keys, which never shuffles the corpus).
+    * Conditions and update expressions are Columns over PLAIN target
+    * column names (SQL forbids source references here). Same
+    * three-valued condition handling and delete-before-update clause
+    * order as the matched clauses; the SQL rewrite pins textual order
+    * into the conditions before calling in. Key-disjoint from every
+    * matched/insert change set by construction — unmatched keys are in
+    * the target and not in the source. */
   private[sql] final case class NbsChangeSets(delKeys: Option[DataFrame],
       updRows: Option[DataFrame])
   private[sql] def nbsClauses(unmatched: DataFrame, keyCols: Seq[String],
@@ -5252,7 +3939,7 @@ object IndexedFrame {
     else body.union(localRows(body.sparkContext, corners.toSeq))
 
   /**
-   * The scan contract of the three handle relations. A pushed filter
+   * The scan contract of the two handle relations. A pushed filter
    * set routes to one lane; the DRIVER lanes — primary point/IN probes,
    * secondary point and range probes, and probe-memo hits of either —
    * end with their whole result on the driver, so
@@ -5304,247 +3991,32 @@ object IndexedFrame {
   private[sql] val PointKeyBudget = 10000L
   private[sql] val MixedLeadCap = 64
 
-  private[sql] class CompositeRelation[A, B](
-      private[sql] val h: CompositeHandle[A, B])(
-      @transient override val sqlContext: SQLContext)
-      extends BaseRelation with DriverLanes {
-
-    override def schema: StructType = h.schema
-    override def needConversion: Boolean = false
-
-    /** See [[IndexedRelation.sizeInBytes]]: exact memoized count ×
-      * default row width, so small handles broadcast unhinted. */
-    override def sizeInBytes: Long = IndexedFrame.relationSize(
-      h.statsAll(withExtrema = false)._1, schema)
-
-    import h.{codecA, codecB, tupSer, tupleOrd}
-
-    /** Point key set pushed on ONE of the two key columns. */
-    private def pointKeysOn[T](col: String, codec: KeyCodec[T],
-        f: Filter): Option[Set[T]] = f match {
-      case EqualTo(`col`, null) => Some(Set.empty)
-      case EqualTo(`col`, v) => Some(Try(codec.fromLiteral(v)).toOption.toSet)
-      case In(`col`, vs) =>
-        Some(vs.iterator.filter(_ != null)
-          .flatMap(v => Try(codec.fromLiteral(v)).toOption).toSet)
-      case _ => None
-    }
-
-    /** The access path for one pushed filter set. `unhandledFilters`
-      * and `buildScan` both route through this, so the filters the
-      * relation CLAIMS are exactly the ones the chosen lane ENFORCES. */
-    private sealed trait Lane
-    private case class PointLane(as: Set[A], bs: Set[B]) extends Lane
-    /** a ∈ as (≤ [[MixedLeadCap]]) × one b-interval: one disjoint trie
-      * interval per leading value, served in one multiRange pass. */
-    private case class MixedLane(as: Seq[A], bIv: Iv[B]) extends Lane
-    private case class LeadLane(iv: Iv[A]) extends Lane
-    private case object FullLane extends Lane
-
-    /** Trie ranges need the TUPLE byte order to be the lexicographic
-      * (a, b) order — true for every ordered build of order-preserving
-      * components, checked rather than assumed. */
-    private def rangeReady: Boolean = h.ordered && tupSer.isOrderPreserving
-
-    private def aBounds(f: Filter): Option[Iv[A]] =
-      boundsOn(h.keyColA, codecA, eqAsPrefix = true, f)
-    private def bBounds(f: Filter): Option[Iv[B]] =
-      boundsOn(h.keyColB, codecB, eqAsPrefix = false, f)
-
-    private def chooseLane(filters: Array[Filter]): Lane = {
-      val aSets = filters.flatMap(pointKeysOn(h.keyColA, codecA, _))
-      val bSets = filters.flatMap(pointKeysOn(h.keyColB, codecB, _))
-      val bIvs = if (rangeReady) filters.flatMap(bBounds) else Array.empty[Iv[B]]
-      val leadIvs = if (rangeReady) filters.flatMap(aBounds) else Array.empty[Iv[A]]
-      lazy val as = aSets.reduce(_ intersect _)
-      if (aSets.nonEmpty && bSets.nonEmpty) {
-        val bs = bSets.reduce(_ intersect _)
-        if (as.size.toLong * bs.size <= PointKeyBudget) return PointLane(as, bs)
-      }
-      if (aSets.nonEmpty && bIvs.nonEmpty && as.size <= MixedLeadCap)
-        return MixedLane(as.toSeq.sorted(codecA.ord), meet(bIvs.toSeq, codecB.ord))
-      if (leadIvs.nonEmpty) LeadLane(meet(leadIvs.toSeq, codecA.ord))
-      else FullLane
-    }
-
-    override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
-      chooseLane(filters) match {
-        case _: PointLane =>
-          // multiget enforces every pushed point filter exactly (AND
-          // semantics via set intersection + cross product) — but only
-          // codecs with exact literal semantics may CLAIM them (a
-          // normalizing codec's probe can return a row whose raw string
-          // differs from the literal); ranges pushed alongside are
-          // re-applied by Spark above the probe either way
-          filters.filter(f =>
-            !(codecA.exactLiterals && pointKeysOn(h.keyColA, codecA, f).isDefined) &&
-              !(codecB.exactLiterals && pointKeysOn(h.keyColB, codecB, f).isDefined))
-        case _: MixedLane =>
-          // a-point sets (intersected, exact-literal codecs only) and
-          // b-intervals (intersected; rangeLiteral already gated
-          // faithfulness) are enforced exactly by the per-leading-value
-          // trie scans
-          filters.filter(f =>
-            !(codecA.exactLiterals && pointKeysOn(h.keyColA, codecA, f).isDefined) &&
-              bBounds(f).isEmpty)
-        case _: LeadLane =>
-          // leading-column intervals (equality included) are enforced
-          // exactly by the trie range scan; everything else re-applies
-          filters.filter(f => aBounds(f).isEmpty)
-        case FullLane => filters
-      }
-
-    /** Tuple intervals + exact corner probes closing an unbounded-above
-      * scan that starts at `from`: scan to succ(maxKey) when defined,
-      * else to maxKey with maxKey probed exactly (only the
-      * all-domain-max tuple lacks a successor). One O(depth) maxKey
-      * descent, only on unbounded-above scans. */
-    private def closeAbove(from: (A, B)): (Seq[((A, B), (A, B))], Seq[(A, B)]) =
-      h.idx.maxKey() match {
-        case None => (Nil, Nil) // empty index
-        case Some(mk) if tupleOrd.lt(mk, from) => (Nil, Nil)
-        case Some(mk) =>
-          codecB.succ(mk._2).map(b2 => (mk._1, b2))
-            .orElse(codecA.succ(mk._1).map(a2 => (a2, codecB.minKey))) match {
-            case Some(end) => (Seq((from, end)), Nil)
-            case None => (Seq((from, mk)), Seq(mk))
-          }
-      }
-
-    /** One multiRange pass over the live intervals + one multiget for
-      * corner keys. */
-    private def serve(ivs: Seq[((A, B), (A, B))],
-        corners: Seq[(A, B)]): RDD[InternalRow] = {
-      val live = ivs.filter { case (f, t) => tupleOrd.lt(f, t) }
-      val body: RDD[InternalRow] =
-        if (live.isEmpty) sqlContext.sparkContext.emptyRDD[InternalRow]
-        else h.idx.multiRange(live).map(_._2)
-      withCorners(body, h.idx.multiget(corners.toArray).values)
-    }
-
-    override private[sql] def markDriverLane(filters: Array[Filter]): Boolean =
-      chooseLane(filters) match {
-        case PointLane(as, bs) => h.markLane("point", as.size * bs.size); true
-        // no KEY lane applies: secondary-indexed VALUE columns route
-        // equality/IN (and ranges on ordered secondaries) through point
-        // probes, exactly like the single-key relation
-        case FullLane => h.markSecondaryLane(filters)
-        case _ => false
-      }
-
-    override private[sql] def driverRows(
-        filters: Array[Filter]): Option[Array[InternalRow]] = {
-      h.lastProbeMemoHit = false
-      chooseLane(filters) match {
-        case PointLane(as, bs) =>
-          val keys = (for (a <- as; b <- bs) yield (a, b)).toArray
-          h.markLane("point", keys.length)
-          Some(h.idx.multiget(keys).values.toArray)
-        case FullLane => h.secondaryRows(filters)
-        case _ => None
-      }
-    }
-
-    override private[sql] def scanRows(filters: Array[Filter]): RDD[InternalRow] =
-      chooseLane(filters) match {
-        case _: PointLane =>
-          throw new IllegalStateException("point lanes are served by driverRows")
-        case MixedLane(as, bIv) =>
-          h.markLane("range", -1)
-          if (bIv.empty || as.isEmpty) {
-            sqlContext.sparkContext.emptyRDD[InternalRow]
-          } else {
-            val bFrom = bIv.from.getOrElse(codecB.minKey)
-            // one disjoint tuple interval per leading value — a single
-            // multiRange pass, each interval one O(depth) trie descent
-            val parts = as.map { a =>
-              bIv.to match {
-                case Some(bt) => (Seq(((a, bFrom), (a, bt))), Nil)
-                case None => codecA.succ(a) match {
-                  // unbounded-above b: close at the next leading value
-                  case Some(a2) => (Seq(((a, bFrom), (a2, codecB.minKey))), Nil)
-                  case None => closeAbove((a, bFrom)) // a == domain max
-                }
-              }
-            }
-            serve(parts.flatMap(_._1), parts.flatMap(_._2))
-          }
-        case LeadLane(iv) =>
-          h.markLane("range", -1)
-          if (iv.empty) {
-            sqlContext.sparkContext.emptyRDD[InternalRow]
-          } else {
-            // tuple range [(from, minB), (to, minB)) covers every
-            // second-column value for leading keys in [from, to)
-            val from = (iv.from.getOrElse(codecA.minKey), codecB.minKey)
-            val (ivs, corners) = iv.to match {
-              case Some(at) => (Seq((from, (at, codecB.minKey))), Nil)
-              case None => closeAbove(from)
-            }
-            serve(ivs, corners)
-          }
-        case FullLane =>
-          h.lastPointLookupKeys = -1
-          // the z-order sort projection serves boxed full lanes on ANY
-          // key arity; zone maps prune the composite full lane exactly
-          // like the single-key one (Spark re-applies the filters above
-          // either way)
-          IndexedFrame.zProjServe(sqlContext, h.zProjection,
-              h.schema, h.joinKeyCols, filters) match {
-            case Some((kept, rdd)) =>
-              h.lastScanKind = "full_zproj"
-              h.setZoneKept(kept)
-              rdd
-            case None => h.zoneKeeps(filters) match {
-              case Some(keep) =>
-                h.lastScanKind = "full_zone"
-                h.setZoneKept(keep.count(identity))
-                org.apache.spark.rdd.PartitionPruningRDD.create(
-                  h.idx.map(_._2), keep(_))
-              case None =>
-                h.lastScanKind = "full"
-                h.idx.map(_._2)
-            }
-          }
-      }
-  }
-
   // =====================================================================
-  // N-ary composite keys (arity >= 3): `(tenant, entity, ts)` and wider
+  // Composite keys (arity >= 2): `(user, ts)`, `(tenant, entity, ts)`, ...
   // =====================================================================
 
-  /** Handle over an N-COLUMN composite key: rows are key-unique over
-    * the column tuple, stored under the prefix-free
-    * [[graft.keys.KeySerializer.ConcatNSerializer]] encoding — which
-    * is order-preserving in lexicographic column order whenever every
-    * component serializer preserves its own (the 2-ary proof applied
-    * left to right) — so point gets and leading-PREFIX interval scans
-    * route exactly like the two-column handle's lanes at ANY arity:
-    *
-    *  - conjunctive equality/IN on EVERY key column → partition-pruned
-    *    `multiget` over the (budget-capped) cross product;
-    *  - equality on the first m columns + optional range on column
-    *    m+1 (ordered handles) → one contiguous tuple-space interval
-    *    per pinned prefix, served in a single multiRange pass —
-    *    partition-pruned under range partitioning;
-    *  - anything else → indexed full scan.
-    *
-    * The relation claims NOTHING in `unhandledFilters`: Spark
-    * re-applies every predicate above the routed read, so each lane is
-    * sound by construction (the per-lane exactness claims the 2-column
-    * handle makes are a pure optimization, addable per-lane later). */
+  /** Equal-depth partition bounds over a SORTED sample of z values —
+    * what RangePartitioner does: O(parts) driver bytes regardless of
+    * corpus size. */
+  private def equalDepthBounds(zs: Array[Long], parts: Int): Array[Long] =
+    if (zs.isEmpty) Array.empty[Long]
+    else {
+      val step = zs.length.toDouble / parts
+      (1 until parts).map(i => zs(math.min(zs.length - 1, (i * step).toInt)))
+        .distinct.toArray
+    }
+
   /** Build a [[graft.IndexedRDD.RankZPartitioner]] from a bounded key
     * sample: per-dimension equal-depth bucket edges (256 buckets/dim)
     * plus sampled z bounds — O(parts + dims) driver bytes regardless
-    * of corpus size, the same cost class as [[CompositeHandle.zOrdered]]'s
-    * sampling. `comp(key, i)` extracts key component `i`; `perm(d)` is
-    * the component z-dimension `d` reads (ZORDER BY column order). */
-  private[sql] def rankZFor(sample: Array[_ <: Any], comp: (Any, Int) => Any,
+    * of corpus size. `perm(d)` is the key component z-dimension `d`
+    * reads (ZORDER BY column order). */
+  private[sql] def rankZFor(sample: Array[Seq[Any]],
       ords: Array[Ordering[Any]], perm: Array[Int],
       parts: Int): graft.IndexedRDD.RankZPartitioner = {
     val nb = 256
     val edges: Array[Array[Any]] = perm.indices.map { d =>
-      val vals = sample.map(k => comp(k, perm(d))).sortWith(ords(d).lt)
+      val vals = sample.map(k => k(perm(d))).sortWith(ords(d).lt)
       if (vals.isEmpty) Array.empty[Any]
       else {
         val step = vals.length.toDouble / nb
@@ -5554,17 +4026,33 @@ object IndexedFrame {
     }.toArray
     val probe = new graft.IndexedRDD.RankZPartitioner(edges, ords, perm,
       Array.empty[Long])
-    val zs = sample.map(k => probe.zOf(k)).sorted
-    val bounds =
-      if (zs.isEmpty) Array.empty[Long]
-      else {
-        val step = zs.length.toDouble / parts
-        (1 until parts).map(i => zs(math.min(zs.length - 1, (i * step).toInt)))
-          .distinct.toArray
-      }
-    new graft.IndexedRDD.RankZPartitioner(edges, ords, perm, bounds)
+    new graft.IndexedRDD.RankZPartitioner(edges, ords, perm,
+      equalDepthBounds(sample.map(k => probe.zOf(k)).sorted, parts))
   }
 
+  /** Handle over a COMPOSITE key of N >= 2 columns (the reference
+    * treats Tuple2 keys as first-class — Tuple2Serializer, reference
+    * KeySerializer.scala:145-176 — and a compound key of any arity is
+    * one more serializer instance here): rows are key-unique over the
+    * column tuple, stored under the prefix-free
+    * [[graft.keys.KeySerializer.ConcatNSerializer]] encoding — which
+    * is order-preserving in lexicographic column order whenever every
+    * component serializer preserves its own (strings ride the lex
+    * serializer, so variable-width string leads order too) — and
+    * pushed predicates route as
+    *
+    *  - conjunctive equality/IN on EVERY key column → partition-pruned
+    *    `multiget` over the (budget-capped) cross product;
+    *  - equality/IN on the first m columns + optional range on column
+    *    m+1 (ordered handles) → one contiguous tuple-space interval
+    *    per pinned prefix, served in a single multiRange pass —
+    *    partition-pruned under range partitioning (m = 0: a
+    *    leading-column interval);
+    *  - anything else → indexed full scan, Spark re-applies residuals.
+    *
+    * Aggregates, top-k, per-group top-n, as-of reads and the prefix
+    * lookup join work off the LEADING column's key runs (or a pinned
+    * leading value), never reading values. */
   class CompositeNHandle private[sql] (
       val idx: IndexedRDD[Seq[Any], InternalRow],
       val keyCols: Seq[String], val schema: StructType, val ordered: Boolean,
@@ -5579,42 +4067,26 @@ object IndexedFrame {
       secondaryFilteredAggFor(secCol, aggCol)
     override private[sql] def zoneKeyCols: Set[String] =
       // under a z-curve layout the key lanes do NOT serve interval
-      // filters, so key columns zone-map like clustered value columns
-      // (see [[CompositeHandle.zoneKeyCols]]) — the zone path is what
-      // prunes N-dim box queries
-      if (idx.partitioner.exists(
-          _.isInstanceOf[graft.IndexedRDD.RankZPartitioner])) Set.empty
+      // filters (no natural-order descent), so the key columns are
+      // zone-mapped like any clustered value column — per-partition
+      // min/max of every dim are tight boxes there, and the zone path
+      // is what prunes box queries. COW ops preserve the partitioner,
+      // so the permission survives DML.
+      if (idx.partitioner.exists(p =>
+          p.isInstanceOf[graft.IndexedRDD.MortonPartitioner] ||
+            p.isInstanceOf[graft.IndexedRDD.RankZPartitioner]))
+        Set.empty
       else keyCols.toSet
-    private[sql] def codecs: IndexedSeq[KeyCodec[Any]] = specs.map(_.codec)
+    private[sql] val codecs: IndexedSeq[KeyCodec[Any]] = specs.map(_.codec)
     private[sql] val tupleOrd: Ordering[Seq[Any]] =
       new graft.keys.KeySerializer.SeqLexOrdering(specs.map(_.codec.ord))
     def toDF(implicit spark: SparkSession): DataFrame =
       spark.baseRelationToDataFrame(new CompositeNRelation(this)(spark.sqlContext))
 
-    /** Internal rows of `df` keyed by the N-column tuple (layout must
-      * match this handle's schema) — the N-ary [[compositePairs]]. */
-    private def keyedRows(df: DataFrame): RDD[(Seq[Any], InternalRow)] = {
-      val idxs = keyCols.map(schema.fieldIndex).toArray
-      val cs = specs.map(_.codec)
-      val colsDesc = keyCols.mkString(", ")
-      df.queryExecution.toRdd.mapPartitions(_.map { r =>
-        val parts = new Array[Any](idxs.length)
-        var i = 0
-        while (i < idxs.length) {
-          if (r.isNullAt(idxs(i)))
-            throw new IllegalArgumentException(
-              s"null key in composite ($colsDesc)")
-          parts(i) = cs(i).fromRow(r, idxs(i))
-          i += 1
-        }
-        (scala.collection.immutable.ArraySeq.unsafeWrapArray(parts): Seq[Any],
-          r.copy(): InternalRow)
-      })
-    }
-
-    /** DISTRIBUTED copy-on-write upsert at arity N — the
-      * [[CompositeHandle.upsertFrame]] contract on the N-column key:
-      * only the delta shuffles, the corpus never moves. */
+    /** DISTRIBUTED copy-on-write upsert — the composite twin of
+      * [[Handle.upsertFrame]]: only the delta shuffles to the index's
+      * tuple partitioning; the corpus never moves. Columns must match
+      * this handle's schema by name and type. */
     def upsertFrame(updates: DataFrame): CompositeNHandle = {
       // catalogString ignores nullability metadata (containsNull et
       // al) — the InternalRow layout is identical either way, and an
@@ -5623,7 +4095,7 @@ object IndexedFrame {
       val want = schema.map(f => (f.name, f.dataType.catalogString))
       require(got == want,
         s"update schema $got must match handle schema $want")
-      new CompositeNHandle(idx.multiputRDD(keyedRows(updates)),
+      new CompositeNHandle(idx.multiputRDD(compositeNPairs(updates, keyCols, codecs)),
         keyCols, schema, ordered, specs)
     }
 
@@ -5631,36 +4103,45 @@ object IndexedFrame {
     def compacted: CompositeNHandle =
       new CompositeNHandle(idx.compacted(), keyCols, schema, ordered, specs)
 
-    /** Z-ORDERED rebuild at arity N (the engine under `OPTIMIZE t
-      * ZORDER BY (a, b, c, ...)` naming all key columns): redistribute
-      * so each partition holds a z-CONTIGUOUS slice of RANK SPACE —
-      * every component maps to its equal-depth bucket rank (quantile
-      * edges frozen into the partitioner, so skew in any dimension
-      * cannot collapse the curve) and the ranks interleave. Works for
-      * ANY ordered component type (strings, UUIDs, decimals — not just
-      * the 2×Long [[CompositeHandle.zOrdered]] fast path). One corpus
-      * shuffle; key routing stays exact (pure key function);
-      * leading-range descents decline and N-dim box queries prune
-      * through zone maps on the key columns — call `analyzeZones` on
-      * the result (the catalog OPTIMIZE does). `dimOrder` = the ZORDER
-      * BY column order (a permutation of `keyCols`; the first column
-      * leads the interleave). */
+    /** Z-ORDERED rebuild (the engine under `OPTIMIZE t ZORDER BY (a, b,
+      * ...)` naming all key columns): redistribute so each partition
+      * holds a z-CONTIGUOUS slice of the key space — equal-depth bounds
+      * sampled from the data — then re-index per partition. Two
+      * Long-coded (integral/temporal) components interleave their raw
+      * bits ([[graft.IndexedRDD.MortonPartitioner]]); any other
+      * ordered component types (strings, UUIDs, decimals, or N >= 3)
+      * interleave RANK SPACE — every component maps to its equal-depth
+      * bucket rank (quantile edges frozen into the partitioner, so
+      * skew in any dimension cannot collapse the curve). One corpus
+      * shuffle, same cost class as any base rewrite; key routing stays
+      * exact (pure key function); leading-range descents decline and
+      * box queries prune through zone maps on the key columns — call
+      * `analyzeZones` on the result (the catalog OPTIMIZE does).
+      * `dimOrder` = the ZORDER BY column order (a permutation of
+      * `keyCols`; the first column leads the interleave). */
     def zOrderedN(dimOrder: Seq[String]): CompositeNHandle = {
       require(dimOrder.toSet == keyCols.toSet &&
         dimOrder.size == keyCols.size,
         s"ZORDER BY must name exactly the composite key columns " +
           s"(${keyCols.mkString(", ")}) once each")
       val perm = dimOrder.map(keyCols.indexOf).toArray
-      val ords = perm.map(i => codecs(i).ord.asInstanceOf[Ordering[Any]])
       val parts = math.max(1, idx.partitions.length)
       val pairs = idx.asInstanceOf[RDD[(Seq[Any], InternalRow)]]
-      val sample = pairs.keys
-        .takeSample(withReplacement = false,
-          num = math.max(1024, parts * 64))
-      val mp = IndexedFrame.rankZFor(sample.asInstanceOf[Array[Any]],
-        (k, i) => k.asInstanceOf[Seq[Any]](i), ords, perm, parts)
-      val redist = pairs.partitionBy(mp)
-      new CompositeNHandle(IndexedRDD(redist).cached,
+      val num = math.max(1024, parts * 64)
+      val mp: org.apache.spark.Partitioner =
+        if (keyCols.length == 2 && codecs.forall(_.isInstanceOf[LongCodec])) {
+          val morton = new graft.IndexedRDD.MortonPartitioner(
+            Array.empty[Long], 31, swapped = perm(0) == 1)
+          val zs = pairs.keys.map(k => morton.zOf(k))
+            .takeSample(withReplacement = false, num).sorted
+          new graft.IndexedRDD.MortonPartitioner(
+            equalDepthBounds(zs, parts), 31, morton.swapped)
+        } else {
+          val ords = perm.map(i => codecs(i).ord.asInstanceOf[Ordering[Any]])
+          val sample = pairs.keys.takeSample(withReplacement = false, num)
+          IndexedFrame.rankZFor(sample, ords, perm, parts)
+        }
+      new CompositeNHandle(IndexedRDD(pairs.partitionBy(mp)).cached,
         keyCols, schema, ordered = false, specs)
     }
 
@@ -5702,18 +4183,13 @@ object IndexedFrame {
     }
 
     /** Delta-cost sidecar transplant across one DML statement — the
-      * N-ary twin of [[Handle.maintainSidecarsFrom]]. */
+      * composite twin of [[Handle.maintainSidecarsFrom]]. */
     private[sql] def maintainSidecarsFrom(oldAny: AnyRef,
         del: Option[DataFrame], up: Option[DataFrame]): Unit = {
       val old = oldAny.asInstanceOf[CompositeNHandle]
-      val cs = specs.map(_.codec)
-      val delKeys = del.map(_.queryExecution.toRdd.map { r =>
-        val parts = new Array[Any](cs.length)
-        var i = 0
-        while (i < cs.length) { parts(i) = cs(i).fromRow(r, i); i += 1 }
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(parts): Seq[Any]
-      })
-      val upKeys = up.map(u => keyedRows(u).map(_._1))
+      val (cs, pos) = (codecs, codecs.indices.toArray)
+      val delKeys = del.map(_.queryExecution.toRdd.map(keyTuple(_, pos, cs)))
+      val upKeys = up.map(u => compositeNPairs(u, keyCols, codecs).map(_._1))
       maintainSecondariesFrom(old, delKeys, upKeys)
       widenZonesFrom(old, upKeys.map { ks =>
         idx.lookupJoinStream(ks.map((_, ())))((_, row, _) => row)
@@ -5730,17 +4206,11 @@ object IndexedFrame {
             keys.schema(i).dataType == schema(keyCols(i)).dataType),
         s"${keyCols.map(c => schema(c).dataType.catalogString)} key columns " +
           s"required, got ${keys.schema.map(_.dataType.catalogString)}")
-      val cs = specs.map(_.codec)
+      val (cs, pos) = (codecs, codecs.indices.toArray)
       val kRdd = keys.queryExecution.toRdd.map { r =>
-        val parts = new Array[Any](cs.length)
-        var i = 0
-        while (i < cs.length) {
-          if (r.isNullAt(i))
-            throw new IllegalArgumentException("null delete key component")
-          parts(i) = cs(i).fromRow(r, i)
-          i += 1
-        }
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(parts): Seq[Any]
+        if (pos.exists(r.isNullAt))
+          throw new IllegalArgumentException("null delete key component")
+        keyTuple(r, pos, cs)
       }
       new CompositeNHandle(idx.deleteRDD(kRdd), keyCols, schema, ordered, specs)
     }
@@ -5862,12 +4332,8 @@ object IndexedFrame {
     override private[sql] def keyTypeTag: String =
       s"compositeN:${specs.map(s => codecTag(s.codec)).mkString(",")}"
 
-    private def keyOf(r: InternalRow, idxs: Array[Int]): Seq[Any] = {
-      val parts = new Array[Any](idxs.length)
-      var i = 0
-      while (i < idxs.length) { parts(i) = specs(i).codec.fromRow(r, idxs(i)); i += 1 }
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(parts)
-    }
+    private def keyOf(r: InternalRow, idxs: Array[Int]): Seq[Any] =
+      keyTuple(r, idxs, codecs)
     private def keyedProbeN(probe: RDD[InternalRow],
         idxs: Array[Int]): RDD[(Seq[Any], InternalRow)] = {
       val self = this
@@ -5951,37 +4417,204 @@ object IndexedFrame {
         probe: RDD[InternalRow], keyIdx: Int): RDD[(InternalRow, InternalRow)] =
       secLookupOuterRows(col, probe, keyIdx).get
 
-    // ----- StatsCapable: no-scan aggregates at arity N. count(*) =
-    // the index size; min/max of the LEADING column = the byte-extreme
-    // tuples' heads (lexicographic order); GROUP BY leading count(*)
-    // and count(DISTINCT leading) from key runs — values never read.
+    /** Prefix (leading-entity) lookup join: equality on the LEADING
+      * key column alone fetches each probed entity's whole tuple run —
+      * one interval-routed pruned trie range scan per probe row. Needs
+      * the range-partitioned ordered layout. */
+    override private[sql] def prefixLookupCapable: Boolean = leadRunsServable
+    override private[sql] def lookupJoinRowsByPrefix(probe: RDD[InternalRow],
+        keyIdx: Int): RDD[(InternalRow, InternalRow)] = {
+      val c0 = codecs(0)
+      val mins = minsFrom(1)
+      val keyed: RDD[((Seq[Any], Option[Seq[Any]]), InternalRow)] =
+        probe.mapPartitions(_.flatMap { r =>
+          if (r.isNullAt(keyIdx)) Iterator.empty
+          else {
+            val a = c0.fromRow(r, keyIdx)
+            // the entity's whole tuple run: [a +: mins, succ a +: mins)
+            Iterator.single(((a +: mins, c0.succ(a).map(_ +: mins)), r.copy()))
+          }
+        })
+      idx.lookupRangeJoinStream(keyed)((_, v, u) => (v, u))(
+        implicitly, implicitly, tupSer)
+    }
+
+    // ----- StatsCapable: no-scan aggregates. count(*) = the index
+    // size; min/max of the LEADING column = the byte-extreme tuples'
+    // heads (lexicographic order); GROUP BY leading count(*)/stats and
+    // count(DISTINCT leading) from key runs — values never read.
     override private[sql] def statsKeyCol: Option[String] =
       if (ordered && tupSer.isOrderPreserving) Some(keyCols.head) else None
-    // see the single-key twin: save-time count -> zero-job stats
+    // reloaded handles carry the save-time exact count, so the first
+    // stats/planning touch launches NO job at all
     @transient private[sql] var presetStatsCount: Option[Long] = None
     @transient private lazy val statsCountN: Long =
       presetStatsCount.getOrElse(idx.count())
+    // memoized like the single-key handle: the index never mutates, so
+    // the first stats job answers every later stats query driver-side
     @transient private lazy val statsFullN: (Long, Option[Any], Option[Any]) = {
       val (c, mn, mx) = idx.keyStats()(tupSer)
-      (c, mn.map(t => specs(0).codec.toExternalSql(t.head)),
-        mx.map(t => specs(0).codec.toExternalSql(t.head)))
+      (c, mn.map(t => codecs(0).toExternalSql(t.head)),
+        mx.map(t => codecs(0).toExternalSql(t.head)))
     }
     override private[sql] def statsAll(
         withExtrema: Boolean): (Long, Option[Any], Option[Any]) =
       if (withExtrema) statsFullN else (statsCountN, None, None)
     override private[sql] def markStats(): Unit = { lastScanKind = "stats" }
 
-    private def leadRunsServableN: Boolean =
+    /** Ordered range-partitioned layout: partitions hold DISJOINT
+      * CONTIGUOUS tuple ranges and tries stream in key order, so each
+      * partition's distinct-leading-value runs are locally countable
+      * and a leading value spans only ADJACENT partitions. */
+    private def leadRunsServable: Boolean =
       ordered && tupSer.isOrderPreserving &&
         idx.partitioner.exists(
           _.isInstanceOf[org.apache.spark.RangePartitioner[_, _]])
 
-    /** `count(DISTINCT leading)`: per-partition (run count, first,
-      * last) minus boundary-continuing runs — the 2-ary algorithm with
-      * the tuple head as the run key. Memoized on the snapshot. */
-    @transient private lazy val leadDistinctMemoN: Long = {
-      val ordA = specs(0).codec.ord
-      val bounds = idx.partitionsRDD.mapPartitionsWithIndex { (pid, pit) =>
+    /** The met LEADING-column interval when every conjunct is a
+      * leading-column range/equality (IsNotNull on any key column is
+      * vacuous — no null key components are stored); None when any
+      * conjunct needs row inspection. */
+    private def leadIvOf(fs: Seq[Filter]): Option[Iv[Any]] = {
+      val keySet = keyCols.toSet
+      val ivs = fs.map {
+        case IsNotNull(c) if keySet.contains(c) => Some(Iv[Any](None, None))
+        case f => boundsOn(keyCols.head, codecs(0), eqAsPrefix = true, f)
+      }
+      if (ivs.exists(_.isEmpty)) None else Some(meet(ivs.map(_.get), codecs(0).ord))
+    }
+
+    /** The bounded leading-column interval `fs` pins down, in tuple
+      * space `[lo +: mins, hi +: mins)` — exact because the tuple order
+      * is lexicographic. Needs every later component's domain minimum
+      * (BigInt components have none and fall through to the scan
+      * path). Some(None) = a contradiction (zero rows). */
+    private def boundedLeadIntervalOf(
+        fs: Seq[Filter]): Option[Option[(Seq[Any], Seq[Any])]] = {
+      if (!ordered || !tupSer.isOrderPreserving || fs.isEmpty) return None
+      val mins = Try(minsFrom(1)).toOption
+      if (mins.isEmpty) return None
+      leadIvOf(fs).flatMap { iv =>
+        if (iv.empty) Some(None)
+        else (iv.from, iv.to) match {
+          case (Some(lo), Some(hi)) => Some(Some((lo +: mins.get, hi +: mins.get)))
+          case _ => None // unbounded side: leave it to the scan path
+        }
+      }
+    }
+
+    @transient private lazy val rangeCountMemo =
+      new SnapshotLru[(Seq[Any], Seq[Any]), Long](64)
+    /** `SELECT count(*) WHERE lead BETWEEN ...` on a (ts, id)-style
+      * layout: pruned radix descents over the leading-interval tuple
+      * range — values never read, rows never ship. */
+    override private[sql] def rangeCountFor(fs: Seq[Filter]): Option[() => Long] =
+      boundedLeadIntervalOf(fs).map {
+        case None => () => 0L
+        case Some((lo, hi)) => () =>
+          rangeCountMemo.getOrCompute((lo, hi))(idx.rangeCount(lo, hi)(tupSer))
+      }
+    @transient private lazy val rangeExtremaMemo =
+      new SnapshotLru[(Seq[Any], Seq[Any]), (Option[Any], Option[Any])](64)
+    /** min/max of the LEADING column under its own pushed interval: the
+      * byte-extreme tuples' heads, from two bounded O(depth) descents. */
+    override private[sql] def rangeExtremaFor(
+        fs: Seq[Filter]): Option[() => (Option[Any], Option[Any])] =
+      boundedLeadIntervalOf(fs).map {
+        case None => () => (None, None)
+        case Some((lo, hi)) => () =>
+          rangeExtremaMemo.getOrCompute((lo, hi)) {
+            val (mn, mx) = idx.rangeExtrema(lo, hi)(tupSer)
+            (mn.map(t => codecs(0).toExternalSql(t.head)),
+              mx.map(t => codecs(0).toExternalSql(t.head)))
+          }
+      }
+
+    /** Bounded memo of CACHED grouped-pushdown result RDDs on this
+      * IMMUTABLE snapshot: a repeated identical grouped query reuses
+      * the cached O(groups) result instead of re-walking the key
+      * stream — the dashboard-repeat shape, the same snapshot-memo
+      * soundness argument as the probe/top-k memos (COW mutations
+      * return a NEW handle, so entries never invalidate). LRU-capped
+      * at 8 lanes; evicted entries unpersist. Keys are structural
+      * (lane, lo, hi) triples — interpolated-string signatures could
+      * collide for string-keyed bounds containing the separator. */
+    @transient private lazy val groupedResultMemo =
+      new java.util.LinkedHashMap[(String, Option[Any], Option[Any]), RDD[_]](
+        16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[(String, Option[Any], Option[Any]), RDD[_]])
+            : Boolean = {
+          val evict = size() > 8
+          if (evict) e.getValue.unpersist(blocking = false)
+          evict
+        }
+      }
+    private def memoGrouped[T](sig: (String, Option[Any], Option[Any]))(
+        compute: => RDD[T]): RDD[T] =
+      groupedResultMemo.synchronized {
+        groupedResultMemo.get(sig) match {
+          case null =>
+            // O(groups) rows spread over the full shuffle fan-out:
+            // narrow-merge to a handful of partitions so every REPEAT
+            // collect pays a few task launches, not one per shuffle
+            // partition
+            val r0 = compute
+            val r = r0.coalesce(math.min(8, math.max(1, r0.getNumPartitions)))
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+            groupedResultMemo.put(sig, r)
+            r
+          case r => r.asInstanceOf[RDD[T]]
+        }
+      }
+
+    /** `GROUP BY leading COUNT(*)`: per-partition key-run counting
+      * (values never examined) + a reduce of the tiny (group, count)
+      * pairs — the "events per user/day" aggregate with no data-row
+      * exchange. Optional leading-interval conjuncts restrict the
+      * groups; other predicates fall through. Secondary-indexed
+      * columns route to posting lengths. */
+    override private[sql] def groupCountsFor(col: String,
+        fs: Seq[Filter]): Option[() => RDD[(Any, Long)]] = {
+      if (col != keyCols.head) return secondaryGroupCountsFor(col, fs)
+      leadIvOf(fs).map { iv =>
+        val ordA = codecs(0).ord
+        val dt = schema(keyCols.head).dataType
+        val (lo, hi) = (iv.from, iv.to)
+        () =>
+          if (iv.empty) idx.context.emptyRDD[(Any, Long)]
+          else memoGrouped(("gc", lo, hi)) {
+            val unbounded = lo.isEmpty && hi.isEmpty
+            val partial = idx.partitionsRDD.mapPartitions { pit =>
+              if (!pit.hasNext) Iterator.empty
+              else {
+                val m = new java.util.HashMap[Any, java.lang.Long]()
+                pit.next().iterator.foreach { case (k, _) =>
+                  val a = k.head
+                  if (unbounded || (lo.forall(l => ordA.gteq(a, l)) &&
+                      hi.forall(h => ordA.lt(a, h)))) {
+                    val prev = m.get(a)
+                    m.put(a, if (prev == null) 1L else prev.longValue() + 1L)
+                  }
+                }
+                import scala.jdk.CollectionConverters._
+                m.entrySet().iterator().asScala
+                  .map(e => (e.getKey: Any, e.getValue.longValue()))
+              }
+            }
+            partial.reduceByKey(_ + _).map { case (a, c) => (toCatalystKey(dt, a), c) }
+          }
+      }
+    }
+
+    /** The boundary pass of the leading-run lanes: ONE job collects,
+      * per non-empty partition in partition order, (pid, run count,
+      * first and last leading value, rows in the last run) —
+      * O(partitions) driver state, zero rows read, zero shuffle. Under
+      * [[leadRunsServable]] a run spans only ADJACENT partitions. */
+    private def leadRunBounds(): Array[(Int, Long, Any, Any, Long)] = {
+      val ordA = codecs(0).ord
+      idx.partitionsRDD.mapPartitionsWithIndex { (pid, pit) =>
         if (!pit.hasNext) Iterator.empty
         else {
           val it = pit.next().iterator
@@ -5990,235 +4623,323 @@ object IndexedFrame {
             var runs = 0L
             var first: Any = null
             var last: Any = null
-            var any = false
+            var cntLast = 0L
             it.foreach { case (k, _) =>
               val a = k.head
-              if (!any) { first = a; any = true; runs = 1L }
-              else if (!ordA.equiv(last, a)) runs += 1
-              last = a
+              if (runs == 0L) { first = a; last = a; runs = 1L; cntLast = 1L }
+              else if (ordA.equiv(a, last)) cntLast += 1
+              else { last = a; runs += 1; cntLast = 1L }
             }
-            Iterator.single((pid, runs, first, last))
+            Iterator.single((pid, runs, first, last, cntLast))
           }
         }
       }.collect().sortBy(_._1)
+    }
+
+    /** `count(DISTINCT leading)`: the [[leadRunBounds]] run counts minus
+      * the runs that continue across a partition boundary (a value
+      * spanning p partitions is counted p times and joined p−1 times).
+      * Memoized on the immutable snapshot: repeats cost zero jobs. */
+    @transient private lazy val leadDistinctMemo: Long = {
+      val ordA = codecs(0).ord
+      val bounds = leadRunBounds()
       val joins = bounds.iterator.sliding(2).withPartial(false).count {
-        case Seq((_, _, _, lastPrev), (_, _, firstCur, _)) =>
+        case Seq((_, _, _, lastPrev, _), (_, _, firstCur, _, _)) =>
           ordA.equiv(lastPrev, firstCur)
         case _ => false
       }
       bounds.iterator.map(_._2).sum - joins
     }
     override private[sql] def countDistinctFor(col: String): Option[() => Long] =
-      if (col == keyCols.head && leadRunsServableN) Some(() => leadDistinctMemoN)
-      else None
+      if (col == keyCols.head) {
+        if (leadRunsServable) Some(() => leadDistinctMemo) else None
+      } else if (keyCols.contains(col)) None
+      else secondaryCountDistinct(col)
 
     override private[sql] def colsAreFullKey(cols: Seq[String]): Boolean =
       cols.length == keyCols.length && cols.toSet == keyCols.toSet
 
     override private[sql] def groupStatCol(col: String): Option[String] =
-      if (col == keyCols.head && keyCols.length >= 2) Some(keyCols(1)) else None
+      if (col == keyCols.head) Some(keyCols(1)) else None
 
-    /** `GROUP BY leading → count(*), min(second), max(second)` from
-      * key tuples alone — the per-entity summary at arity N: on the
-      * ordered range-partitioned layout runs are contiguous and
-      * second-column-sorted, so each run folds streaming; otherwise a
-      * per-partition hash partial. Same v1 gating as
-      * [[groupCountsFor]] (vacuous IsNotNull only). */
-    override private[sql] def groupStatsFor(col: String,
-        fs: Seq[Filter]): Option[() => RDD[(Any, Long, Any, Any)]] = {
-      if (col != keyCols.head || keyCols.length < 2) return None
-      val keySet = keyCols.toSet
-      val vacuous = fs.forall {
-        case IsNotNull(c) => keySet.contains(c)
-        case _ => false
+    /** `GROUP BY f(leading) → count(*)[, min/max(leading)]` — the
+      * `date_trunc('day', ts)` rollup on a (ts, id) time-series index:
+      * bucket stats off the TUPLE-KEY stream (values never read), one
+      * (bucket, stats)-pair exchange. Filters must all be leading-column
+      * bounds. */
+    override private[sql] def exprGroupStatsFor(col: String,
+        bucketFactory: () => Any => Any, fs: Seq[Filter],
+        withExtrema: Boolean): Option[() => RDD[(Any, Long, Any, Any)]] = {
+      if (col != keyCols.head) return None
+      leadIvOf(fs).map { iv =>
+        val dtA = schema(keyCols.head).dataType
+        exprGroupStatsThunk[Seq[Any], Any](idx, codecs(0).ord,
+          a => toCatalystKey(dtA, a), (kk: Seq[Any]) => kk.head,
+          bucketFactory, iv.from, iv.to, iv.empty, withExtrema)
       }
-      if (!vacuous) return None
-      val ordA = specs(0).codec.ord
-      val ordB = specs(1).codec.ord
-      val dtA = schema(keyCols.head).dataType
-      val dtB = schema(keyCols(1)).dataType
-      val streamRuns = leadRunsServableN
-      Some(() => {
-        val partial = idx.partitionsRDD.mapPartitions { pit =>
-          if (!pit.hasNext) Iterator.empty
-          else if (streamRuns) {
-            val out = scala.collection.mutable.ArrayBuffer
-              .empty[(Any, (Long, Any, Any))]
-            var cur: Any = null
-            var curSet = false
-            var cnt = 0L
-            var mnB: Any = null
-            var mxB: Any = null
-            def flush(): Unit =
-              if (curSet && cnt > 0) out += ((cur, (cnt, mnB, mxB)))
-            pit.next().iterator.foreach { case (k, _) =>
-              val a = k.head
-              if (!curSet || !ordA.equiv(cur, a)) {
-                flush()
-                cur = a
-                curSet = true
-                cnt = 0L
-              }
-              if (cnt == 0L) mnB = k(1)
-              mxB = k(1)
-              cnt += 1
-            }
-            flush()
-            out.iterator
-          } else {
-            val m = new java.util.HashMap[Any, (Long, Any, Any)]()
-            pit.next().iterator.foreach { case (k, _) =>
-              val a = k.head
-              val b = k(1)
-              val prev = m.get(a)
-              if (prev == null) m.put(a, (1L, b, b))
-              else m.put(a, (prev._1 + 1L,
-                if (ordB.lt(b, prev._2)) b else prev._2,
-                if (ordB.gt(b, prev._3)) b else prev._3))
-            }
-            import scala.jdk.CollectionConverters._
-            m.entrySet().iterator().asScala.map(e => (e.getKey, e.getValue))
-          }
-        }
-        partial.reduceByKey { (x, y) =>
-          (x._1 + y._1,
-            if (ordB.lt(x._2, y._2)) x._2 else y._2,
-            if (ordB.gt(x._3, y._3)) x._3 else y._3)
-        }.map { case (a, (c, mnB, mxB)) =>
-          (toCatalystKey(dtA, a), c, toCatalystKey(dtB, mnB),
-            toCatalystKey(dtB, mxB))
-        }
-      })
     }
 
-    /** `SELECT DISTINCT leading` with zero shuffle: job 1 collects
-      * per-partition boundary values, job 2 streams run heads dropping
-      * boundary continuations — the 2-ary algorithm at arity N
-      * (unfiltered; predicates fall through to the scan plans). */
+    /** `SELECT DISTINCT leading [WHERE leading-bounds]` with ZERO
+      * shuffle: job 1 is [[leadRunBounds]], job 2 streams each trie's run
+      * heads in key order, dropping a partition's first head when it
+      * continues the previous partition's last run. The met interval
+      * filters identically on both sides of a boundary (same value ⇒
+      * same verdict), so the drop set stays valid under filters. */
     override private[sql] def distinctValuesFor(col: String,
         fs: Seq[Filter]): Option[() => RDD[Any]] = {
-      if (col != keyCols.head || !leadRunsServableN) return None
-      val keySet = keyCols.toSet
-      val vacuous = fs.forall {
-        case IsNotNull(c) => keySet.contains(c)
-        case _ => false
-      }
-      if (!vacuous) return None
-      val ordA = specs(0).codec.ord
-      val dtA = schema(keyCols.head).dataType
-      Some { () =>
-        val bounds = idx.partitionsRDD.mapPartitionsWithIndex { (pid, pit) =>
-          if (!pit.hasNext) Iterator.empty
+      if (col != keyCols.head || !leadRunsServable) return None
+      leadIvOf(fs).map { iv =>
+        val ordA = codecs(0).ord
+        val dtA = schema(keyCols.head).dataType
+        val (lo, hi) = (iv.from, iv.to)
+        () =>
+          if (iv.empty) idx.context.emptyRDD[Any]
           else {
-            val it = pit.next().iterator
-            if (!it.hasNext) Iterator.empty
-            else {
-              var first: Any = null
-              var last: Any = null
-              var any = false
-              it.foreach { case (k, _) =>
-                if (!any) { first = k.head; any = true }
-                last = k.head
+            val drop: Set[Int] = leadRunBounds().iterator.sliding(2)
+              .withPartial(false).collect {
+                case Seq((_, _, _, lastPrev, _), (pid, _, firstCur, _, _))
+                    if ordA.equiv(lastPrev, firstCur) => pid
+              }.toSet
+            val dropB = idx.context.broadcast(drop)
+            idx.partitionsRDD.mapPartitionsWithIndex { (pid, pit) =>
+              if (!pit.hasNext) Iterator.empty
+              else {
+                var prevSet = false
+                var prev: Any = null
+                val heads = pit.next().iterator.map(_._1.head).filter { a =>
+                  val isNew = !prevSet || !ordA.equiv(prev, a)
+                  prev = a
+                  prevSet = true
+                  isNew
+                }
+                val kept = if (dropB.value.contains(pid)) heads.drop(1) else heads
+                kept.filter(a => lo.forall(l => ordA.gteq(a, l)) &&
+                    hi.forall(h => ordA.lt(a, h)))
+                  .map(a => toCatalystKey(dtA, a))
               }
-              Iterator.single((pid, first, last))
             }
           }
-        }.collect().sortBy(_._1)
-        val drop: Set[Int] = bounds.iterator.sliding(2).withPartial(false)
-          .collect {
-            case Seq((_, _, lastPrev), (pid, firstCur, _))
-                if ordA.equiv(lastPrev, firstCur) => pid
-          }.toSet
-        val dropB = idx.context.broadcast(drop)
-        idx.partitionsRDD.mapPartitionsWithIndex { (pid, pit) =>
-          if (!pit.hasNext) Iterator.empty
-          else {
-            var prevSet = false
-            var prev: Any = null
-            val heads = pit.next().iterator.map(_._1.head).filter { a =>
-              val isNew = !prevSet || !ordA.equiv(prev, a)
-              prev = a
-              prevSet = true
-              isNew
+      }
+    }
+
+    private[sql] def groupTopNServable: Boolean = leadRunsServable
+
+    /** Per-group top-n — `row_number() OVER (PARTITION BY lead ORDER BY
+      * second) <= n` for EVERY group at once, served straight off the
+      * layout: the tuple order clusters each leading run contiguously
+      * and already sorted by the second column, so job 2 streams each
+      * trie once and emits the first n rows per run with their ranks —
+      * NO shuffle, NO sort, NO per-group window state, at most n rows
+      * per group ever materialized. Job 1 is the boundary pass
+      * ([[leadRunBounds]]), which assigns each partition's FIRST run
+      * its rank offset (rows of the same leading value in earlier
+      * partitions — a run spans only ADJACENT partitions under range
+      * partitioning). The "latest/first n events per user across all
+      * users" query, at any corpus size: Catalyst's default exchanges
+      * and sorts EVERY row. */
+    private[sql] def groupTopN(n: Int): RDD[(InternalRow, Int)] = {
+      val ordA = codecs(0).ord
+      // rank offset of each partition's first run: rows of that value
+      // carried in from preceding partitions
+      val offsets = Map.newBuilder[Int, Long]
+      var carry = 0L
+      var prevLast: Option[Any] = None
+      leadRunBounds().foreach { case (pid, _, first, last, cntLast) =>
+        val off = if (prevLast.exists(ordA.equiv(_, first))) carry else 0L
+        if (off > 0) offsets += pid -> off
+        // rows of the last value seen so far: a single-run partition
+        // extends the carried prefix; otherwise it began in this one
+        carry = (if (ordA.equiv(first, last)) off else 0L) + cntLast
+        prevLast = Some(last)
+      }
+      val offB = idx.context.broadcast(offsets.result())
+      val nn = n
+      idx.partitionsRDD.mapPartitionsWithIndex { (pid, pit) =>
+        if (!pit.hasNext) Iterator.empty
+        else {
+          val off0 = offB.value.getOrElse(pid, 0L)
+          var cur: Any = null
+          var curSet = false
+          var firstRun = true
+          var pos = 0L
+          pit.next().iterator.flatMap { case (k, row) =>
+            val a = k.head
+            if (!curSet || !ordA.equiv(cur, a)) {
+              if (curSet) firstRun = false
+              cur = a
+              curSet = true
+              pos = if (firstRun) off0 else 0L
             }
-            val kept = if (dropB.value.contains(pid)) heads.drop(1) else heads
-            kept.map(a => toCatalystKey(dtA, a))
+            pos += 1
+            if (pos <= nn) Iterator.single((row, pos.toInt))
+            else Iterator.empty
           }
         }
       }
     }
 
-    /** `GROUP BY leading → count(*)` from the key stream (values never
-      * deserialized). v1 gating: only vacuous IsNotNull conjuncts on
-      * key columns (no null key components are stored); any real
-      * predicate falls through to the scan plans. */
-    override private[sql] def groupCountsFor(col: String,
-        fs: Seq[Filter]): Option[() => RDD[(Any, Long)]] = {
+    /** `GROUP BY leading → count(*), min(second), max(second)` — the
+      * per-entity timeline summary ("per user: event count, first and
+      * last seen") answered from key tuples alone: per-partition
+      * (count, min, max) partials over the key stream (values NEVER
+      * deserialized), then one reduceByKey of O(groups) triples — the
+      * same partial-aggregate exchange shape Catalyst would emit, minus
+      * every data row. Same leading-interval gating as
+      * [[groupCountsFor]]. */
+    override private[sql] def groupStatsFor(col: String,
+        fs: Seq[Filter]): Option[() => RDD[(Any, Long, Any, Any)]] = {
       if (col != keyCols.head) return None
-      val keySet = keyCols.toSet
-      val vacuous = fs.forall {
-        case IsNotNull(c) => keySet.contains(c)
-        case _ => false
-      }
-      if (!vacuous) return None
-      val dt = schema(keyCols.head).dataType
-      Some(() => {
-        val partial = idx.partitionsRDD.mapPartitions { pit =>
-          if (!pit.hasNext) Iterator.empty
-          else {
-            val m = new java.util.HashMap[Any, java.lang.Long]()
-            pit.next().iterator.foreach { case (k, _) =>
-              val a = k.head
-              val prev = m.get(a)
-              m.put(a, if (prev == null) 1L else prev.longValue() + 1L)
+      leadIvOf(fs).map { iv =>
+        val ordA = codecs(0).ord
+        val ordB = codecs(1).ord
+        val dtA = schema(keyCols.head).dataType
+        val dtB = schema(keyCols(1)).dataType
+        val (lo, hi) = (iv.from, iv.to)
+        val streamRuns = leadRunsServable
+        () =>
+          if (iv.empty) idx.context.emptyRDD[(Any, Long, Any, Any)]
+          else memoGrouped(("gs", lo, hi)) {
+            val unbounded = lo.isEmpty && hi.isEmpty
+            def inRange(a: Any): Boolean = unbounded ||
+              (lo.forall(l => ordA.gteq(a, l)) && hi.forall(h => ordA.lt(a, h)))
+            val partial = idx.partitionsRDD.mapPartitions { pit =>
+              if (!pit.hasNext) Iterator.empty
+              else if (streamRuns) {
+                // ordered layout: runs are contiguous and second-column
+                // sorted, so each run folds streaming — min = first,
+                // max = last, no hashing, no per-key map state; the
+                // reduce below only ever merges partition-BOUNDARY runs
+                val out = scala.collection.mutable.ArrayBuffer
+                  .empty[(Any, (Long, Any, Any))]
+                var cur: Any = null
+                var curSet = false
+                var cnt = 0L
+                var mnB: Any = null
+                var mxB: Any = null
+                def flush(): Unit =
+                  if (curSet && cnt > 0) out += ((cur, (cnt, mnB, mxB)))
+                pit.next().iterator.foreach { case (k, _) =>
+                  val a = k.head
+                  if (!curSet || !ordA.equiv(cur, a)) {
+                    flush()
+                    cur = a
+                    curSet = true
+                    cnt = 0L
+                  }
+                  if (inRange(a)) {
+                    if (cnt == 0L) mnB = k(1)
+                    mxB = k(1)
+                    cnt += 1
+                  }
+                }
+                flush()
+                out.iterator
+              } else {
+                val m = new java.util.HashMap[Any, (Long, Any, Any)]()
+                pit.next().iterator.foreach { case (k, _) =>
+                  val a = k.head
+                  if (inRange(a)) {
+                    val b = k(1)
+                    val prev = m.get(a)
+                    if (prev == null) m.put(a, (1L, b, b))
+                    else m.put(a, (prev._1 + 1L,
+                      if (ordB.lt(b, prev._2)) b else prev._2,
+                      if (ordB.gt(b, prev._3)) b else prev._3))
+                  }
+                }
+                import scala.jdk.CollectionConverters._
+                m.entrySet().iterator().asScala.map(e => (e.getKey, e.getValue))
+              }
             }
-            import scala.jdk.CollectionConverters._
-            m.entrySet().iterator().asScala
-              .map(e => (e.getKey: Any, e.getValue.longValue()))
+            partial.reduceByKey { (x, y) =>
+              (x._1 + y._1,
+                if (ordB.lt(x._2, y._2)) x._2 else y._2,
+                if (ordB.gt(x._3, y._3)) x._3 else y._3)
+            }.map { case (a, (c, mnB, mxB)) =>
+              (toCatalystKey(dtA, a), c, toCatalystKey(dtB, mnB),
+                toCatalystKey(dtB, mxB))
+            }
           }
-        }
-        partial.reduceByKey(_ + _).map { case (a, c) => (toCatalystKey(dt, a), c) }
-      })
+      }
     }
+
+    // ----- tuple-space interval arithmetic, shared by the relation's
+    // prefix lanes, top-k pages, as-of reads and the prefix lookup join
+
+    /** Domain minima of key components `i` until N (throws for BigInt
+      * components, which have none). */
+    private[sql] def minsFrom(i: Int): Seq[Any] =
+      (i until keyCols.length).map(j => codecs(j).minKey)
 
     /** Smallest full key strictly above every key sharing prefix `p`
       * (bump rightmost bumpable component, pad with minimums); None =
-      * all-domain-max. Shared with [[CompositeNRelation]]'s interval
-      * construction — ONE successor definition for asOf and
+      * all-domain-max — ONE successor definition for asOf and
       * prefix-range scans. */
     private[sql] def succPrefixBound(p: Seq[Any]): Option[Seq[Any]] = {
       var i = p.length - 1
       while (i >= 0) {
-        specs(i).codec.succ(p(i)) match {
-          case Some(s2) => return Some((p.take(i) :+ s2) ++
-            ((i + 1) until keyCols.length).map(j => specs(j).codec.minKey))
+        codecs(i).succ(p(i)) match {
+          case Some(s2) => return Some((p.take(i) :+ s2) ++ minsFrom(i + 1))
           case None => i -= 1
         }
       }
       None
     }
 
-    /** Per-entity point-in-time read at ARBITRARY arity — the
-      * multi-tenant versioned lookup on a `(tenant, …, ts)` layout:
-      * the row whose first n−1 key columns equal `prefix` and whose
-      * LAST key column is the largest value ≤ `t`, or empty when the
-      * entity has no version at-or-before `t`. ONE bounded
-      * [[graft.IndexedRDD.floorEntry]] pass over the tuple byte space
-      * (the floor of `prefix :+ succ t` is either the entity's latest
-      * version ≤ t or some earlier tuple — one driver-side prefix
-      * check tells them apart) returns the row with its key — no
-      * second probe job. Requires an ordered handle —
-      * the 2-column [[CompositeHandle.asOf]] generalized. */
+    @transient private lazy val maxKeyMemo: Option[Seq[Any]] = idx.maxKey()(tupSer)
+
+    /** Close an unbounded-above scan starting at `from`: to the max
+      * tuple's successor when defined, else to the max tuple with the
+      * max tuple probed exactly (only the all-domain-max tuple lacks a
+      * successor). One memoized O(depth) maxKey descent. */
+    private def closeAbove(from: Seq[Any])
+        : (Seq[(Seq[Any], Seq[Any])], Seq[Seq[Any]]) =
+      maxKeyMemo match {
+        case None => (Nil, Nil) // empty index
+        case Some(mk) if tupleOrd.lt(mk, from) => (Nil, Nil)
+        case Some(mk) => succPrefixBound(mk) match {
+          case Some(end) => (Seq((from, end)), Nil)
+          case None => (Seq((from, mk)), Seq(mk))
+        }
+      }
+
+    /** Tuple interval(s) + exact corner probes for one pinned prefix
+      * `p` and an optional interval on the next column (None = the
+      * prefix's whole tuple run). */
+    private[sql] def intervalFor(p: Seq[Any], iv: Option[Iv[Any]])
+        : (Seq[(Seq[Any], Seq[Any])], Seq[Seq[Any]]) = {
+      val m = p.length
+      val loVal = iv.flatMap(_.from).getOrElse(codecs(m).minKey)
+      val from: Seq[Any] = (p :+ loVal) ++ minsFrom(m + 1)
+      iv.flatMap(_.to) match {
+        case Some(hiExcl) => (Seq((from, (p :+ hiExcl) ++ minsFrom(m + 1))), Nil)
+        case None => succPrefixBound(p) match {
+          case Some(end) => (Seq((from, end)), Nil)
+          case None => closeAbove(from) // prefix at domain max (or empty)
+        }
+      }
+    }
+
+    /** Per-entity point-in-time read — the versioned-dimension ("SCD")
+      * lookup on a `(id, …, ts)` layout: the row whose first n−1 key
+      * columns equal `prefix` and whose LAST key column is the largest
+      * value ≤ `t`, or empty when the entity has no version
+      * at-or-before `t`. ONE bounded [[graft.IndexedRDD.floorEntry]]
+      * pass over the tuple byte space (the floor of `prefix :+ succ t`
+      * is either the entity's latest version ≤ t or some earlier tuple
+      * — one driver-side prefix check tells them apart) returns the row
+      * with its key, so no second probe job runs. Requires an ordered
+      * handle. */
     def asOf(prefix: Seq[Any], t: Any)(implicit spark: SparkSession): DataFrame = {
       require(ordered && tupSer.isOrderPreserving,
-        "asOf needs an ordered N-ary handle with order-preserving keys")
+        "asOf needs an ordered composite handle with order-preserving keys")
       require(prefix.length == keyCols.length - 1,
         s"asOf pins the first ${keyCols.length - 1} key columns, " +
           s"got ${prefix.length}")
       val kp: Seq[Any] = prefix.zipWithIndex.map { case (v, i) =>
-        specs(i).codec.fromLiteral(v) }
-      val kt = specs.last.codec.fromLiteral(t)
-      val floor: Option[(Seq[Any], InternalRow)] = specs.last.codec.succ(kt) match {
+        codecs(i).fromLiteral(v) }
+      val kt = codecs.last.fromLiteral(t)
+      val floor: Option[(Seq[Any], InternalRow)] = codecs.last.succ(kt) match {
         case Some(ub) => idx.floorEntry(kp :+ ub)(tupSer)
         case None => succPrefixBound(kp) match {
           case Some(b) => idx.floorEntry(b)(tupSer)
@@ -6226,26 +4947,175 @@ object IndexedFrame {
         }
       }
       val hit = floor.filter { case (fk, _) => kp.indices.forall(i =>
-        specs(i).codec.ord.equiv(fk(i), kp(i))) }
+        codecs(i).ord.equiv(fk(i), kp(i))) }
       lastScanKind = "asof"
       rowDF(hit.map(_._2), schema)
     }
 
+    /** BATCH point-in-time join — the feature-store primitive: for
+      * every probe row (entity…, t), the LATEST version row of that
+      * entity with time <= t, emitted as probe columns ++ version
+      * columns. `prefixCols` name the probe columns matching the first
+      * n−1 key columns, `timeCol` the one matching the last. Inner
+      * semantics by default (probes with no version, or with a null
+      * key component, emit nothing — SQL's as-of condition is never
+      * true on null); `keepMisses` gives LEFT-OUTER semantics instead:
+      * every probe row kept, version columns null-extended. Each probe
+      * row routes to the partitions overlapping its entity's
+      * `[prefix :+ minT, prefix :+ succ t)` tuple interval — ONE
+      * partition unless the entity's versions straddle a boundary — and
+      * runs one O(depth) bounded floor descent; a tiny per-probe reduce
+      * picks the boundary-spanning winner. The versions corpus never
+      * moves and is never scanned: cost scales with the probe batch.
+      * Catalyst's equivalent is a join on entity (corpus shuffle!) plus
+      * a per-entity window max. Probe column dtypes must match the key
+      * columns'; output column names must not collide (rename probe
+      * columns first). */
+    def asOfJoinFrame(probe: DataFrame, prefixCols: Seq[String], timeCol: String,
+        keepMisses: Boolean = false)(
+        implicit spark: SparkSession): DataFrame = {
+      require(leadRunsServable,
+        "asOfJoinFrame needs a range-partitioned ordered composite handle")
+      val probeCols = prefixCols :+ timeCol
+      require(probeCols.length == keyCols.length &&
+        probeCols.zip(keyCols).forall { case (p, k) =>
+          probe.schema(p).dataType == schema(k).dataType },
+        s"probe (${probeCols.mkString(", ")}) must match the key dtypes " +
+          s"(${keyCols.map(k => schema(k).dataType.catalogString).mkString(", ")})")
+      require(probe.schema.fieldNames.toSet
+        .intersect(schema.fieldNames.toSet).isEmpty,
+        "probe and version column names must not collide")
+      val pIdx = probeCols.map(probe.schema.fieldIndex).toArray
+      val cs = codecs
+      val self = this
+      val mins = minsFrom(0)
+      val keyed: RDD[((Seq[Any], Option[Seq[Any]]), InternalRow)] =
+        probe.queryExecution.toRdd.mapPartitions(_.flatMap { r =>
+          if (pIdx.exists(r.isNullAt)) {
+            // LEFT-OUTER keeps null-keyed probes as guaranteed misses:
+            // an EMPTY interval routes once and floors to None
+            if (keepMisses)
+              Iterator.single(((mins, Some(mins): Option[Seq[Any]]), r.copy()))
+            else Iterator.empty
+          } else {
+            val k = pIdx.indices.map(i => cs(i).fromRow(r, pIdx(i)))
+            val prefix = k.init
+            // strict tuple upper bound prefix :+ succ t; t at its
+            // domain max bounds at the prefix's successor (None =
+            // unbounded above)
+            val ub: Option[Seq[Any]] = cs.last.succ(k.last) match {
+              case Some(s2) => Some(prefix :+ s2)
+              case None => self.succPrefixBound(prefix)
+            }
+            Iterator.single(((prefix :+ cs.last.minKey, ub), r.copy()))
+          }
+        })
+      val outSchema = org.apache.spark.sql.types.StructType(
+        probe.schema.fields ++ schema.fields.map(_.copy(nullable = true)))
+      val types = outSchema.fields.map(_.dataType)
+      val nVersion = schema.length
+      val rows = idx.lookupFloorStream(keyed)(implicitly, tupSer)
+        .mapPartitions { it =>
+          val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
+          val nullVersion: InternalRow =
+            new org.apache.spark.sql.catalyst.expressions
+              .GenericInternalRow(nVersion)
+          val proj = UnsafeProjection.create(types)
+          it.flatMap {
+            case (Some((_, v)), u) =>
+              Iterator.single(proj(joined(u, v)): InternalRow)
+            case (None, u) =>
+              if (keepMisses)
+                Iterator.single(proj(joined(u, nullVersion)): InternalRow)
+              else Iterator.empty
+          }
+        }
+      org.apache.spark.sql.graftbridge.ExpressionBridge
+        .internalDF(spark, rows, outSchema)
+    }
+
     /** `ORDER BY <key-column prefix> LIMIT n`: the range-partitioned
-      * N-ary layout is globally sorted in lexicographic column order,
-      * so a uniform-direction sort on any non-empty keyCols prefix
-      * reads only the covering partition prefix/suffix — same claim
-      * as the 2-column handle, at any arity. */
-    override private[sql] def topKCapable: Boolean =
-      ordered && tupSer.isOrderPreserving &&
-        idx.partitioner.exists(
-          _.isInstanceOf[org.apache.spark.RangePartitioner[_, _]])
+      * layout is globally sorted in lexicographic column order, so a
+      * uniform-direction sort on any non-empty keyCols prefix reads
+      * only the covering partition prefix/suffix. */
+    override private[sql] def topKCapable: Boolean = leadRunsServable
     override private[sql] def topKCols: Seq[String] = keyCols
     override protected def fetchOrderedRows(n: Int, asc: Boolean): Seq[InternalRow] =
       idx.takeOrderedByKey(n, asc)(tupSer).toSeq.map(_._2)
     override protected def markTopK(): Unit = {
       lastScanKind = "topk"
       lastPointLookupKeys = -1
+    }
+
+    /** Composite keyset pagination: `WHERE lead >= cursor ORDER BY
+      * lead[, …] LIMIT n` (time-series export pages) and `WHERE lead =
+      * X AND second > cursor ORDER BY second LIMIT n` (PER-ENTITY
+      * TIMELINE pages — a user's activity feed, a document's version
+      * history). Claimable when the conjuncts are leading-column
+      * interval bounds, or one exact leading equality plus
+      * second-column bounds; anything else needs row inspection and
+      * falls through. topKCapable already implies order-preserving
+      * components, so every codec has a domain minimum. */
+    override private[sql] def topKFilterClaimable(fs: Seq[Filter]): Boolean =
+      topKCapable && leadIvOf(fs).isDefined
+
+    /** (pinned leading value, met second-column interval) when `fs` is
+      * exactly one exact leading-column equality plus optional
+      * second-column bounds — the per-entity timeline claim. A
+      * normalizing leading codec (uuid) never claims: the probe could
+      * return rows whose raw string differs from the literal, and no
+      * residual filter runs above this node. */
+    private def pinnedLeadOf(fs: Seq[Filter]): Option[(Any, Iv[Any])] = {
+      val (c0, c1) = (codecs(0), codecs(1))
+      if (!c0.exactLiterals) return None
+      var aEq: Option[Any] = None
+      var ok = true
+      val bIvs = scala.collection.mutable.ArrayBuffer.empty[Iv[Any]]
+      fs.foreach {
+        case IsNotNull(c) if keyCols.contains(c) => ()
+        case EqualTo(c, v) if c == keyCols.head && v != null =>
+          Try(c0.fromLiteral(v)).toOption match {
+            case Some(k) if aEq.forall(c0.ord.equiv(_, k)) => aEq = Some(k)
+            case _ => ok = false
+          }
+        case f => boundsOn(keyCols(1), c1, eqAsPrefix = false, f) match {
+          case Some(iv) => bIvs += iv
+          case None => ok = false
+        }
+      }
+      if (!ok) None else aEq.map(a => (a, meet(bIvs.toSeq, c1.ord)))
+    }
+
+    override private[sql] def topKClaimable(sortCols: Seq[String],
+        fs: Seq[Filter]): Boolean =
+      topKCapable && sortCols.nonEmpty && (
+        (keyCols.take(sortCols.length) == sortCols && topKFilterClaimable(fs)) ||
+          ((keyCols.slice(1, 1 + sortCols.length) == sortCols ||
+            keyCols.take(sortCols.length) == sortCols) &&
+            pinnedLeadOf(fs).isDefined))
+
+    override protected def fetchOrderedRowsInRange(fs: Seq[Filter], n: Int,
+        asc: Boolean): Seq[InternalRow] = {
+      // per-entity page: one contiguous tuple range under the pinned
+      // leading value; otherwise the met leading-column interval
+      val span = pinnedLeadOf(fs) match {
+        case Some((a, bIv)) =>
+          if (bIv.empty) None else Some(intervalFor(Seq(a), Some(bIv)))
+        case None =>
+          val iv = leadIvOf(fs).get
+          if (iv.empty) None else Some(intervalFor(Vector.empty, Some(iv)))
+      }
+      span match {
+        case Some((Seq((from, to)), corners)) =>
+          val body =
+            idx.takeOrderedByKeyInRange(from, to, n, asc)(tupSer).toSeq.map(_._2)
+          if (corners.isEmpty) body
+          else {
+            val cRows = idx.multiget(corners.toArray).values.toSeq
+            (if (asc) body ++ cRows else cRows ++ body).take(n)
+          }
+        case _ => Nil
+      }
     }
   }
 
@@ -6336,9 +5206,9 @@ object IndexedFrame {
           pts(i).get.toSeq.sorted(h.specs(i).codec.ord))), ivNext)
     }
 
-    /** Claims mirror the 2-column relation LANE-FOR-LANE: a filter is
-      * claimed exactly when the routed access path ENFORCES it — the
-      * pushed equality/IN conjuncts on point-pinned columns (exact-
+    /** A filter is claimed exactly when the routed access path
+      * ENFORCES it — the pushed equality/IN conjuncts on point-pinned
+      * columns (exact-
       * literal codecs only), the range conjuncts on the first unpinned
       * column of a prefix lane, and IsNotNull on any KEY column
       * (vacuous: the index never stores null keys). Residual filters —
@@ -6376,41 +5246,6 @@ object IndexedFrame {
       }
     }
 
-    private def minsFrom(i: Int): Seq[Any] =
-      (i until n).map(j => h.specs(j).codec.minKey)
-
-    /** Close an unbounded-above scan starting at `from`: one O(depth)
-      * maxKey descent, corner-probing the max tuple only when it has
-      * no successor (mirrors the 2-column relation's closeAbove).
-      * Successor arithmetic is the handle's [[CompositeNHandle
-      * .succPrefixBound]] — the same definition asOf uses. */
-    private def closeAbove(from: Seq[Any])
-        : (Seq[(Seq[Any], Seq[Any])], Seq[Seq[Any]]) =
-      h.idx.maxKey()(h.tupSer) match {
-        case None => (Nil, Nil)
-        case Some(mk) if h.tupleOrd.lt(mk, from) => (Nil, Nil)
-        case Some(mk) => h.succPrefixBound(mk) match {
-          case Some(end) => (Seq((from, end)), Nil)
-          case None => (Seq((from, mk)), Seq(mk))
-        }
-      }
-
-    /** Tuple interval(s) for one pinned prefix + optional interval on
-      * the next column. */
-    private def intervalFor(p: Seq[Any], iv: Option[Iv[Any]])
-        : (Seq[(Seq[Any], Seq[Any])], Seq[Seq[Any]]) = {
-      val m = p.length
-      val loVal = iv.flatMap(_.from).getOrElse(h.specs(m).codec.minKey)
-      val from: Seq[Any] = (p :+ loVal) ++ minsFrom(m + 1)
-      iv.flatMap(_.to) match {
-        case Some(hiExcl) => (Seq((from, (p :+ hiExcl) ++ minsFrom(m + 1))), Nil)
-        case None => h.succPrefixBound(p) match {
-          case Some(end) => (Seq((from, end)), Nil)
-          case None => closeAbove(from) // prefix at domain max (or empty)
-        }
-      }
-    }
-
     private def serve(ivs: Seq[(Seq[Any], Seq[Any])],
         corners: Seq[Seq[Any]]): RDD[InternalRow] = {
       val live = ivs.filter { case (f, t) => h.tupleOrd.lt(f, t) }
@@ -6425,7 +5260,8 @@ object IndexedFrame {
         case EmptyLane => h.markLane("point", 0); true
         case PointLane(keys) => h.markLane("point", keys.length); true
         // no KEY lane applies: secondary-indexed VALUE columns route
-        // exactly like the 2-column relation's full lane
+        // equality/IN (and ranges on ordered secondaries) through point
+        // probes, exactly like the single-key relation
         case FullLane => h.markSecondaryLane(filters)
         case _ => false
       }
@@ -6451,12 +5287,12 @@ object IndexedFrame {
           throw new IllegalStateException("point lanes are served by driverRows")
         case PrefixLane(prefixes, iv) =>
           h.markLane("range", -1)
-          val parts = prefixes.map(p => intervalFor(p, iv))
+          val parts = prefixes.map(p => h.intervalFor(p, iv))
           serve(parts.flatMap(_._1), parts.flatMap(_._2))
         case FullLane =>
           h.lastPointLookupKeys = -1
           // projection-boxed full lanes, then zone maps, then the plain
-          // scan — same order as the other arities (never claimed;
+          // scan — same order as the single-key relation (never claimed;
           // Spark re-applies the predicates)
           IndexedFrame.zProjServe(sqlContext, h.zProjection,
               h.schema, h.keyCols, filters) match {
@@ -6479,21 +5315,48 @@ object IndexedFrame {
   }
 
   /** Index by N >= 2 key columns of any supported type (integral/
-    * temporal, string, uuid-string via `uuidCols`, decimal(p,0)).
-    * `ordered = true` builds radix partitions so pinned-prefix +
-    * next-column-range predicates route into trie interval scans. */
+    * temporal, string, uuid-string via `uuidCols`, decimal(p,0),
+    * scaled decimal, double/float); uniqueness is enforced over the
+    * tuple, last write wins. `ordered = true` builds radix partitions
+    * so pinned-prefix + next-column-range predicates route into trie
+    * interval scans; `numPartitions > 0` forces a hash partition count
+    * (co-partitioned zip joins). */
   def indexCompositeN(df: DataFrame, keyCols: Seq[String],
       ordered: Boolean = false, numPartitions: Int = 0,
       uuidCols: Set[String] = Set.empty): CompositeNHandle =
     buildCompositeN(df, keyCols, ordered, numPartitions, 0, uuidCols)
 
-  /** RANGE-PARTITIONED N-column composite: tuples globally sorted in
-    * lexicographic column order, so pinned-prefix intervals prune
-    * PARTITIONS before descending the per-partition tries — the N-ary
-    * twin of [[indexCompositeRangePartitioned]]. */
+  /** RANGE-PARTITIONED composite: tuples globally sorted in
+    * lexicographic column order across `numPartitions` partitions with
+    * a radix tree inside each, so pinned-prefix intervals prune
+    * PARTITIONS before descending the per-partition tries — O(range)
+    * tasks at 100 TB, the composite twin of [[indexRangePartitioned]]. */
   def indexCompositeNRangePartitioned(df: DataFrame, keyCols: Seq[String],
       numPartitions: Int, uuidCols: Set[String] = Set.empty): CompositeNHandle =
     buildCompositeN(df, keyCols, ordered = true, 0, numPartitions, uuidCols)
+
+  /** Internal rows of `df` keyed by the `keyCols` tuple; a null key
+    * component fails the build (keys are never null). */
+  private def compositeNPairs(df: DataFrame, keyCols: Seq[String],
+      codecs: IndexedSeq[KeyCodec[Any]]): RDD[(Seq[Any], InternalRow)] = {
+    val idxs = keyCols.map(df.schema.fieldIndex).toArray
+    val colsDesc = keyCols.mkString(", ")
+    df.queryExecution.toRdd.mapPartitions(_.map { r =>
+      if (idxs.exists(r.isNullAt))
+        throw new IllegalArgumentException(s"null key in composite ($colsDesc)")
+      (keyTuple(r, idxs, codecs), r.copy(): InternalRow)
+    })
+  }
+
+  /** The key tuple at columns `idxs` of `r`, component i decoded by
+    * `codecs(i)`; callers decide what a null component means. */
+  private def keyTuple(r: InternalRow, idxs: Array[Int],
+      codecs: IndexedSeq[KeyCodec[Any]]): Seq[Any] = {
+    val parts = new Array[Any](idxs.length)
+    var i = 0
+    while (i < idxs.length) { parts(i) = codecs(i).fromRow(r, idxs(i)); i += 1 }
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(parts)
+  }
 
   private def buildCompositeN(df: DataFrame, keyCols: Seq[String],
       ordered: Boolean, numPartitions: Int, rangeParts: Int,
@@ -6503,22 +5366,8 @@ object IndexedFrame {
       specFor(df.schema, c, uuidCols(c)).asInstanceOf[KeySpec[Any]])
     implicit val tupSer: KeySerializer[Seq[Any]] =
       new graft.keys.KeySerializer.ConcatNSerializer(specs.map(_.ser))
-    val idxs = keyCols.map(df.schema.fieldIndex).toArray
     val codecs = specs.map(_.codec)
-    val colsDesc = keyCols.mkString(", ")
-    val raw: RDD[(Seq[Any], InternalRow)] =
-      df.queryExecution.toRdd.mapPartitions(_.map { r =>
-        val parts = new Array[Any](idxs.length)
-        var i = 0
-        while (i < idxs.length) {
-          if (r.isNullAt(idxs(i)))
-            throw new IllegalArgumentException(s"null key in composite ($colsDesc)")
-          parts(i) = codecs(i).fromRow(r, idxs(i))
-          i += 1
-        }
-        (scala.collection.immutable.ArraySeq.unsafeWrapArray(parts): Seq[Any],
-          r.copy(): InternalRow)
-      })
+    val raw = compositeNPairs(df, keyCols, codecs)
     val idx =
       if (rangeParts > 0) {
         implicit val ord: Ordering[Seq[Any]] =
@@ -6550,11 +5399,6 @@ object IndexedFrame {
     new Handle(idx.cached, keyCol, df.schema, ordered = true, codec)
   }
 
-  /** Persist a handle: the index itself in [[graft.IndexedRDDIO]]'s
-    * one-file-per-partition layout (partitioner included) plus a
-    * `_frame` meta file (key column, orderedness, codec tag, schema).
-    * Reloading re-attaches everything — point reads, range pushdown,
-    * and narrow joins work immediately, with no shuffle or rebuild. */
   /** The exact row count a [[save]] observed, persisted as `_count` so
     * a reloaded handle's stats (and Catalyst `sizeInBytes`) answer
     * with zero jobs. Optional on read: older saves load cleanly and
@@ -6605,190 +5449,174 @@ object IndexedFrame {
     } finally out2.close()
   }
 
-  def save(h: Handle[_], path: String): Unit = {
+  /** The `_indexes` manifest a save carried — (column, rangeable,
+    * sub-directory) per secondary index, the zone-enabled columns and
+    * their zone arrays. Optional: older saves have none. */
+  private final case class IndexSidecars(
+      secondaries: Seq[(String, Boolean, String)],
+      zoneCols: Set[String], zoneStats: Map[String, Array[Zone]])
+
+  private def readIndexSidecars(fs: org.apache.hadoop.fs.FileSystem,
+      path: String): Option[IndexSidecars] = {
+    val ixPath = new org.apache.hadoop.fs.Path(path, "_indexes")
+    if (!fs.exists(ixPath)) None
+    else {
+      val in = new java.io.ObjectInputStream(fs.open(ixPath))
+      try {
+        val secs = (0 until in.readInt()).map { _ =>
+          (in.readObject().asInstanceOf[String], in.readBoolean(),
+            in.readObject().asInstanceOf[String])
+        }
+        Some(IndexSidecars(secs, in.readObject().asInstanceOf[Set[String]],
+          in.readObject().asInstanceOf[Map[String, Array[Zone]]]))
+      } finally in.close()
+    }
+  }
+
+  /** Re-attach the persisted secondary indexes + zone maps of a reloaded
+    * handle — no O(corpus) rebuild. */
+  private def restoreIndexSidecars(h: SecondaryCapable[_] with ZoneMapped,
+      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit =
+    readIndexSidecars(fs, path).foreach { ix =>
+      ix.secondaries.foreach { case (c, rangeable, sub) =>
+        h.restoreSecondaryFrom(c, rangeable, s"$path/$sub")
+      }
+      h.restoreZones(ix.zoneCols, ix.zoneStats)
+    }
+
+  /** Persist a handle: the index itself in [[graft.IndexedRDDIO]]'s
+    * one-file-per-partition layout (partitioner included), a `_frame`
+    * meta file (`header` writes it: key column, orderedness, kind/codec
+    * tag and schema first, kind-specific fields after), the `_count`
+    * and the secondary/zone sidecars. Reloading re-attaches everything
+    * — point reads, range pushdown, and narrow joins work immediately,
+    * with no shuffle or rebuild. */
+  private def saveFrame(idx: graft.IndexedRDD[_, InternalRow],
+      h: SecondaryCapable[_] with ZoneMapped, path: String)(
+      header: java.io.ObjectOutputStream => Unit): Unit = {
     val rows = graft.IndexedRDDIO.save(
-      h.idx.asInstanceOf[graft.IndexedRDD[Any, InternalRow]], path)
+      idx.asInstanceOf[graft.IndexedRDD[Any, InternalRow]], path)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new org.apache.hadoop.fs.Path(path).toUri,
-      org.apache.spark.graftbridge.ConfBridge.broadcast(
-        h.idx.sparkContext).value)
+      org.apache.spark.graftbridge.ConfBridge.broadcast(idx.sparkContext).value)
     val out = new java.io.ObjectOutputStream(fs.create(
       new org.apache.hadoop.fs.Path(path, "_frame"), true))
-    try {
+    try header(out) finally out.close()
+    writeSavedCount(fs, path, rows)
+    saveIndexSidecars(h, path, fs)
+  }
+
+  def save(h: Handle[_], path: String): Unit =
+    saveFrame(h.idx, h, path) { out =>
       out.writeObject(h.keyCol); out.writeBoolean(h.ordered)
       out.writeObject(codecTag(h.codec)); out.writeObject(h.schema.json)
-    } finally out.close()
-    // secondary indexes and zone maps ride along: each inverted index
-    // saves under sec_<i>/ with the same one-file-per-partition layout
-    // (its radix/hash partition structure and partitioner come back
-    // with it), zones are a few driver-side bytes per partition — a
-    // reloaded handle serves secondary probes and zone-pruned scans
-    // immediately, no O(corpus) rebuild. `_indexes` is optional on
-    // read, so pre-existing saves still load.
-    writeSavedCount(fs, path, rows)
-    saveIndexSidecars(h, path, fs)
-  }
+    }
 
-  /** Persist a COMPOSITE handle: same one-file-per-partition index
-    * layout as the single-key [[save]], with a `_frame` meta tagged
-    * "composite" carrying BOTH key columns + per-component codec tags
-    * + orderedness. Reload with [[loadComposite]] — point,
-    * leading-range, and mixed pushdown all work immediately from the
-    * reloaded copy, no rebuild. */
-  def save(h: CompositeHandle[_, _], path: String): Unit = {
-    val rows = graft.IndexedRDDIO.save(
-      h.idx.asInstanceOf[graft.IndexedRDD[Any, InternalRow]], path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new org.apache.hadoop.fs.Path(path).toUri,
-      org.apache.spark.graftbridge.ConfBridge.broadcast(
-        h.idx.sparkContext).value)
-    val out = new java.io.ObjectOutputStream(fs.create(
-      new org.apache.hadoop.fs.Path(path, "_frame"), true))
-    try {
-      out.writeObject(h.keyColA); out.writeBoolean(h.ordered)
-      out.writeObject("composite"); out.writeObject(h.schema.json)
-      out.writeObject(h.keyColB)
-      out.writeObject(codecTag(h.codecA)); out.writeObject(codecTag(h.codecB))
-    } finally out.close()
-    // secondaries and zones ride along exactly as for single-key saves
-    // (both handle kinds share the SecondaryCapable/ZoneMapped traits)
-    writeSavedCount(fs, path, rows)
-    saveIndexSidecars(h, path, fs)
-  }
-
-  /** Persist an N-ARY composite handle: same one-file-per-partition
-    * index layout, `_frame` meta tagged "compositeN" carrying the key
-    * column LIST + per-component codec tags + orderedness. Reload
-    * with [[loadCompositeN]] — point, prefix-range, and top-k claims
-    * all work immediately from the reloaded copy, no rebuild. */
-  def save(h: CompositeNHandle, path: String): Unit = {
-    val rows = graft.IndexedRDDIO.save(
-      h.idx.asInstanceOf[graft.IndexedRDD[Any, InternalRow]], path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new org.apache.hadoop.fs.Path(path).toUri,
-      org.apache.spark.graftbridge.ConfBridge.broadcast(
-        h.idx.sparkContext).value)
-    val out = new java.io.ObjectOutputStream(fs.create(
-      new org.apache.hadoop.fs.Path(path, "_frame"), true))
-    try {
+  /** Persist a COMPOSITE handle: `_frame` tagged "compositeN" carrying
+    * the key column LIST + per-component codec tags + orderedness.
+    * Reload with [[loadCompositeN]] — point, prefix-range, and top-k
+    * claims all work immediately from the reloaded copy, no rebuild. */
+  def save(h: CompositeNHandle, path: String): Unit =
+    saveFrame(h.idx, h, path) { out =>
       // same four-field header as every handle kind, tag third — a
       // mismatched loader fails with the clean tag message
       out.writeObject(h.keyCols.head); out.writeBoolean(h.ordered)
       out.writeObject("compositeN"); out.writeObject(h.schema.json)
       out.writeObject(h.keyCols.toList)
       out.writeObject(h.codecs.map(codecTag).toList)
-    } finally out.close()
-    // secondaries and zones ride along exactly as for the other handle
-    // kinds (SecondaryCapable/ZoneMapped are shared traits)
-    writeSavedCount(fs, path, rows)
-    saveIndexSidecars(h, path, fs)
-  }
+    }
 
-  /** Reload an N-ary composite handle saved by
-    * [[save(h:CompositeNHandle*]]. */
+  /** Reload a composite handle saved by [[save(h:CompositeNHandle*]].
+    * A save tagged "composite" (the two-column format earlier builds
+    * wrote, catalog-table base snapshots included) holds Tuple2 keys
+    * placed by that layout's partitioner — `Tuple2.hashCode` under a
+    * hash layout — so it cannot attach as a Seq-keyed index: it is
+    * read through [[KeySerializer.ConcatTuple2Serializer]] (the same
+    * key bytes) and REBUILT in the same layout — hash at the saved
+    * partition count and orderedness, range-partitioned, or z-ordered
+    * — with the secondaries and zone maps its `_indexes` lists
+    * re-derived. The header is read and the tag CHECKED before any
+    * composite-only field, so a single-key save fails with a clean
+    * message rather than a raw stream error. */
   def loadCompositeN(spark: SparkSession, path: String): CompositeNHandle = {
     val sc = spark.sparkContext
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new org.apache.hadoop.fs.Path(path).toUri, sc.hadoopConfiguration)
     val in = new java.io.ObjectInputStream(fs.open(
       new org.apache.hadoop.fs.Path(path, "_frame")))
-    try {
-      in.readObject() // leading key column (also first of the list)
-      val ordered = in.readBoolean()
-      val tag = in.readObject().asInstanceOf[String]
-      val schemaJson = in.readObject().asInstanceOf[String]
-      require(tag == "compositeN",
-        s"not an N-ary composite handle at $path (tag '$tag')")
-      val keyCols = in.readObject().asInstanceOf[List[String]]
-      val tags = in.readObject().asInstanceOf[List[String]]
-      val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-        .asInstanceOf[StructType]
-      val specs = keyCols.zip(tags).map { case (c, t) =>
-        specForTag(schema, c, t).asInstanceOf[KeySpec[Any]]
-      }.toIndexedSeq
-      implicit val tupSer: KeySerializer[Seq[Any]] =
-        new graft.keys.KeySerializer.ConcatNSerializer(specs.map(_.ser))
-      val handle = new CompositeNHandle(
-        graft.IndexedRDDIO.load[Seq[Any], InternalRow](sc, path).cached,
-        keyCols, schema, ordered, specs)
-      handle.presetStatsCount = readSavedCount(fs, path)
-      // optional sidecar: secondaries + zones re-attach, no rebuild
-      val ixPath = new org.apache.hadoop.fs.Path(path, "_indexes")
-      if (fs.exists(ixPath)) {
-        val in2 = new java.io.ObjectInputStream(fs.open(ixPath))
-        try {
-          val n = in2.readInt()
-          (0 until n).foreach { _ =>
-            val c = in2.readObject().asInstanceOf[String]
-            val rangeable = in2.readBoolean()
-            val sub = in2.readObject().asInstanceOf[String]
-            handle.restoreSecondaryFrom(c, rangeable, s"$path/$sub")
+    val (ordered, legacy, schema, keyCols, tags) =
+      try {
+        val lead = in.readObject().asInstanceOf[String]
+        val ordered = in.readBoolean()
+        val tag = in.readObject().asInstanceOf[String]
+        val schemaJson = in.readObject().asInstanceOf[String]
+        require(tag == "compositeN" || tag == "composite",
+          s"not a composite handle at $path (tag '$tag'); use load")
+        val (keyCols, tags) =
+          if (tag == "compositeN")
+            (in.readObject().asInstanceOf[List[String]],
+              in.readObject().asInstanceOf[List[String]])
+          else {
+            val second = in.readObject().asInstanceOf[String]
+            val tagA = in.readObject().asInstanceOf[String]
+            (List(lead, second), List(tagA, in.readObject().asInstanceOf[String]))
           }
-          val zoneCols = in2.readObject().asInstanceOf[Set[String]]
-          val zoneStats = in2.readObject().asInstanceOf[Map[String, Array[Zone]]]
-          handle.restoreZones(zoneCols, zoneStats)
-        } finally in2.close()
-      }
-      handle
-    } finally in.close()
+        (ordered, tag == "composite", org.apache.spark.sql.types.DataType
+          .fromJson(schemaJson).asInstanceOf[StructType], keyCols, tags)
+      } finally in.close()
+    val specs = keyCols.zip(tags).map { case (c, t) =>
+      specForTag(schema, c, t).asInstanceOf[KeySpec[Any]]
+    }.toIndexedSeq
+    if (legacy)
+      return rebuildLegacyComposite(spark, fs, path, ordered, schema,
+        keyCols, tags, specs)
+    implicit val tupSer: KeySerializer[Seq[Any]] =
+      new graft.keys.KeySerializer.ConcatNSerializer(specs.map(_.ser))
+    val handle = new CompositeNHandle(
+      graft.IndexedRDDIO.load[Seq[Any], InternalRow](sc, path).cached,
+      keyCols, schema, ordered, specs)
+    handle.presetStatsCount = readSavedCount(fs, path)
+    restoreIndexSidecars(handle, fs, path)
+    handle
   }
 
-  /** Reload a composite handle saved by [[save(h:CompositeHandle*]].
-    * The single-key header (four fields) is read and the tag CHECKED
-    * before any composite-only field, so pointing this at a single-key
-    * save fails with the clean "not a composite handle" message rather
-    * than a raw stream error. */
-  def loadComposite(spark: SparkSession, path: String): CompositeHandle[_, _] = {
-    val sc = spark.sparkContext
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new org.apache.hadoop.fs.Path(path).toUri, sc.hadoopConfiguration)
-    val in = new java.io.ObjectInputStream(fs.open(
-      new org.apache.hadoop.fs.Path(path, "_frame")))
-    try {
-      val keyColA = in.readObject().asInstanceOf[String]
-      val ordered = in.readBoolean()
-      val tag = in.readObject().asInstanceOf[String]
-      val schemaJson = in.readObject().asInstanceOf[String]
-      require(tag == "composite",
-        s"not a composite handle at $path (tag '$tag'); use load")
-      val keyColB = in.readObject().asInstanceOf[String]
-      val tagA = in.readObject().asInstanceOf[String]
-      val tagB = in.readObject().asInstanceOf[String]
-      val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-        .asInstanceOf[StructType]
-      val handle = (specForTag(schema, keyColA, tagA),
-          specForTag(schema, keyColB, tagB)) match {
-        case (sa: KeySpec[a], sb: KeySpec[b]) =>
-          implicit val cta: ClassTag[a] = sa.tag
-          implicit val ctb: ClassTag[b] = sb.tag
-          implicit val serA: KeySerializer[a] = sa.ser
-          implicit val serB: KeySerializer[b] = sb.ser
-          implicit val tupSer: KeySerializer[(a, b)] =
-            new KeySerializer.ConcatTuple2Serializer[a, b](serA, serB)
-          new CompositeHandle[a, b](
-            graft.IndexedRDDIO.load[(a, b), InternalRow](sc, path).cached,
-            keyColA, keyColB, schema, ordered, sa.codec, sb.codec)
+  /** The "composite"-tagged branch of [[loadCompositeN]]: one read of
+    * the saved Tuple2-keyed index, a composite build in the saved
+    * layout (a z layout is hash-built, then z-ordered: two shuffles),
+    * and the listed secondaries/zone maps re-analyzed (their saved
+    * files index Tuple2 keys and the saved partition ids). The saved
+    * `_count` presets the stats count, as on any load. */
+  private def rebuildLegacyComposite(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String, ordered: Boolean,
+      schema: StructType, keyCols: Seq[String], tags: Seq[String],
+      specs: IndexedSeq[KeySpec[Any]]): CompositeNHandle = {
+    val old = graft.IndexedRDDIO.load[(Any, Any), InternalRow](
+      spark.sparkContext, path)(implicitly[ClassTag[(Any, Any)]],
+      new KeySerializer.ConcatTuple2Serializer[Any, Any](specs(0).ser, specs(1).ser),
+      implicitly[ClassTag[InternalRow]])
+    val rows = org.apache.spark.sql.graftbridge.ExpressionBridge
+      .internalDF(spark, old.map(_._2), schema)
+    val parts = old.getNumPartitions
+    val uuidCols = keyCols.zip(tags).collect { case (c, "uuid") => c }.toSet
+    val h = old.partitioner match {
+      case Some(_: org.apache.spark.RangePartitioner[_, _]) =>
+        indexCompositeNRangePartitioned(rows, keyCols, parts, uuidCols)
+      case Some(m: graft.IndexedRDD.MortonPartitioner) =>
+        indexCompositeN(rows, keyCols, numPartitions = parts, uuidCols = uuidCols)
+          .zOrderedN(if (m.swapped) keyCols.reverse else keyCols)
+      case Some(z: graft.IndexedRDD.RankZPartitioner) =>
+        indexCompositeN(rows, keyCols, numPartitions = parts, uuidCols = uuidCols)
+          .zOrderedN(z.perm.toSeq.map(keyCols))
+      case _ => indexCompositeN(rows, keyCols, ordered, parts, uuidCols)
+    }
+    readIndexSidecars(fs, path).foreach { ix =>
+      ix.secondaries.foreach { case (c, rangeable, _) =>
+        h.addSecondaryIndex(c, rangeable)
       }
-      handle.presetStatsCount = readSavedCount(fs, path)
-      // optional sidecar: secondaries + zones re-attach, no rebuild
-      val ixPath = new org.apache.hadoop.fs.Path(path, "_indexes")
-      if (fs.exists(ixPath)) {
-        val in2 = new java.io.ObjectInputStream(fs.open(ixPath))
-        try {
-          val n = in2.readInt()
-          (0 until n).foreach { _ =>
-            val c = in2.readObject().asInstanceOf[String]
-            val rangeable = in2.readBoolean()
-            val sub = in2.readObject().asInstanceOf[String]
-            handle.restoreSecondaryFrom(c, rangeable, s"$path/$sub")
-          }
-          val zoneCols = in2.readObject().asInstanceOf[Set[String]]
-          val zoneStats = in2.readObject().asInstanceOf[Map[String, Array[Zone]]]
-          handle.restoreZones(zoneCols, zoneStats)
-        } finally in2.close()
-      }
-      handle
-    } finally in.close()
+      if (ix.zoneCols.nonEmpty) h.analyzeZones(ix.zoneCols.toSeq.sorted: _*)
+    }
+    h.presetStatsCount = readSavedCount(fs, path)
+    h
   }
 
   /** Reload a saved handle (see [[save]]); the key type is restored
@@ -6832,28 +5660,11 @@ object IndexedFrame {
           graft.IndexedRDDIO.load[BigInt, InternalRow](sc, path).cached,
           keyCol, schema, ordered, codec)(
           implicitly[ClassTag[BigInt]], KeySerializer.BigIntSerializer)
-      case "composite" => throw new IllegalArgumentException(
-        s"composite handle at $path: use loadComposite")
+      case "composite" | "compositeN" => throw new IllegalArgumentException(
+        s"composite handle at $path: use loadCompositeN")
     }
     handle.presetStatsCount = readSavedCount(fs, path)
-    // re-attach persisted secondary indexes + zone maps, if the save
-    // carried them (`_indexes` is optional: older saves load cleanly)
-    val ixPath = new org.apache.hadoop.fs.Path(path, "_indexes")
-    if (fs.exists(ixPath)) {
-      val in2 = new java.io.ObjectInputStream(fs.open(ixPath))
-      try {
-        val n = in2.readInt()
-        (0 until n).foreach { _ =>
-          val c = in2.readObject().asInstanceOf[String]
-          val rangeable = in2.readBoolean()
-          val sub = in2.readObject().asInstanceOf[String]
-          handle.restoreSecondaryFrom(c, rangeable, s"$path/$sub")
-        }
-        val zoneCols = in2.readObject().asInstanceOf[Set[String]]
-        val zoneStats = in2.readObject().asInstanceOf[Map[String, Array[Zone]]]
-        handle.restoreZones(zoneCols, zoneStats)
-      } finally in2.close()
-    }
+    restoreIndexSidecars(handle, fs, path)
     handle
   }
 

@@ -64,8 +64,6 @@ object IndexedJoin {
       case lr: LogicalRelation => lr.relation match {
         case rel: IndexedFrame.IndexedRelation[_] =>
           Some((lr.output, lr.output, Nil, rel.h))
-        case rel: IndexedFrame.CompositeRelation[_, _] =>
-          Some((lr.output, lr.output, Nil, rel.h))
         case rel: IndexedFrame.CompositeNRelation =>
           Some((lr.output, lr.output, Nil, rel.h))
         case _ => None

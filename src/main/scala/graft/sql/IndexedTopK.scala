@@ -49,7 +49,6 @@ object IndexedTopK {
             Seq[org.apache.spark.sql.catalyst.expressions.Expression])] = p match {
       case lr: LogicalRelation => lr.relation match {
         case rel: IndexedFrame.IndexedRelation[_] => Some((rel.h, Nil))
-        case rel: IndexedFrame.CompositeRelation[_, _] => Some((rel.h, Nil))
         case rel: IndexedFrame.CompositeNRelation => Some((rel.h, Nil))
         case _ => None
       }

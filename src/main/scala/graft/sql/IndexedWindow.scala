@@ -43,10 +43,10 @@ object IndexedWindow {
 
     /** The composite handle under attribute-only Projects; Filters
       * disqualify (rows would need inspection above this node). */
-    private def bare(p: LogicalPlan): Option[IndexedFrame.CompositeHandle[_, _]] =
+    private def bare(p: LogicalPlan): Option[IndexedFrame.CompositeNHandle] =
       p match {
         case lr: LogicalRelation => lr.relation match {
-          case rel: IndexedFrame.CompositeRelation[_, _] => Some(rel.h)
+          case rel: IndexedFrame.CompositeNRelation => Some(rel.h)
           case _ => None
         }
         case Project(projs, child) if projs.forall(_.isInstanceOf[Attribute]) =>
@@ -92,7 +92,7 @@ object IndexedWindow {
             (rankLimitOf(cond, al.toAttribute), obCol, bare(wchild)) match {
               case (Some(n), Some(ob), Some(h))
                   if n >= 0 && h.groupTopNServable &&
-                    pa.name == h.keyColA && ob == h.keyColB =>
+                    pa.name == h.keyCols.head && ob == h.keyCols(1) =>
                 IndexedGroupTopNExec(
                   wchild.output :+ al.toAttribute, h, n) :: Nil
               case _ => Nil
@@ -106,7 +106,7 @@ object IndexedWindow {
   /** First n rows of every leading-column run, with ranks — emitted
     * from the partitions that already hold them, in layout order. */
   case class IndexedGroupTopNExec(output: Seq[Attribute],
-      h: IndexedFrame.CompositeHandle[_, _], n: Int) extends LeafExecNode {
+      h: IndexedFrame.CompositeNHandle, n: Int) extends LeafExecNode {
 
     override protected def doExecute(): RDD[InternalRow] = {
       h.lastScanKind = "group_topn"

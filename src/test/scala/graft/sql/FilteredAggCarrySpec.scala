@@ -165,4 +165,46 @@ class FilteredAggCarrySpec extends AnyFunSuite {
     assert(probe(s2, 2L) === carried)
     spark.sql("DROP TABLE IF EXISTS carryspec_m")
   }
+
+  test("a carry that throws drops only its memo entry and never fails the DML") {
+    val path = freshPath("throw")
+    spark.sql("DROP TABLE IF EXISTS carryspec_throw")
+    val rows = (1L to 400L).map(k => (k, k % 5, k * 0.5, k))
+    rows.toDF("k", "g", "v", "w").createOrReplaceTempView("carryspec_tsrc")
+    spark.sql(s"""CREATE TABLE carryspec_throw USING graft
+      |OPTIONS (key 'k') LOCATION '$path' AS
+      |SELECT * FROM carryspec_tsrc""".stripMargin)
+    spark.sql("CREATE INDEX gt_ix ON carryspec_throw (g)")
+    def probe(g: Long) = {
+      val rv = spark.sql(
+        s"SELECT sum(v), count(*) FROM carryspec_throw WHERE g = $g").collect().head
+      val rw = spark.sql(
+        s"SELECT sum(w) FROM carryspec_throw WHERE g = $g").collect().head
+      (rv.getDouble(0), rw.getLong(0), rv.getLong(1))
+    }
+    probe(2L) // warm both (g, v) and (g, w) folds
+    assert(memoKeys(path) === Set(("g", "v"), ("g", "w")))
+    val failuresBefore = GraftTables.postCommitFailureCount(path)
+    // k = 12, 22 are interior rows of group 2, so both carries would
+    // apply; the hook makes the (g, v) carry throw
+    IndexedFrame.foldCarryHook = (_, aggCol) =>
+      if (aggCol == "v") throw new IllegalStateException("injected carry failure")
+    try spark.sql("UPDATE carryspec_throw SET v = v + 1, w = w + 1 " +
+      "WHERE k IN (12, 22)")
+    finally IndexedFrame.foldCarryHook = (_, _) => ()
+    // the statement committed with no maintenance failure recorded; only
+    // the throwing pair's memo entry is gone (it refolds lazily)
+    assert(GraftTables.postCommitFailureCount(path) === failuresBefore)
+    assert(memoKeys(path) === Set(("g", "w")))
+    val updated = rows.map { case (k, g, v, w) =>
+      if (k == 12L || k == 22L) (k, g, v + 1, w + 1) else (k, g, v, w) }
+    val plain = updated.toDF("k", "g", "v", "w").filter($"g" === 2L)
+      .agg(org.apache.spark.sql.functions.sum($"v"),
+        org.apache.spark.sql.functions.sum($"w"),
+        org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)))
+      .collect().head
+    assert(probe(2L) === ((plain.getDouble(0), plain.getLong(1), plain.getLong(2))))
+    assert(memoKeys(path) === Set(("g", "v"), ("g", "w")))
+    spark.sql("DROP TABLE IF EXISTS carryspec_throw")
+  }
 }

@@ -167,7 +167,7 @@ class GraftMaintenanceSpec extends AnyFunSuite {
     implicit val sp: org.apache.spark.sql.SparkSession = spark
     val df2 = (1L to 50L).map(k => (k, (k % 5).toInt, k * 2.0))
       .toDF("a", "b", "x")
-    IndexedFrame.indexComposite(df2, "a", "b", numPartitions = 4)
+    IndexedFrame.indexCompositeN(df2, Seq("a", "b"), numPartitions = 4)
       .toDF.createOrReplaceTempView("gms_c2")
     spark.sql("DELETE FROM gms_c2 WHERE a <= 10")
     val m2 = spark.sql("OPTIMIZE gms_c2").collect().head

@@ -169,7 +169,7 @@ class GraftSqlExtensionSpec extends AnyFunSuite {
     implicit val sp: org.apache.spark.sql.SparkSession = spark
     val df = (for (a <- 1L to 5L; b <- 1L to 10L)
       yield (a, b, a * 100.0 + b)).toDF("ka", "kb", "bal")
-    IndexedFrame.indexComposite(df, "ka", "kb")
+    IndexedFrame.indexCompositeN(df, Seq("ka", "kb"))
       .toDF.createOrReplaceTempView("gsx_cmp")
     Seq((2L, 3L, 0.0), (4L, 5L, 7.0), (9L, 9L, 1.0)).toDF("sa", "sb", "delta")
       .createOrReplaceTempView("gsx_cmp_src")

@@ -6,7 +6,7 @@ import graft.SparkSessionFixture
 
 /**
  * `OPTIMIZE t ZORDER BY (a, b)` on durable catalog tables
- * ([[GraftTables.compact]] + [[IndexedFrame.CompositeHandle.zOrdered]]):
+ * ([[GraftTables.compact]] + [[IndexedFrame.CompositeNHandle.zOrderedN]]):
  * the rewritten base is re-clustered along the Morton curve of the
  * two-column composite key, zone maps on BOTH key columns analyze and
  * persist, and a 2-D box query then prunes partitions through the zone
@@ -53,7 +53,7 @@ class GraftZOrderCatalogSpec extends AnyFunSuite {
       !(r._1 == 3 && r._2 == 3)).map(_._3).sum - 1.0
     assert(boxSum === expSum)
     val h = GraftTables.current(spark, path)._2.handleAny
-      .asInstanceOf[IndexedFrame.CompositeHandle[_, _]]
+      .asInstanceOf[IndexedFrame.CompositeNHandle]
     assert(h.lastScanKind === "full_zone", h.lastScanKind)
     assert(h.lastZoneKept >= 1 && h.lastZoneKept <= 4,
       s"box kept ${h.lastZoneKept} of 8 partitions")
@@ -75,7 +75,7 @@ class GraftZOrderCatalogSpec extends AnyFunSuite {
       .collect()(0).getDouble(0)
     assert(reSum === expSum) // (0,0) carried v=0.0, so the sum is unchanged
     val h2 = GraftTables.current(s2, path)._2.handleAny
-      .asInstanceOf[IndexedFrame.CompositeHandle[_, _]]
+      .asInstanceOf[IndexedFrame.CompositeNHandle]
     assert(h2.lastZoneKept >= 1 && h2.lastZoneKept <= 4,
       s"reopened box kept ${h2.lastZoneKept} of 8 partitions")
     spark.sql("DROP TABLE IF EXISTS zocat_t")
@@ -279,7 +279,7 @@ class GraftZOrderCatalogSpec extends AnyFunSuite {
     assert(expect.nonEmpty)
     spark.sql("OPTIMIZE zocat_v2 ZORDER BY (x, y)")
     assert(box(spark).collect().map(_.toSeq).toSet === expect)
-    val h = GraftBenchBridge.compositeScanInfo(spark, path)
+    val h = GraftBenchBridge.compositeNScanInfo(spark, path)
     assert(h._1 === "full_zproj", s"composite box served as '${h._1}'")
     assert(h._2 > 0 && h._2 < 256)
     // composite point routing is untouched by the projection

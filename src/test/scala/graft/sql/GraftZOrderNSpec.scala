@@ -128,7 +128,7 @@ class GraftZOrderNSpec extends AnyFunSuite {
       """SELECT count(*) FROM zon_s WHERE region BETWEEN 'R00' AND 'R07'
         |AND day BETWEEN 0 AND 7""".stripMargin).collect()(0).getLong(0)
     assert(boxCnt === 64L)
-    val (kind, kept) = GraftBenchBridge.compositeScanInfo(spark, path)
+    val (kind, kept) = GraftBenchBridge.compositeNScanInfo(spark, path)
     assert(kind === "full_zone", kind)
     assert(kept >= 1 && kept <= 4, s"box kept $kept of 8 partitions")
     // point routing through the rank-z partitioner

@@ -201,7 +201,7 @@ class IndexedAggSpec extends AnyFunSuite {
     IndexedAgg.enable(spark)
     val df = spark.read.parquet(s"$dir/customer.parquet")
       .withColumn("c_bucket", ($"c_custkey" % 100).cast("long"))
-    val h = IndexedFrame.indexComposite(df, "c_bucket", "c_custkey", ordered = true)
+    val h = IndexedFrame.indexCompositeN(df, Seq("c_bucket", "c_custkey"), ordered = true)
     val q = h.toDF.agg(count(lit(1)).as("cnt"),
       min($"c_bucket").as("mn"), max($"c_bucket").as("mx"))
     val plan = q.queryExecution.executedPlan.toString
@@ -216,7 +216,7 @@ class IndexedAggSpec extends AnyFunSuite {
     assert(!q2.queryExecution.executedPlan.toString.contains("IndexedStats"))
     assert(q2.as[Long].head() === df.agg(min($"c_custkey")).as[Long].head())
     // count alone on a NON-ordered composite handle still plans no-scan
-    val hu = IndexedFrame.indexComposite(df, "c_bucket", "c_custkey")
+    val hu = IndexedFrame.indexCompositeN(df, Seq("c_bucket", "c_custkey"))
     val qc = hu.toDF.agg(count(lit(1)).as("cnt"))
     assert(qc.queryExecution.executedPlan.toString.contains("IndexedStats"))
     assert(qc.as[Long].head() === df.count())
@@ -242,7 +242,7 @@ class IndexedAggSpec extends AnyFunSuite {
     // [(aLo, minB), (aHi, minB)) must cover every b under each a
     val df = (0L until 1000L).map(k => (k / 10, k % 10, k.toDouble))
       .toDF("a", "b", "v")
-    val h = IndexedFrame.indexCompositeRangePartitioned(df, "a", "b", 8)
+    val h = IndexedFrame.indexCompositeNRangePartitioned(df, Seq("a", "b"), 8)
     for ((lo, hi) <- Seq((5L, 30L), (0L, 3L), (90L, 500L))) {
       val q = h.toDF.filter($"a".between(lo, hi))
         .agg(count(lit(1)).as("cnt"), min($"a").as("mn"), max($"a").as("mx"))
@@ -271,7 +271,7 @@ class IndexedAggSpec extends AnyFunSuite {
     // a (long, BigInt-decimal) pair has no B domain minimum: NOT claimed
     val dfd = (0L until 50L).map(k => (k, new java.math.BigDecimal(k)))
       .toDF("a", "d").withColumn("d", $"d".cast("decimal(38,0)"))
-    val hd = IndexedFrame.indexCompositeAny(dfd, "a", "d", ordered = true)
+    val hd = IndexedFrame.indexCompositeN(dfd, Seq("a", "d"), ordered = true)
     val qd = hd.toDF.filter($"a".between(5L, 10L)).agg(count(lit(1)).as("cnt"))
     assert(!qd.queryExecution.executedPlan.toString.contains("IndexedRangeStats"))
     assert(qd.as[Long].head() === 6L)
@@ -282,7 +282,7 @@ class IndexedAggSpec extends AnyFunSuite {
     IndexedAgg.enable(spark)
     // composite (a, b): per-a counts from key runs, values untouched
     val df = (0L until 1000L).map(k => (k / 40, k % 40, s"v$k")).toDF("a", "b", "v")
-    val h = IndexedFrame.indexCompositeRangePartitioned(df, "a", "b", 8)
+    val h = IndexedFrame.indexCompositeNRangePartitioned(df, Seq("a", "b"), 8)
     val q = h.toDF.groupBy($"a").agg(count(lit(1)).as("cnt"))
     assert(q.queryExecution.executedPlan.toString.contains("IndexedGroupCount"),
       s"expected group-count pushdown in:\n${q.queryExecution.executedPlan}")
@@ -425,7 +425,7 @@ class IndexedAggSpec extends AnyFunSuite {
     assert(!qp.queryExecution.executedPlan.toString.contains("IndexedStats"))
     // composite: count(DISTINCT a, b) is the index size
     val df = (0L until 1000L).map(k => (k / 40, k % 40, s"v$k")).toDF("a", "b", "v")
-    val hc = IndexedFrame.indexCompositeRangePartitioned(df, "a", "b", 8)
+    val hc = IndexedFrame.indexCompositeNRangePartitioned(df, Seq("a", "b"), 8)
     val qc = hc.toDF.agg(count_distinct($"a", $"b").as("n"))
     assert(qc.queryExecution.executedPlan.toString.contains("IndexedStats"))
     assert(qc.as[Long].head() === 1000L)
@@ -446,7 +446,7 @@ class IndexedAggSpec extends AnyFunSuite {
     // 125 tuples per partition with runs of 40: every partition
     // boundary splits a run — the dedup path is fully exercised
     val df = (0L until 1000L).map(k => (k / 40, k % 40, s"v$k")).toDF("a", "b", "v")
-    val hc = IndexedFrame.indexCompositeRangePartitioned(df, "a", "b", 8)
+    val hc = IndexedFrame.indexCompositeNRangePartitioned(df, Seq("a", "b"), 8)
     val q = hc.toDF.select($"a").distinct()
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("IndexedDistinct"), s"expected distinct pushdown:\n$plan")
@@ -458,7 +458,7 @@ class IndexedAggSpec extends AnyFunSuite {
     assert(qf.as[Long].collect().sorted === (5L to 9L).toArray)
     // hash-layout composite: no range structure — served by the
     // grouped-count fallback instead (still index-structural)
-    val hh = IndexedFrame.indexCompositeAny(df, "a", "b")
+    val hh = IndexedFrame.indexCompositeN(df, Seq("a", "b"))
     val qh = hh.toDF.select($"a").distinct()
     assert(!qh.queryExecution.executedPlan.toString.contains("IndexedDistinct"))
     assert(qh.as[Long].collect().sorted === (0L until 25L).toArray)
@@ -469,7 +469,7 @@ class IndexedAggSpec extends AnyFunSuite {
     IndexedAgg.enable(spark)
     val df = (0L until 1000L).map(k => (k / 40, (k * 7) % 40, s"v$k"))
       .toDF("a", "b", "v").distinct()
-    val hc = IndexedFrame.indexCompositeRangePartitioned(df, "a", "b", 8)
+    val hc = IndexedFrame.indexCompositeNRangePartitioned(df, Seq("a", "b"), 8)
     val q = hc.toDF.groupBy($"a").agg(count(lit(1)).as("n"),
       min($"b").as("mn"), max($"b").as("mx"))
     val plan = q.queryExecution.executedPlan.toString
@@ -561,9 +561,9 @@ class IndexedAggSpec extends AnyFunSuite {
     assert(!qm.queryExecution.executedPlan.toString.contains("IndexedGroupCount") &&
       !qm.queryExecution.executedPlan.toString.contains("IndexedGroupStats"))
     // composite handles serve the LEADING column's expression groups
-    val evh = IndexedFrame.indexCompositeRangePartitioned(
+    val evh = IndexedFrame.indexCompositeNRangePartitioned(
       cust.select($"c_custkey", $"c_nationkey", $"c_acctbal"),
-      "c_custkey", "c_nationkey", 4)
+      Seq("c_custkey", "c_nationkey"), 4)
     val qe = evh.toDF.groupBy(expr("c_custkey % 11").as("b"))
       .agg(count(lit(1)).as("n"))
     assert(qe.queryExecution.executedPlan.toString.contains("IndexedGroupCount"))

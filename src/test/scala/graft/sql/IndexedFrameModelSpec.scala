@@ -93,13 +93,13 @@ class IndexedFrameModelSpec extends AnyFunSuite {
       yield ((u, t), u * 100 + t)).toMap
     val vdf = versions.toSeq.map { case ((u, t), v) => (u, t, v) }
       .toDF("vu", "vt", "vv")
-    val handle = IndexedFrame.indexCompositeRangePartitioned(vdf, "vu", "vt", 5)
+    val handle = IndexedFrame.indexCompositeNRangePartitioned(vdf, Seq("vu", "vt"), 5)
     val probeGen = Gen.listOfN(10,
       Gen.zip(Gen.choose(0L, 12L), Gen.choose(0L, 60L)))
     val prop = Prop.forAll(probeGen) { ps =>
       val probe = ps.zipWithIndex.map { case ((u, t), i) => (u, t, i.toLong) }
         .toDF("pu", "pt", "tag")
-      val got = handle.asOfJoinFrame(probe, "pu", "pt")
+      val got = handle.asOfJoinFrame(probe, Seq("pu"), "pt")
         .select($"tag", $"vt", $"vv").as[(Long, Long, Long)]
         .collect().sorted.toSeq
       val model = ps.zipWithIndex.flatMap { case ((u, t), i) =>

@@ -90,7 +90,7 @@ class IndexedFrameSpec extends AnyFunSuite {
     // (a, b) range-partitioned; value v clustered by the pair order
     val df = (0L until 1000L).map(k => (k / 100, k % 100, k, s"s$k"))
       .toDF("a", "b", "v", "s")
-    val h = IndexedFrame.indexCompositeRangePartitioned(df, "a", "b", 8)
+    val h = IndexedFrame.indexCompositeNRangePartitioned(df, Seq("a", "b"), 8)
       .analyzeZones("v")
     val total = h.idx.getNumPartitions
     val out = h.toDF.filter($"v" >= 300L && $"v" < 350L)
@@ -348,7 +348,7 @@ class IndexedFrameSpec extends AnyFunSuite {
     IndexedTopK.enable(spark)
     // duplicate leading values: pages must stay in full (a, b) order
     val df = (0L until 900L).map(k => (k / 3, k % 3, s"v$k")).toDF("a", "b", "v")
-    val h = IndexedFrame.indexCompositeRangePartitioned(df, "a", "b", 8)
+    val h = IndexedFrame.indexCompositeNRangePartitioned(df, Seq("a", "b"), 8)
     val p1 = h.toDF.filter($"a" >= 100L).orderBy($"a", $"b").limit(5)
       .select($"a", $"b").as[(Long, Long)].collect()
     assert(p1.toSeq === Seq((100L, 0L), (100L, 1L), (100L, 2L), (101L, 0L), (101L, 1L)))
@@ -383,7 +383,7 @@ class IndexedFrameSpec extends AnyFunSuite {
   test("per-entity timeline pages: pinned leading equality + second-column cursor") {
     IndexedTopK.enable(spark)
     val df = (0L until 900L).map(k => (k % 30, k / 30, s"v$k")).toDF("u", "t", "v")
-    val h = IndexedFrame.indexCompositeRangePartitioned(df, "u", "t", 8)
+    val h = IndexedFrame.indexCompositeNRangePartitioned(df, Seq("u", "t"), 8)
     // WHERE u = X AND t > cursor ORDER BY t LIMIT n claims as topk
     val p1 = h.toDF.filter($"u" === 7L && $"t" > 10L).orderBy($"t").limit(4)
       .select($"t").as[Long].collect()
@@ -504,7 +504,7 @@ class IndexedFrameSpec extends AnyFunSuite {
     val df = (0L until 240L).flatMap(h => Seq(0L, 1L).map(id =>
         (new java.sql.Timestamp(base + h * 3600000L), h * 2 + id, s"r$h-$id")))
       .toDF("ts", "id", "v")
-    val h = IndexedFrame.indexCompositeRangePartitioned(df, "ts", "id", 8)
+    val h = IndexedFrame.indexCompositeNRangePartitioned(df, Seq("ts", "id"), 8)
     // leading-ts interval routes as a pushed range (one contiguous
     // tuple-space interval), not a full scan
     val day2 = h.toDF.filter(
@@ -528,15 +528,15 @@ class IndexedFrameSpec extends AnyFunSuite {
     // hour 5 only; its floor at a later instant must stay ON id 10's
     // own versions, never bleed into an earlier id's
     def tsAt(s: String) = java.sql.Timestamp.valueOf(s)
-    val hIdTs = IndexedFrame.indexCompositeRangePartitioned(
-      df.select($"id", $"ts", $"v"), "id", "ts", 8)
-    assert(hIdTs.asOf(10L, tsAt("2024-01-09 00:00:00")).select($"v")
+    val hIdTs = IndexedFrame.indexCompositeNRangePartitioned(
+      df.select($"id", $"ts", $"v"), Seq("id", "ts"), 8)
+    assert(hIdTs.asOf(Seq(10L), tsAt("2024-01-09 00:00:00")).select($"v")
       .as[String].collect().toSeq === Seq("r5-0"))
-    assert(hIdTs.asOf(10L, tsAt("2024-01-01 05:00:00")).select($"v")
+    assert(hIdTs.asOf(Seq(10L), tsAt("2024-01-01 05:00:00")).select($"v")
       .as[String].collect().toSeq === Seq("r5-0")) // exact hit inclusive
-    assert(hIdTs.asOf(10L, tsAt("2024-01-01 04:59:59")).count() === 0L,
+    assert(hIdTs.asOf(Seq(10L), tsAt("2024-01-01 04:59:59")).count() === 0L,
       "floor before id 10's only version must not serve id 9's rows")
-    assert(hIdTs.asOf(9999L, tsAt("2024-01-09 00:00:00")).count() === 0L)
+    assert(hIdTs.asOf(Seq(9999L), tsAt("2024-01-09 00:00:00")).count() === 0L)
     hIdTs.idx.unpersist()
     // single-key timestamp handles work too (ordered radix layout)
     val uniq = (0L until 100L).map(m =>
@@ -584,7 +584,7 @@ class IndexedFrameSpec extends AnyFunSuite {
     val df = (0L until 1000L).map(k =>
       (k % 40, k / 40, (k * 37) % 1000, s"g${k % 3}", s"row$k"))
       .toDF("a", "b", "bal", "cat", "v")
-    val h = IndexedFrame.indexCompositeAny(df, "a", "b")
+    val h = IndexedFrame.indexCompositeN(df, Seq("a", "b"))
       .addSecondaryIndex("cat")
       .addSecondaryIndex("bal", ordered = true)
     // equality on a non-key column probes via the inverted index
@@ -612,7 +612,7 @@ class IndexedFrameSpec extends AnyFunSuite {
     // save/load carries the composite's secondaries too
     val path = java.nio.file.Files.createTempDirectory("comp_sec_io").toString
     IndexedFrame.save(h, path)
-    val loaded = IndexedFrame.loadComposite(spark, path)
+    val loaded = IndexedFrame.loadCompositeN(spark, path)
     val leq = loaded.toDF.filter($"cat" === "g1").select($"v").as[String].collect().toSet
     assert(leq === eq)
     assert(loaded.lastScanKind === "secondary_point")
@@ -622,7 +622,7 @@ class IndexedFrameSpec extends AnyFunSuite {
     IndexedTopK.enable(spark)
     val df = (0L until 2000L).map(k => (k % 40, k / 40, s"v$k"))
       .toDF("a", "b", "v")
-    val h = IndexedFrame.indexCompositeRangePartitioned(df, "a", "b", 8)
+    val h = IndexedFrame.indexCompositeNRangePartitioned(df, Seq("a", "b"), 8)
     // full-pair ascending: lexicographic head
     val both = h.toDF.orderBy($"a", $"b").limit(5)
       .select($"a", $"b").as[(Long, Long)].collect()
@@ -711,7 +711,7 @@ class IndexedFrameSpec extends AnyFunSuite {
 
   test("composite upsertFrame/deleteFrame: string-lead pair mutations, COW") {
     val base = cust.select($"c_mktsegment", $"c_custkey", $"c_acctbal")
-    val h = IndexedFrame.indexCompositeAny(base, "c_mktsegment", "c_custkey")
+    val h = IndexedFrame.indexCompositeN(base, Seq("c_mktsegment", "c_custkey"))
     val ups = Seq(("ZZTOP", 777L, 9.5)).toDF("c_mktsegment", "c_custkey", "c_acctbal")
     val dels = base.filter($"c_custkey" <= 5L)
       .select($"c_mktsegment", $"c_custkey")
@@ -911,7 +911,7 @@ class IndexedFrameSpec extends AnyFunSuite {
 
   test("composite handle: conjunctive equality on both columns routes into multiget") {
     val df = cust.withColumn("c_bucket", ($"c_custkey" % 100).cast("long"))
-    val h = IndexedFrame.indexComposite(df, "c_bucket", "c_custkey")
+    val h = IndexedFrame.indexCompositeN(df, Seq("c_bucket", "c_custkey"))
     val out = h.toDF.filter($"c_bucket" === 17L && $"c_custkey".isin(17L, 117L, 999917L))
       .select($"c_custkey", $"c_acctbal").as[(Long, Double)].collect().toMap
     val expect = df.filter($"c_bucket" === 17L && $"c_custkey".isin(17L, 117L, 999917L))
@@ -930,7 +930,7 @@ class IndexedFrameSpec extends AnyFunSuite {
 
   test("composite handle: leading-column equality and ranges route into trie range scans") {
     val df = cust.withColumn("c_bucket", ($"c_custkey" % 100).cast("long"))
-    val h = IndexedFrame.indexComposite(df, "c_bucket", "c_custkey", ordered = true)
+    val h = IndexedFrame.indexCompositeN(df, Seq("c_bucket", "c_custkey"), ordered = true)
     val out = h.toDF.filter($"c_bucket".between(10L, 12L))
       .select($"c_custkey").as[Long].collect().toSet
     val expect = df.filter($"c_bucket".between(10L, 12L))
@@ -945,7 +945,7 @@ class IndexedFrameSpec extends AnyFunSuite {
     assert(eq === eqExpect && eq.nonEmpty)
     assert(h.lastScanKind === "range")
     // unordered handles never claim ranges: full scan + Spark residual
-    val hu = IndexedFrame.indexComposite(df, "c_bucket", "c_custkey")
+    val hu = IndexedFrame.indexCompositeN(df, Seq("c_bucket", "c_custkey"))
     val u = hu.toDF.filter($"c_bucket".between(10L, 12L))
       .select($"c_custkey").as[Long].collect().toSet
     assert(u === expect)
@@ -957,7 +957,7 @@ class IndexedFrameSpec extends AnyFunSuite {
       (1L, 5L, "a"), (2L, 6L, "b"),
       (Long.MaxValue, 7L, "c"), (Long.MaxValue, Long.MaxValue, "d"))
       .toDF("a", "b", "v")
-    val h = IndexedFrame.indexComposite(df, "a", "b", ordered = true)
+    val h = IndexedFrame.indexCompositeN(df, Seq("a", "b"), ordered = true)
     val ge = h.toDF.filter($"a" >= 2L).select($"v").as[String].collect().toSet
     assert(ge === Set("b", "c", "d"), "unbounded-above range lost the MaxValue corner")
     assert(h.lastScanKind === "range")
@@ -1052,7 +1052,7 @@ class IndexedFrameSpec extends AnyFunSuite {
 
   test("composite handle: a-equality + b-range routes into per-leading trie scans") {
     val df = cust.withColumn("c_bucket", ($"c_custkey" % 100).cast("long"))
-    val h = IndexedFrame.indexComposite(df, "c_bucket", "c_custkey", ordered = true)
+    val h = IndexedFrame.indexCompositeN(df, Seq("c_bucket", "c_custkey"), ordered = true)
     // single leading value + second-column interval: ONE contiguous
     // (a, [bFrom, bTo)) trie range, not a prefix scan over all of a=17
     val out = h.toDF.filter($"c_bucket" === 17L && $"c_custkey".between(100L, 600L))
@@ -1072,7 +1072,7 @@ class IndexedFrameSpec extends AnyFunSuite {
     // unbounded-above b-range keeps the (a, MaxValue) corner
     val corner = Seq((1L, 5L, "a"), (1L, Long.MaxValue, "b"), (2L, 9L, "c"))
       .toDF("a", "b", "v")
-    val hc = IndexedFrame.indexComposite(corner, "a", "b", ordered = true)
+    val hc = IndexedFrame.indexCompositeN(corner, Seq("a", "b"), ordered = true)
     val got = hc.toDF.filter($"a" === 1L && $"b" >= 5L)
       .select($"v").as[String].collect().toSet
     assert(got === Set("a", "b"), "mixed lane lost the (a, MaxValue) corner")
@@ -1083,7 +1083,7 @@ class IndexedFrameSpec extends AnyFunSuite {
 
   test("composite handle: oversized IN cross products bail out of the point lane") {
     val df = cust.withColumn("c_bucket", ($"c_custkey" % 100).cast("long"))
-    val h = IndexedFrame.indexComposite(df, "c_bucket", "c_custkey", ordered = true)
+    val h = IndexedFrame.indexCompositeN(df, Seq("c_bucket", "c_custkey"), ordered = true)
     // 200 x 200 = 40k pushed pairs > the 10k probe budget: the relation
     // must NOT build the cross product on the driver — it declares the
     // filters unhandled and serves a wider lane with Spark re-applying
@@ -1103,7 +1103,7 @@ class IndexedFrameSpec extends AnyFunSuite {
 
   test("range-partitioned composite handle: leading-column BETWEEN prunes partitions") {
     val df = (1L to 1000L).map(k => (k % 50, k, k * 2.0)).toDF("a", "b", "v")
-    val h = IndexedFrame.indexCompositeRangePartitioned(df, "a", "b", numPartitions = 16)
+    val h = IndexedFrame.indexCompositeNRangePartitioned(df, Seq("a", "b"), numPartitions = 16)
     val q = h.toDF.filter($"a".between(10L, 12L))
     val got = q.select($"b").as[Long].collect().toSet
     val expect = df.filter($"a".between(10L, 12L)).select($"b").as[Long].collect().toSet
@@ -1130,12 +1130,12 @@ class IndexedFrameSpec extends AnyFunSuite {
 
   test("composite handle save/load: reloaded handle serves point, lead-range and mixed pushdown") {
     val df = cust.withColumn("c_bucket", ($"c_custkey" % 100).cast("long"))
-    val h = IndexedFrame.indexComposite(df, "c_bucket", "c_custkey", ordered = true)
+    val h = IndexedFrame.indexCompositeN(df, Seq("c_bucket", "c_custkey"), ordered = true)
       .analyzeZones("c_acctbal")
     val path = java.nio.file.Files.createTempDirectory("frame_io_composite").toString
     IndexedFrame.save(h, path)
-    val loaded = IndexedFrame.loadComposite(spark, path)
-    assert(loaded.keyColA === "c_bucket" && loaded.keyColB === "c_custkey" && loaded.ordered)
+    val loaded = IndexedFrame.loadCompositeN(spark, path)
+    assert(loaded.keyCols === Seq("c_bucket", "c_custkey") && loaded.ordered)
     // zones persisted with the composite too — re-attached, no re-analyze
     val (zc, zs) = loaded.zoneSnapshot
     assert(zc === Set("c_acctbal") && zs("c_acctbal").nonEmpty)
@@ -1162,7 +1162,7 @@ class IndexedFrameSpec extends AnyFunSuite {
 
   test("generic composite (string, long): point, mixed, lead, and full lanes") {
     val df = (1L to 600L).map(k => (s"seg${k % 6}", k, k * 1.5)).toDF("seg", "k", "v")
-    val h = IndexedFrame.indexCompositeAny(df, "seg", "k", ordered = true)
+    val h = IndexedFrame.indexCompositeN(df, Seq("seg", "k"), ordered = true)
     // IN x IN -> cross-product multiget (2 x 4 = 8 probes, 3 hits)
     val pt = h.toDF.filter($"seg".isin("seg1", "seg3") && $"k".isin(1L, 3L, 7L, 599L))
     assert(pt.select($"k").as[Long].collect().toSet === Set(1L, 3L, 7L))
@@ -1179,7 +1179,7 @@ class IndexedFrameSpec extends AnyFunSuite {
     assert(h.lastScanKind === "range")
     // UNORDERED string-lead handle: ranges fall back to the full lane,
     // Spark re-applies the predicate above it
-    val hu = IndexedFrame.indexCompositeAny(df, "seg", "k")
+    val hu = IndexedFrame.indexCompositeN(df, Seq("seg", "k"))
     assert(hu.toDF.filter($"seg" >= "seg4").count() ===
       df.filter($"seg" >= "seg4").count())
     assert(hu.lastScanKind === "full")
@@ -1187,11 +1187,11 @@ class IndexedFrameSpec extends AnyFunSuite {
 
   test("generic composite save/load: a (string, long) handle round-trips with pushdown intact") {
     val df = (1L to 400L).map(k => (s"seg${k % 5}", k, k * 1.5)).toDF("seg", "k", "v")
-    val h = IndexedFrame.indexCompositeAny(df, "seg", "k", ordered = true)
+    val h = IndexedFrame.indexCompositeN(df, Seq("seg", "k"), ordered = true)
     val path = java.nio.file.Files.createTempDirectory("frame_io_composite_str").toString
     IndexedFrame.save(h, path)
-    val loaded = IndexedFrame.loadComposite(spark, path)
-    assert(loaded.keyColA === "seg" && loaded.keyColB === "k" && loaded.ordered)
+    val loaded = IndexedFrame.loadCompositeN(spark, path)
+    assert(loaded.keyCols === Seq("seg", "k") && loaded.ordered)
     assert(loaded.toDF.count() === 400)
     // point probe on the reloaded handle
     assert(loaded.toDF.filter($"seg" === "seg2" && $"k" === 42L).count() === 1)
@@ -1206,14 +1206,14 @@ class IndexedFrameSpec extends AnyFunSuite {
   test("generic composite: (uuid, long) and (string, string) pairs index and probe") {
     val df = (1L to 200L).map(k =>
       (f"00000000-0000-4000-8000-$k%012d", k, k * 2.0)).toDF("u", "k", "v")
-    val h = IndexedFrame.indexCompositeAny(df, "u", "k", uuidCols = Set("u"))
+    val h = IndexedFrame.indexCompositeN(df, Seq("u", "k"), uuidCols = Set("u"))
     val pt = h.toDF.filter(
       $"u" === "00000000-0000-4000-8000-000000000042" && $"k" === 42L)
     assert(pt.count() === 1)
     assert(h.lastScanKind === "point")
     // (string, string): mixed lane with a string second column
     val df2 = (1L to 300L).map(k => (s"g${k % 3}", f"n$k%04d", k)).toDF("g", "n", "k")
-    val h2 = IndexedFrame.indexCompositeAny(df2, "g", "n", ordered = true)
+    val h2 = IndexedFrame.indexCompositeN(df2, Seq("g", "n"), ordered = true)
     val mixed = h2.toDF.filter($"g" === "g1" && $"n".between("n0100", "n0200"))
     val expect = df2.filter($"g" === "g1" && $"n".between("n0100", "n0200"))
       .select($"k").as[Long].collect().toSet
@@ -1413,9 +1413,12 @@ class IndexedFrameSpec extends AnyFunSuite {
       assert(r === Seq(40L, 50L, 60L, 70L, 80L))
       assert(h.lastScanKind === "range")
       // pinned 1-prefix: the tenant's whole run
-      val r2 = hd.filter($"tenant" === "beta").count()
+      val r2 = hd.filter($"tenant" === "beta").select($"ts").collect().length
       assert(r2 === 300L)
       assert(h.lastScanKind === "range")
+      // ... and its count(*) from pruned radix descents, no row read
+      assert(hd.filter($"tenant" === "beta").count() === 300L)
+      assert(h.lastScanKind === "stats")
       // pinned 1-prefix + range on entity (next column)
       val r3 = hd.filter($"tenant" === "beta" && $"entity" > 18L)
         .select($"payload").as[String].collect().toSet
@@ -1480,8 +1483,8 @@ class IndexedFrameSpec extends AnyFunSuite {
       assert(t === Seq("x/1/1", "x/1/2", "x/1/3"))
       // single-key loader refuses the N-ary save with a clean message
       val e = intercept[IllegalArgumentException](
-        IndexedFrame.loadComposite(spark, ioDir))
-      assert(e.getMessage.contains("not a composite handle"))
+        IndexedFrame.load(spark, ioDir))
+      assert(e.getMessage.contains("use loadCompositeN"))
       loaded.idx.unpersist()
       // secondaries ride along: save a handle WITH an inverted index,
       // reload, and probe it without a rebuild

@@ -290,8 +290,8 @@ class IndexedJoinSpec extends AnyFunSuite {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     val left = (1L to 300L).map(k => (k % 10, k, s"L$k")).toDF("a", "b", "lv")
     val right = (1L to 240L).map(k => (k % 10, k, k * 2.0)).toDF("a2", "b2", "rv")
-    val h1 = IndexedFrame.indexComposite(left, "a", "b", numPartitions = 8)
-    val h2 = IndexedFrame.indexComposite(right, "a2", "b2", numPartitions = 8)
+    val h1 = IndexedFrame.indexCompositeN(left, Seq("a", "b"), numPartitions = 8)
+    val h2 = IndexedFrame.indexCompositeN(right, Seq("a2", "b2"), numPartitions = 8)
     val joined = h1.toDF.join(h2.toDF, $"a" === $"a2" && $"b" === $"b2")
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("IndexedZipJoin"), s"expected composite zip join:\n$plan")
@@ -323,8 +323,8 @@ class IndexedJoinSpec extends AnyFunSuite {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     val left = (1L to 300L).map(k => (k % 10, k, k * 1.5)).toDF("a", "b", "lv")
     val right = (1L to 240L).map(k => (k % 10, k, k * 2.0)).toDF("a2", "b2", "rv")
-    val h1 = IndexedFrame.indexComposite(left, "a", "b", numPartitions = 8)
-    val h2 = IndexedFrame.indexComposite(right, "a2", "b2", numPartitions = 8)
+    val h1 = IndexedFrame.indexCompositeN(left, Seq("a", "b"), numPartitions = 8)
+    val h2 = IndexedFrame.indexCompositeN(right, Seq("a2", "b2"), numPartitions = 8)
     val agg = h1.toDF.join(h2.toDF, $"a" === $"a2" && $"b" === $"b2")
       .groupBy($"a", $"b")
       .agg(org.apache.spark.sql.functions.sum($"rv").as("t"))
@@ -349,8 +349,8 @@ class IndexedJoinSpec extends AnyFunSuite {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     val left = (1L to 300L).map(k => (s"g${k % 7}", k, s"L$k")).toDF("g", "b", "lv")
     val right = (1L to 250L).map(k => (s"g${k % 7}", k, k * 2.0)).toDF("g2", "b2", "rv")
-    val h1 = IndexedFrame.indexCompositeAny(left, "g", "b", numPartitions = 8)
-    val h2 = IndexedFrame.indexCompositeAny(right, "g2", "b2", numPartitions = 8)
+    val h1 = IndexedFrame.indexCompositeN(left, Seq("g", "b"), numPartitions = 8)
+    val h2 = IndexedFrame.indexCompositeN(right, Seq("g2", "b2"), numPartitions = 8)
     val joined = h1.toDF.join(h2.toDF, $"g" === $"g2" && $"b" === $"b2")
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("IndexedZipJoin"), s"expected string-lead composite zip join:\n$plan")
@@ -361,9 +361,9 @@ class IndexedJoinSpec extends AnyFunSuite {
     assert(joined.count() === 250)
     // a string-lead composite never zip-joins an integral-lead one
     // (key type tags differ even at equal arity)
-    val intLead = IndexedFrame.indexComposite(
+    val intLead = IndexedFrame.indexCompositeN(
       (1L to 100L).map(k => (k % 7, k, k * 1.0)).toDF("a3", "b3", "v3"),
-      "a3", "b3", numPartitions = 8)
+      Seq("a3", "b3"), numPartitions = 8)
     val mixed = h1.toDF.join(intLead.toDF, $"b" === $"b3" && $"g" === $"a3".cast("string"))
     assert(!mixed.queryExecution.executedPlan.toString.contains("IndexedZipJoin"))
   }
@@ -373,8 +373,8 @@ class IndexedJoinSpec extends AnyFunSuite {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     val left = (1L to 300L).map(k => (k % 10, k, k * 1.5)).toDF("a", "b", "lv")
     val right = (1L to 240L).map(k => (k % 10, k, k * 2.0)).toDF("a2", "b2", "rv")
-    val h1 = IndexedFrame.indexComposite(left, "a", "b", numPartitions = 8)
-    val h2 = IndexedFrame.indexComposite(right, "a2", "b2", numPartitions = 8)
+    val h1 = IndexedFrame.indexCompositeN(left, Seq("a", "b"), numPartitions = 8)
+    val h2 = IndexedFrame.indexCompositeN(right, Seq("a2", "b2"), numPartitions = 8)
     val agg = h1.toDF.join(h2.toDF, $"a" === $"a2" && $"b" === $"b2")
       .groupBy($"a")
       .agg(org.apache.spark.sql.functions.sum($"rv").as("t"))
@@ -623,14 +623,14 @@ class IndexedJoinSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.row_number
     val versions = (for (u <- 1L to 30L; v <- 1L to 20L)
       yield (u, v * 10L, u * 1000 + v)).toDF("vu", "vts", "value")
-    val h = IndexedFrame.indexCompositeRangePartitioned(versions, "vu", "vts", 8)
+    val h = IndexedFrame.indexCompositeNRangePartitioned(versions, Seq("vu", "vts"), 8)
     // probes: exact hits, between versions, before-first (no match),
     // after-last (latest), unknown entity, dup probes, null entity
     val probe = spark.createDataFrame(Seq[(java.lang.Long, java.lang.Long, Long)](
       (1L, 100L, 1), (1L, 105L, 2), (2L, 5L, 3), (3L, 9999L, 4),
       (999L, 50L, 5), (1L, 105L, 6), (null, 50L, 7), (4L, 10L, 8)))
       .toDF("pu", "pt", "tag")
-    val got = h.asOfJoinFrame(probe, "pu", "pt")
+    val got = h.asOfJoinFrame(probe, Seq("pu"), "pt")
     assert(got.columns.toSeq === Seq("pu", "pt", "tag", "vu", "vts", "value"))
     val w = Window.partitionBy($"tag").orderBy($"vts".desc)
     val expect = probe.join(versions, $"pu" === $"vu" && $"vts" <= $"pt")
@@ -641,7 +641,7 @@ class IndexedJoinSpec extends AnyFunSuite {
     // probes with no floor (before-first, unknown entity, null) drop
     assert(got.count() === 5)
     // keepMisses = LEFT-OUTER: every probe kept, versions null-extend
-    val outer = h.asOfJoinFrame(probe, "pu", "pt", keepMisses = true)
+    val outer = h.asOfJoinFrame(probe, Seq("pu"), "pt", keepMisses = true)
     assert(outer.count() === 8)
     val wE = Window.partitionBy($"tag").orderBy($"vts".desc_nulls_last)
     val expectOuter = probe.join(versions, $"pu" === $"vu" && $"vts" <= $"pt", "left")
@@ -728,7 +728,7 @@ class IndexedJoinSpec extends AnyFunSuite {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     val corpus = (for (a <- 1L to 40L; b <- 1L to 25L)
       yield (a, b, a * 100 + b)).toDF("a", "b", "v")
-    val h = IndexedFrame.indexComposite(corpus, "a", "b", numPartitions = 8)
+    val h = IndexedFrame.indexCompositeN(corpus, Seq("a", "b"), numPartitions = 8)
     val hd = h.toDF
     def probe() = spark.range(0, 60).select(($"id" % 45 + 1).as("pa"),
       ($"id" % 30 + 1).as("pb"), $"id".as("tag"))
@@ -747,7 +747,7 @@ class IndexedJoinSpec extends AnyFunSuite {
       ep.collect().map(_.toString).sorted.toSeq)
     // on a RANGE-partitioned composite the prefix join claims: each
     // probe fetches the entity's whole tuple run
-    val hr = IndexedFrame.indexCompositeRangePartitioned(corpus, "a", "b", 8)
+    val hr = IndexedFrame.indexCompositeNRangePartitioned(corpus, Seq("a", "b"), 8)
     val hrd = hr.toDF
     val qr = { val p = probe(); hrd.join(p, hrd("a") === p("pa")) }
     assert(qr.queryExecution.executedPlan.toString.contains("LkPrefixInner"),

@@ -19,7 +19,7 @@ class IndexedWindowSpec extends AnyFunSuite {
     IndexedWindow.enable(spark)
     val df = (0L until 1000L).map(k => (k / 40, (k * 7) % 40, s"v$k"))
       .toDF("a", "b", "v").distinct()
-    (df, IndexedFrame.indexCompositeRangePartitioned(df, "a", "b", 8))
+    (df, IndexedFrame.indexCompositeNRangePartitioned(df, Seq("a", "b"), 8))
   }
 
   private def expected(df: org.apache.spark.sql.DataFrame, n: Int) =
@@ -96,7 +96,7 @@ class IndexedWindowSpec extends AnyFunSuite {
     assert(qc.as[(Long, Long, String, Int)].collect().sortBy(t => (t._1, t._2))
       === expected(df, 3).filter(_._2 > 5L))
     // hash composite: no contiguous run structure
-    val hh = IndexedFrame.indexCompositeAny(df, "a", "b")
+    val hh = IndexedFrame.indexCompositeN(df, Seq("a", "b"))
     val qh = hh.toDF.withColumn("rn",
         row_number().over(Window.partitionBy($"a").orderBy($"b")))
       .filter($"rn" <= 3)

@@ -196,7 +196,7 @@ class PointPathSpec extends AnyFunSuite {
 
   test("2-column and N-column composite point lanes") {
     val base = (1L to 400L).map(i => (i % 20, i, i % 3, s"v$i")).toDF("a", "b", "c", "v")
-    val h2 = IndexedFrame.indexComposite(base, "a", "b")
+    val h2 = IndexedFrame.indexCompositeN(base, Seq("a", "b"))
     val f2 = (d: DataFrame) => d.filter($"a" === 7L && $"b".isin(7L, 27L, 28L, 9999L))
     val got2 = f2(h2.toDF)
     assert(servedByPoint(got2))

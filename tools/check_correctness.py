@@ -3,8 +3,13 @@
 against DuckDB oracles on the same parquet tables and diff.
 
 Usage: python3 tools/check_correctness.py <sfDir> <verifyOutDir>
+
+Every PASS/ROWS line ends with `sha1=<hex>`: the sha1 of the lane's
+canonical sorted rows (see canon()), so two runs' outputs — e.g. before
+and after a change — compare lane by lane with a plain `diff`.
 """
 import glob
+import hashlib
 import json
 import math
 import sys
@@ -38,6 +43,14 @@ def canon(rows, cols):
     return out, [cols[i] for i in order]
 
 
+def digest(c_rows, c_cols):
+    """sha1 of a result in its canonical form (what canon() returns)."""
+    h = hashlib.sha1("\x02".join(c_cols).encode())
+    for r in c_rows:
+        h.update(b"\n" + r.encode())
+    return h.hexdigest()
+
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
@@ -66,23 +79,27 @@ def main(sf_dir, out_dir):
                 f"rows differ: spark={len(g_rows)} oracle={len(w_rows)}\n"
                 f"    spark-only: {diff_g}\n    oracle-only: {diff_w}"))
         else:
-            passes.append((name, len(g_rows)))
+            passes.append((name, len(g_rows), digest(g_rows, g_cols)))
     # queries without oracles: rows-only check
     for d in sorted(glob.glob(f"{out_dir}/*/")):
         name = d.rstrip("/").split("/")[-1]
         if name not in oracle:
             files = glob.glob(f"{d}/*.parquet")
-            n = con.sql(f"SELECT count(*) FROM '{d}/*.parquet'").fetchone()[0] if files else -1
-            rows_only.append((name, n))
-    for name, n in passes:
-        print(f"PASS  {name} ({n} rows)")
-    for name, n in rows_only:
+            if files:
+                got = con.sql(f"SELECT * FROM '{d}/*.parquet'")
+                raw = got.fetchall()
+                rows_only.append((name, len(raw), digest(*canon(raw, got.columns))))
+            else:
+                rows_only.append((name, -1, "-"))
+    for name, n, sha in passes:
+        print(f"PASS  {name} ({n} rows) sha1={sha}")
+    for name, n, sha in rows_only:
         status = "ROWS" if n > 0 else "EMPTY(!)"
-        print(f"{status}  {name} ({n} rows)")
+        print(f"{status}  {name} ({n} rows) sha1={sha}")
     for name, msg in failures:
         print(f"FAIL  {name}: {msg}")
     print(f"\n{len(passes)} pass, {len(rows_only)} rows-only, {len(failures)} fail")
-    sys.exit(1 if failures or any(n <= 0 for _, n in rows_only) else 0)
+    sys.exit(1 if failures or any(n <= 0 for _, n, _ in rows_only) else 0)
 
 
 if __name__ == "__main__":
